@@ -21,9 +21,19 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# single-JVM local mode: heap must scale with concurrent task buffers or
-# the high-parallelism run spills/GCs (same tuning as tools/bench_scaling)
-os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
+
+
+def default_driver_mem() -> str:
+    """Half of physical RAM (MemTotal): single-JVM local mode wants a
+    big heap for concurrent task buffers, and the other half is left to
+    the Python workers and the OS."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return f"{max(1, kb // (2 * 1024 * 1024))}g"
+
+
+os.environ.setdefault("SPARK_DRIVER_MEM", default_driver_mem())
 #: synthetic extraction corpus size per unit sf (sf0.1 -> 30k pages)
 PAGES_PER_SF = 300_000
 CACHE_ROOT = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/pss_bench_cache")
@@ -91,7 +101,7 @@ def main() -> None:
     from page_segmentation_spark.queries import QUERIES, pages_from_documents
     from page_segmentation_spark.session import get_spark
 
-    # 4x shuffle partitions smooths tail stragglers (same as bench_scaling)
+    # 4x shuffle partitions smooths tail stragglers
     spark = get_spark(
         app="pss-bench", master=master, shuffle_partitions=4 * CPUS
     )
@@ -125,26 +135,6 @@ def main() -> None:
     extras["extract_synthetic_runs"] = [round(m, 3) for m in measured]
     extras["docs_per_sec"] = round(n_pages / timings["extract_synthetic"], 1)
     extras["n_pages"] = n_pages
-
-    # q1b: the ZERO-SHUFFLE fused plan over the SAME corpus (alternate
-    # scale path, plans/extract_fused.py — one mapInArrow stage, no
-    # Exchange; byte-identical output, pinned by test_extract_fused and
-    # the extract_fused_flagship driver row).  Same warm-up+median
-    # protocol as the declarative flagship.
-    from page_segmentation_spark.plans.extract_fused import extract_fused
-
-    for _ in range(2):
-        materialize(extract_fused(pages))
-    fused_runs = []
-    for _ in range(5):
-        t0 = time.perf_counter()
-        materialize(extract_fused(pages))
-        fused_runs.append(time.perf_counter() - t0)
-    timings["extract_fused"] = round(sorted(fused_runs)[2], 3)
-    extras["extract_fused_runs"] = [round(m, 3) for m in fused_runs]
-    extras["fused_docs_per_sec"] = round(
-        n_pages / timings["extract_fused"], 1
-    )
 
     # q2-q6: the non-flagship queries get the same treatment at smaller
     # scale — 1 warm-up run excluded, median of 3 measured (they run in
@@ -190,13 +180,13 @@ def main() -> None:
     )
     # the COMPOSED corpus-construction funnel (extract -> C4 -> Gopher ->
     # langid/tokens/fingerprint -> exact dedup) over the same synthetic
-    # corpus, fused extraction: one Exchange total (the dedup key)
+    # corpus: one Exchange total (the dedup key)
     from page_segmentation_spark.plans.training_corpus import (
         build_training_corpus,
     )
 
     timings["corpus_build_fused"] = timed_median(
-        lambda: build_training_corpus(pages, fused=True)
+        lambda: build_training_corpus(pages)
     )
     extras["corpus_build_docs_per_sec"] = round(
         n_pages / timings["corpus_build_fused"], 1

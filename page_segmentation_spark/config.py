@@ -26,7 +26,7 @@ MAX_NODES_PER_DOC = 50_000
 #: Heading block tags — used by the trailing-heading span trim (a heading
 #: announces FOLLOWING content; one sitting at the very end of a span has
 #: its body outside the span, i.e. it belongs to the next/boilerplate
-#: section).  Shared by operators/spans.py and oracle.cut_spans (mirror).
+#: section).  Read by oracle.cut_spans and the scorer's heading feature.
 HEADING_TAGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 
 #: Target of the per-document normalization (analog of
@@ -39,19 +39,17 @@ DEFAULT_TARGET_BLOCK_CHARS = 80
 class ExtractSettings:
     """Job settings for the extraction pipeline (PredictSettings analog).
 
-    ``post_process`` is an ordered list of named DataFrame->DataFrame
-    stages resolved through
-    :data:`page_segmentation_spark.operators.vote.POSTPROCESSORS`
-    (the analog of the reference postprocessor registry,
-    reference lib/postprocess.py:45-64).
+    ``post_process`` is an ordered list of named stages resolved through
+    :data:`page_segmentation_spark.oracle.POSTPROCESSORS` (the analog of
+    the reference postprocessor registry, reference
+    lib/postprocess.py:45-64); an unknown name raises ValueError.
     """
 
     #: minimum number of *originally main* nodes a span must contain to be
     #: kept — ``px_threshold`` analog (reference lib/xycut.py:148,170).
-    #: Read by BOTH the Spark span formers and oracle.cut_spans (mirror
-    #: sites; byte-identity).  The gap width (``split_size`` analog,
-    #: reference lib/xycut.py:166) is NOT a setting: both sides derive it
-    #: from char_med via :func:`derive_thresholds`.
+    #: The gap width (``split_size`` analog, reference lib/xycut.py:166)
+    #: is NOT a setting: it derives from char_med via
+    #: :func:`derive_thresholds`.
     min_main_nodes: int = 1
     #: dilation radius in nodes (reference lib/pc_segmentation.py:63-67 is
     #: a 3x3 kernel == radius 1).
@@ -65,16 +63,13 @@ class ExtractSettings:
     #: named scorer architecture ('base', 'wide_context', ...) resolved
     #: through functions/architectures.ARCHITECTURES — the analog of the
     #: reference's architecture enum (reference lib/architecture.py:5-64).
-    #: Read by BOTH plans/extract and oracle.extract_document (mirror).
     architecture: str = "base"
-    #: separator used when concatenating node texts (must match oracle).
+    #: separator used when concatenating node texts.
     separator: str = "\n\n"
     n_classes: int = N_CLASSES
     max_nodes_per_doc: int = MAX_NODES_PER_DOC
     #: user password for encrypted PDFs (empty = the owner-locked crawl
     #: shape; a wrong password degrades to visible ops, never garbles).
-    #: Read by BOTH plans/extract's parse stage and
-    #: oracle.extract_document (mirror sites; byte-identity).
     pdf_password: str = ""
 
 

@@ -6,11 +6,8 @@ lib/model.py).  This engine's analog: an architecture is a (window radii,
 length cap, weights, bias) bundle — the multi-scale context windows ARE
 the conv/pool pyramid of the 1-D model, so varying their radii is the
 honest equivalent of varying encoder depth.  Dispatch mirrors the
-span-former registry (operators/spans.SPAN_FORMERS): look up by name from
+span-former registry (oracle.SPAN_CUTTERS): look up by name from
 :class:`~page_segmentation_spark.config.ExtractSettings`.
-
-Every architecture is shared by BOTH sides (Spark featurize/score and the
-single-node oracle) — the byte-identity invariant is per-architecture.
 """
 
 from __future__ import annotations
@@ -25,8 +22,8 @@ from page_segmentation_spark.functions import scorer_core as sc
 @dataclass(frozen=True)
 class Arch:
     """One named scorer configuration.  Weights/bias rows follow
-    scorer_core.FEATURE_NAMES order; radii drive the window frames in
-    functions/features.py and the oracle's _window_sums identically."""
+    scorer_core.FEATURE_NAMES order; radii set the context windows of
+    oracle.node_features."""
 
     name: str
     weights: Dict[int, List[float]]
@@ -135,8 +132,8 @@ _TRAINED_V1_BIAS: Dict[int, float] = {0: 5.711999, 1: -0.210790, 2: -5.501209}
 
 #: the trained architecture — the register_architecture path exercised
 #: end-to-end: plans/train.py fit these weights on construction GT; the
-#: deterministic scorer then folds them as plan literals exactly like
-#: the hand-set heads (one Exchange, zero Python eval — plan-audited).
+#: deterministic scorer then folds them exactly like the hand-set
+#: heads.
 TRAINED_V1 = Arch(
     name="trained_v1",
     weights=_TRAINED_V1_WEIGHTS,

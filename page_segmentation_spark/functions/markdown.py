@@ -1,24 +1,14 @@
-"""Markdown rendering of extracted main content — shared mirror site.
+"""Markdown rendering of extracted main content.
 
 Training pipelines increasingly keep heading/list structure in the
 extracted text (markdown-ish output is what the popular extractors
 offer as their structured mode); the engine's node records already
 carry the block tag, so markdown is a pure FORMATTING layer over the
 same selected nodes as plain extraction — same classifier, same spans,
-same bridge guard, different join.
-
-``MD_PREFIXES`` is the single source of truth consumed by BOTH sides
-(CLAUDE.md invariant 1 discipline): the oracle's
-``extract_document_markdown`` prefixes via :func:`md_line`, and the
-Spark plan's ``extract_markdown`` compiles the SAME dict into a
-Catalyst when-chain via :func:`md_prefix_expr` — change the mapping in
-one place only.
+same bridge guard, different join (``oracle.render``).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 #: block tag -> markdown line prefix; tags not listed render bare.
 MD_PREFIXES = {
@@ -32,14 +22,5 @@ MD_PREFIXES = {
 
 
 def md_line(tag: str, text: str) -> str:
-    """One markdown line (python side — oracle twin)."""
+    """One markdown line: the tag's prefix, then the node text."""
     return MD_PREFIXES.get(tag, "") + text
-
-
-def md_prefix_expr(tag: Column) -> Column:
-    """The SAME mapping as a Catalyst expression (Spark side twin):
-    a when-chain compiled from MD_PREFIXES, '' for unlisted tags."""
-    expr = F.lit("")
-    for t, p in MD_PREFIXES.items():
-        expr = F.when(tag == t, F.lit(p)).otherwise(expr)
-    return expr

@@ -8,13 +8,12 @@ three scales (local ±2, section ±8, whole document) — the skip-concat
 becomes a plain column concat of per-node and windowed features, and the
 1x1-conv head becomes a fixed linear scorer.
 
-Determinism contract (byte-identical Spark vs oracle):
+Determinism contract (byte-identical output under any partitioning):
   * every windowed aggregate is an INTEGER sum (exact under any order);
   * every feature is one double division of two exactly-representable
     numbers;
   * the logit is a sequential fold ``acc + f[i]*w[i]`` in fixed feature
-    order starting from the bias — IEEE-754 doubles evaluate identically
-    in CPython and in Spark's Catalyst `aggregate` fold;
+    order starting from the bias;
   * argmax breaks ties toward the LOWEST class id, matching
     ``np.argmax(bins[1:])`` first-max semantics
     (reference lib/postprocess.py:23).
@@ -145,11 +144,9 @@ def build_features(
     bwd_link: int = 0,
     arch=None,
 ) -> List[float]:
-    """Assemble the feature vector for one node (oracle-side kernel).
-
-    The Spark side builds the identical array with column expressions in
-    :mod:`page_segmentation_spark.functions.features`; keep both in sync.
-    ``arch`` (an :class:`~page_segmentation_spark.functions.architectures
+    """Assemble the feature vector for one node
+    (:func:`page_segmentation_spark.oracle.node_features` supplies the
+    window sums).  ``arch`` (an :class:`~page_segmentation_spark.functions.architectures
     .Arch`) sets the window radii whose (2r+1) widths normalize the
     context sums, and the length cap; None = the base architecture."""
     loc_w, sec_w, cap = (
@@ -188,8 +185,7 @@ def build_features(
 
 
 def logit(features: Sequence[float], cls: int, arch=None) -> float:
-    """Sequential fold, fixed order — bit-identical to the Spark
-    ``aggregate(zip_with(...), bias, (acc,x) -> acc + x)`` expression."""
+    """Sequential fold, fixed order, starting from the bias."""
     acc = BIAS[cls] if arch is None else arch.bias[cls]
     w = WEIGHTS[cls] if arch is None else arch.weights[cls]
     for i in range(N_FEATURES):
@@ -206,7 +202,7 @@ def classify(features: Sequence[float], arch=None) -> int:
     (three accumulators advanced in lockstep) — each accumulator sees
     exactly the :func:`logit` sequential order, so every logit value is
     bit-identical to the unfused form; the fusion only removes the
-    3x feature re-iteration and call dispatch (this is the fused-plan
+    3x feature re-iteration and call dispatch (this is the extraction
     hot loop)."""
     c0, c1, c2 = CLASS_ORDER
     if arch is None:

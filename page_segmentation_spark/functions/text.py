@@ -810,8 +810,8 @@ def c4_keep_line(
     # and it stops after the min_words-th word.  Counts are identical:
     # the string has >= m maximal non-space runs iff it matches
     # ^ *(?:[^ ]+ +){m-1}[^ ].  The DuckDB twin (queries._c4_keep_sql)
-    # keeps the regexp_extract_all spelling — values match, verified by
-    # tools/verify_tail_variants.py + the driver gate.
+    # keeps the regexp_extract_all spelling — values match, pinned by
+    # tests/test_r06_optimizations.py + the driver gate.
     if min_words >= 1:
         keep = keep & t.rlike(r"^ *(?:[^ ]+ +){%d}[^ ]" % (min_words - 1))
     low = F.lower(t)
@@ -907,7 +907,7 @@ def gopher_quality(
     # partitions the string into its non-\s segments (boundary empties
     # contribute 0), so the length sum equals the replaced length
     # (r6 interleaved A/B: gopher stage ~2.5 -> ~2.0s at 30k pages;
-    # value identity pinned by tools/verify_tail_variants.py).
+    # value identity pinned by tests/test_r06_optimizations.py).
     non_ws = F.aggregate(
         words, F.lit(0), lambda acc, w: acc + F.length(w)
     ).cast("double")

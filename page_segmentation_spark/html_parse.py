@@ -3,15 +3,11 @@
 This module is the analog of the reference's image decode + normalization
 front-end (``DatasetLoader.load_images``, reference lib/dataset.py:160-191):
 it turns one raw page byte-stream into the "pixel grid in long form" — an
-ordered list of text-block node records.  The *same* function is called by
-
-  * the single-node oracle (:mod:`page_segmentation_spark.oracle`), and
-  * the Spark ``mapInPandas`` parse stage
-    (:mod:`page_segmentation_spark.sources.parse`),
-
-so extracted text is byte-identical by construction.  Pure stdlib
-(``html.parser``) — no lxml/bs4 in this environment — and fully
-deterministic: no dict-order dependence, no randomness.
+ordered list of text-block node records, for the single-document chain
+in :mod:`page_segmentation_spark.oracle` (which the Spark plans run per
+page).  Pure stdlib (``html.parser``) — no lxml/bs4 in this
+environment — and fully deterministic: no dict-order dependence, no
+randomness.
 
 Node record fields (FIXTURES.md §2):
     node_idx  — document-order position (0-based)

@@ -1,23 +1,13 @@
-"""Span formation: dilate -> gap merge -> islands -> trim (W1-W4, P15).
+"""XY-cut span formation over a node-ordered table (W3).
 
-Re-expression of the reference's segmentation stage
-(``find_segments``, lib/pc_segmentation.py:24-60):
-
-  * dilation (lib/pc_segmentation.py:63-67)  -> windowed max over ±radius;
-  * gap filter  (``split_size``, lib/xycut.py:166) -> interior zero-runs
-    shorter than split_size are merged into the surrounding segment
-    (sentinel border gaps are never merged, lib/xycut.py:165);
-  * segment filter (``px_threshold``, lib/xycut.py:148,170) -> spans must
-    contain >= min_main raw main nodes;
-  * spans are trimmed to raw-main extents (segments cover exactly the
-    content extent between gaps) and emitted in document order
-    (order preservation, lib/pc_segmentation.py:114-116).
-
-Thresholds derive from the per-doc normalization stat (W4,
-lib/pc_segmentation.py:37-42) via integer-only logic in
+Re-expression of the reference's recursive XY-cut
+(``recursive_cut``/``_get_segments``, lib/xycut.py:127-173) as
+window/column math keyed by ``url``.  The extraction plan cuts spans per
+document in Python (:data:`page_segmentation_spark.oracle.SPAN_CUTTERS`);
+this operator is the columnar form the ``w3_xycut_segments`` catalog row
+runs over the events table.  Thresholds derive from the per-doc
+normalization stat (W4, lib/pc_segmentation.py:37-42) as in
 :func:`page_segmentation_spark.config.derive_thresholds`.
-
-Everything is window/column math over the existing ``url`` clustering.
 """
 
 from __future__ import annotations
@@ -25,229 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from page_segmentation_spark.config import (
-    CLS_MAIN,
-    HEADING_TAGS,
-    ExtractSettings,
-)
+from page_segmentation_spark.config import CLS_MAIN, ExtractSettings
 from page_segmentation_spark.operators.islands import with_islands
-
-
-def with_spans(nodes: DataFrame, settings: ExtractSettings) -> DataFrame:
-    """Input: node table with pred, is_fg, char_med, n_nodes.
-    Output: adds ``selected`` (node contributes to extraction),
-    ``span_start``, ``span_end``, ``span_main`` (null outside spans).
-
-    Single-sort formulation.  The island form re-partitioned windows by
-    (url, zisl) / (url, sisl), costing a fresh local sort of the full
-    node table each (plus re-sorts back to node order) — ~half the
-    declarative plan's post-exchange wall time.  Zero-runs and merged
-    runs are CONTIGUOUS in node order, so every per-run statistic here
-    is derived from boundary positions and running prefix sums over the
-    ONE (url, node_idx) ordering the feature stage already established:
-
-      * gap merge: a zero-run's extent is (previous dil=1 index,
-        next dil=1 index) — interior and shorter than split_size iff
-        both neighbors exist and their distance is small (exactly the
-        z_min/z_max/z_len test);
-      * span stats: each merged-run's first main node and last
-        non-heading main node are marked locally (a main is its run's
-        first iff the running main-count just before it equals the
-        count at the run's opening gap), then propagated to every
-        member with running max/min; span_main is the difference of
-        running main-counts at the propagated end marker vs the run's
-        opening gap.
-
-    Values are pinned byte-identical by the goldens, the oracle parity
-    tests, and the per-former value-identity suite."""
-    w = Window.partitionBy("url").orderBy("node_idx")
-    run_pre = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    run_fwd = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    run_all = w.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-
-    # W4 threshold derivation (mirror config.derive_thresholds)
-    split_size = F.when(F.col("char_med") >= 40.0, F.lit(2)).otherwise(F.lit(3))
-    min_main = F.lit(settings.min_main_nodes)
-
-    ind = (
-        (F.col("pred") == F.lit(CLS_MAIN)) & F.col("is_fg")
-    ).cast("int")
-    df = nodes.withColumn("ind", ind)
-    is_heading = F.col("tag").isin(*sorted(HEADING_TAGS))
-    ch = F.when(
-        (F.col("ind") == 1) & ~is_heading, F.lit(1)
-    ).otherwise(F.lit(0))
-
-    # layer 1: P15 dilation (windowed max, radius r) + running counts of
-    # main and non-heading-main nodes (+ the partition total for the
-    # last run's closing boundary) — one Window node on the main sort
-    r = settings.dilate_radius
-    df = df.select(
-        "*",
-        F.max("ind").over(w.rowsBetween(-r, r)).alias("dil"),
-        F.sum("ind").over(run_pre).alias("__sp_rm"),
-        F.sum(ch).over(run_pre).alias("__sp_rc"),
-        F.sum(ch).over(run_all).alias("__sp_tc"),
-    )
-
-    # layer 2: zero-run boundaries -> gap merge (interior zero-runs
-    # shorter than split_size flip to 1; border runs never merge — no
-    # dil=1 neighbor on that side)
-    one_idx = F.when(F.col("dil") == 1, F.col("node_idx"))
-    df = df.select(
-        "*",
-        F.max(one_idx).over(run_pre).alias("__sp_p1"),
-        F.min(one_idx).over(run_fwd).alias("__sp_n1"),
-    )
-    df = df.select(
-        "*",
-        F.when(
-            (F.col("dil") == 0)
-            & F.col("__sp_p1").isNotNull()
-            & F.col("__sp_n1").isNotNull()
-            & ((F.col("__sp_n1") - F.col("__sp_p1") - 1) < split_size),
-            F.lit(1),
-        )
-        .otherwise(F.col("dil"))
-        .alias("merged"),
-    )
-
-    # layer 3: merged-run boundaries, carrying the running counts at the
-    # opening/closing gap rows (gap rows contribute 0 to both counts, so
-    # their running values equal the prefix through the adjacent run end)
-    gap_struct = F.when(
-        F.col("merged") == 0,
-        F.struct(
-            F.col("node_idx").alias("i"),
-            F.col("__sp_rm").alias("rm"),
-            F.col("__sp_rc").alias("rc"),
-        ),
-    )
-    df = df.select(
-        "*",
-        F.max(gap_struct).over(run_pre).alias("__sp_p0"),
-        F.min(gap_struct).over(run_fwd).alias("__sp_n0"),
-    )
-
-    # run-local markers: the run's FIRST main node (no main between the
-    # opening gap and it) and LAST non-heading main (no later one before
-    # the closing gap).  The trailing-heading trim lives here: a span
-    # whose main nodes are all headings gets no end marker in its run,
-    # span_end stays null, and keep is false (see the island-form notes).
-    first_main = (F.col("ind") == 1) & (
-        (F.col("__sp_rm") - 1)
-        == F.coalesce(F.col("__sp_p0.rm"), F.lit(0).cast("long"))
-    )
-    last_ch = (ch == 1) & (
-        F.col("__sp_rc")
-        == F.coalesce(F.col("__sp_n0.rc"), F.col("__sp_tc"))
-    )
-
-    # layer 4: propagate the markers to every run member
-    end_struct = F.when(
-        last_ch,
-        F.struct(
-            F.col("node_idx").alias("i"), F.col("__sp_rm").alias("rm")
-        ),
-    )
-    df = df.select(
-        "*",
-        F.max(F.when(first_main, F.col("node_idx")))
-        .over(run_pre)
-        .alias("__sp_fmb"),
-        F.min(F.when(first_main, F.col("node_idx")))
-        .over(run_fwd)
-        .alias("__sp_fmf"),
-        F.max(end_struct).over(run_pre).alias("__sp_lcb"),
-        F.min(end_struct).over(run_fwd).alias("__sp_lcf"),
-    )
-
-    in_span = F.col("merged") == 1
-    run_lo = F.col("__sp_p0.i")  # null -> run starts the partition
-    run_hi = F.col("__sp_n0.i")  # null -> run ends the partition
-    # every merged run holds >= 1 main (dilation of the indicator), so
-    # exactly one first-main marker exists per run: the backward one if
-    # it is at or before this row, else the forward one
-    span_start = F.when(
-        in_span,
-        F.when(
-            F.col("__sp_fmb").isNotNull()
-            & (run_lo.isNull() | (F.col("__sp_fmb") > run_lo)),
-            F.col("__sp_fmb"),
-        ).otherwise(F.col("__sp_fmf")),
-    )
-    lcf_in = F.col("__sp_lcf").isNotNull() & (
-        run_hi.isNull() | (F.col("__sp_lcf.i") < run_hi)
-    )
-    lcb_in = F.col("__sp_lcb").isNotNull() & (
-        run_lo.isNull() | (F.col("__sp_lcb.i") > run_lo)
-    )
-    end_s = F.when(lcf_in, F.col("__sp_lcf")).otherwise(
-        F.when(lcb_in, F.col("__sp_lcb"))
-    )
-    span_end = F.when(in_span, end_s.getField("i"))
-    span_main = F.when(
-        in_span,
-        F.coalesce(
-            end_s.getField("rm")
-            - F.coalesce(F.col("__sp_p0.rm"), F.lit(0).cast("long")),
-            F.lit(0).cast("long"),
-        ),
-    )
-    df = df.select(
-        "*",
-        span_start.alias("span_start"),
-        span_end.alias("span_end"),
-        span_main.alias("span_main"),
-    )
-    keep = F.coalesce(
-        in_span
-        & (F.col("span_main") >= min_main)
-        & F.col("span_start").isNotNull()
-        & F.col("span_end").isNotNull()
-        & F.col("node_idx").between(F.col("span_start"), F.col("span_end")),
-        F.lit(False),
-    )
-    return (
-        df.withColumn("in_kept_span", keep)
-        .withColumn("selected", keep & F.col("is_fg") & _not_pure_link())
-        .drop(
-            "merged",
-            "dil",
-            "ind",
-            "__sp_rm",
-            "__sp_rc",
-            "__sp_tc",
-            "__sp_p1",
-            "__sp_n1",
-            "__sp_p0",
-            "__sp_n0",
-            "__sp_fmb",
-            "__sp_fmf",
-            "__sp_lcb",
-            "__sp_lcf",
-        )
-    )
-
-
-def _not_pure_link():
-    """Extraction guard (mirror: oracle.extract_document): a node inside a
-    span is emitted unless it is non-main AND (entirely link text OR in a
-    boilerplate container) — the gap-merge bridges short interior runs
-    for connectivity, and a bridged fully-link node (inline ad /
-    related-links block) or a bridged boiler-container node (template
-    promo, share bar: html_parse class hints resolve those to 'aside')
-    is not content.  Nodes the vote kept as main are always emitted."""
-    from page_segmentation_spark.functions.scorer_core import (
-        BOILER_CONTAINERS,
-    )
-
-    return (F.col("ind") == 1) | (
-        (F.col("n_link_chars") < F.col("n_chars"))
-        & ~F.col("container").isin(*sorted(BOILER_CONTAINERS))
-    )
 
 
 def xycut_spans(nodes: DataFrame, settings: ExtractSettings) -> DataFrame:
@@ -264,7 +33,10 @@ def xycut_spans(nodes: DataFrame, settings: ExtractSettings) -> DataFrame:
         segment with the same thresholds finds no further kept gaps —
         the reference's fixed point is reached immediately.
 
-    Produces the same output columns as :func:`with_spans`.
+    Input: a node table with ``pred``, ``is_fg`` and ``char_med``.
+    Adds ``in_kept_span`` and, on segment rows, ``span_start``,
+    ``span_end`` and ``span_main``.  Single-document twin:
+    :func:`page_segmentation_spark.oracle.cut_spans_xycut`.
     """
     split_size = F.when(F.col("char_med") >= 40.0, F.lit(2)).otherwise(F.lit(3))
     px_threshold = F.lit(settings.min_main_nodes)
@@ -293,65 +65,6 @@ def xycut_spans(nodes: DataFrame, settings: ExtractSettings) -> DataFrame:
         .withColumn("span_end", F.when(in_seg, F.max("node_idx").over(w_s)))
     )
     keep = in_seg & (F.col("seg_len") > px_threshold) & (F.col("span_main") > 0)
-    return (
-        df.withColumn("in_kept_span", keep)
-        .withColumn("selected", keep & F.col("is_fg") & _not_pure_link())
-        .drop("gisl", "g_len", "in_kept_gap", "sisl", "seg_len", "ind")
+    return df.withColumn("in_kept_span", keep).drop(
+        "gisl", "g_len", "in_kept_gap", "sisl", "seg_len", "ind"
     )
-
-
-def morphological_spans(nodes: DataFrame, settings: ExtractSettings) -> DataFrame:
-    """1-D re-expression of the morphological variant
-    (``get_text_contours``, reference lib/pc_segmentation.py:70-116):
-    close(k1) -> open(k_open) -> dilate(k1)+close(k1) over the main-
-    content indicator, with kernel widths derived from the per-doc
-    normalization stat (W4); contiguous runs of the result become spans
-    in document order (contours reversed to reading order,
-    lib/pc_segmentation.py:116 == orderBy span_start).
-
-    close = windowed max then min; open = min then max (P15/P16).
-    """
-    w_ord = Window.partitionBy("url").orderBy("node_idx")
-
-    def wmax(c, r):
-        return F.max(c).over(w_ord.rowsBetween(-r, r))
-
-    def wmin(c, r):
-        return F.min(c).over(w_ord.rowsBetween(-r, r))
-
-    # W4 width derivation, integer-only (char_height / char_height/3 /
-    # char_height/1.1 analog at node granularity)
-    k1 = 2  # close width
-    k_open = 1  # noise-removal width (k1 // 3 rounded up)
-
-    ind = ((F.col("pred") == F.lit(CLS_MAIN)) & F.col("is_fg")).cast("int")
-    df = nodes.withColumn("ind", ind)
-    df = df.withColumn("m1", wmin(wmax(F.col("ind"), k1), k1))  # close
-    df = df.withColumn("m2", wmax(wmin(F.col("m1"), k_open), k_open))  # open
-    df = df.withColumn("m3", wmin(wmax(wmax(F.col("m2"), k1), k1), k1))
-    # ^ dilate(k1) then close(k1) (max, then max+min)
-
-    df = with_islands(df, ["m3"], out_col="sisl")
-    w_s = Window.partitionBy("url", "sisl")
-    in_seg = F.col("m3") == 1
-    df = (
-        df.withColumn(
-            "span_main", F.when(in_seg, F.sum("ind").over(w_s))
-        )
-        .withColumn("span_start", F.when(in_seg, F.min("node_idx").over(w_s)))
-        .withColumn("span_end", F.when(in_seg, F.max("node_idx").over(w_s)))
-    )
-    keep = in_seg & (F.col("span_main") >= F.lit(settings.min_main_nodes))
-    return (
-        df.withColumn("in_kept_span", keep)
-        .withColumn("selected", keep & F.col("is_fg") & _not_pure_link())
-        .drop("sisl", "m1", "m2", "m3", "ind")
-    )
-
-
-#: span-former registry (the post-processor-registry pattern, SURVEY §2.8)
-SPAN_FORMERS = {
-    "default": with_spans,
-    "xycut": xycut_spans,
-    "morphological": morphological_spans,
-}

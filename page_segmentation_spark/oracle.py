@@ -1,11 +1,12 @@
-"""Single-node oracle: the full extraction pipeline on one document.
+"""The single-document extraction chain — the engine's one implementation.
 
 This is the executable specification of the engine's semantics — the
 analog of running the reference pipeline eagerly on one page
 (predict lifecycle, reference lib/predictor.py:27-42 →
 lib/postprocess.py:9-26 → lib/pc_segmentation.py:24-60).  The Spark
-pipeline in :mod:`page_segmentation_spark.plans.extract` must produce
-byte-identical ``extracted_text`` and equal span offsets per url
+plans in :mod:`page_segmentation_spark.plans.extract` run this same
+chain (:func:`classify_document`) inside one ``mapInArrow`` kernel per
+page, so Spark output equals :func:`extract_document` by construction
 (SURVEY.md §5 golden-output tests).
 
 Stages (with reference citations):
@@ -26,7 +27,7 @@ Stages (with reference citations):
 
 from __future__ import annotations
 
-from typing import Any, Dict, List, Tuple
+from typing import Any, Callable, Dict, List, NamedTuple, Tuple
 
 from page_segmentation_spark.config import (
     CLS_MAIN,
@@ -35,6 +36,8 @@ from page_segmentation_spark.config import (
     derive_thresholds,
 )
 from page_segmentation_spark.functions import scorer_core as sc
+from page_segmentation_spark.functions.architectures import find_architecture
+from page_segmentation_spark.functions.markdown import md_line
 from page_segmentation_spark.page_parse import parse_page
 
 
@@ -53,7 +56,7 @@ def _sums_from_prefix(
 ) -> List[int]:
     """Sliding integer sum over [i+lo_off, i+hi_off] clipped to bounds,
     extracted from a shared prefix array (exact — integers).  Shared by
-    the eight window extractions of :func:`score_nodes`, which all read
+    the eight window extractions of :func:`node_features`, which all read
     the same two prefix arrays instead of rebuilding one each."""
     out = []
     for i in range(n):
@@ -67,31 +70,18 @@ def _sums_from_prefix(
     return out
 
 
-def _window_sums(
-    vals: List[int], radius: int, lo_off: int | None = None,
-    hi_off: int | None = None,
-) -> List[int]:
-    """Sliding integer sum over [i+lo_off, i+hi_off] clipped to bounds
-    (default symmetric ±radius) — the 1-D analog of a conv window;
-    exact (integers)."""
-    n = len(vals)
-    lo_off = -radius if lo_off is None else lo_off
-    hi_off = radius if hi_off is None else hi_off
-    return _sums_from_prefix(_prefix(vals), n, lo_off, hi_off)
-
-
 def char_median(nodes: List[Dict[str, Any]]) -> float:
     """A12 normalization stat: exact median of fg-node n_chars."""
     fg = sorted(n["n_chars"] for n in nodes if n["is_fg"])
     return sc.exact_median(fg)
 
 
-def score_nodes(
+def node_features(
     nodes: List[Dict[str, Any]], arch=None
-) -> Tuple[List[int], float]:
-    """Stages 2-4: per-node predicted class (raw, pre-vote).  ``arch``
-    selects a named architecture (radii + weights; None = base) — the
-    oracle twin of featurize(arch)/score(arch)."""
+) -> Tuple[List[List[float]], float]:
+    """Stages 2-3: per-node feature vectors (scorer_core.FEATURE_NAMES
+    order) and the per-document char_med they are normalized by.
+    ``arch`` selects a named architecture's radii and cap (None = base)."""
     if not nodes:
         return [], 0.0
     med = char_median(nodes)
@@ -113,15 +103,23 @@ def score_nodes(
     bwd_l = _sums_from_prefix(pl, n_n, -r, -1)
     doc_c = pc[-1]
     doc_l = pl[-1]
-    n = len(nodes)
-    preds = []
-    for i, node in enumerate(nodes):
-        feats = sc.build_features(
+    feats = [
+        sc.build_features(
             node, med, loc_c[i], loc_l[i], sec_c[i], sec_l[i], doc_c, doc_l,
-            n, fwd_c[i], fwd_l[i], bwd_c[i], bwd_l[i], arch=arch,
+            n_n, fwd_c[i], fwd_l[i], bwd_c[i], bwd_l[i], arch=arch,
         )
-        preds.append(sc.classify(feats, arch))
-    return preds, med
+        for i, node in enumerate(nodes)
+    ]
+    return feats, med
+
+
+def score_nodes(
+    nodes: List[Dict[str, Any]], arch=None
+) -> Tuple[List[int], float]:
+    """Stages 2-4: per-node predicted class (raw, pre-vote) and
+    char_med."""
+    feats, med = node_features(nodes, arch)
+    return [sc.classify(f, arch) for f in feats], med
 
 
 def cc_majority_vote(
@@ -174,11 +172,7 @@ def cut_spans(
     indicator = node is fg AND voted main; dilate by radius; merge gaps
     shorter than split_size (W4-derived); keep segments with at least
     min_main original main nodes (px_threshold analog,
-    reference lib/xycut.py:148,166,170).
-
-    min_main comes from ``settings.min_main_nodes`` — the SAME source the
-    Spark side reads (operators/spans.py with_spans) so a non-default
-    setting cannot break the byte-identity invariant."""
+    reference lib/xycut.py:148,166,170)."""
     n = len(nodes)
     if n == 0:
         return []
@@ -223,7 +217,7 @@ def cut_spans(
             while j < n and merged[j] == 1:
                 j += 1
             members = [k for k in range(i, j) if ind[k] == 1]
-            # trailing-heading trim (mirror: operators/spans.with_spans):
+            # trailing-heading trim:
             # a heading ending a span announces content OUTSIDE the span;
             # end at the last non-heading main node instead.  A span whose
             # main nodes are ALL headings has no content and is dropped.
@@ -311,13 +305,13 @@ def cut_spans_morphological(
     settings: ExtractSettings,
     char_med: float,
 ) -> List[Tuple[int, int, int]]:
-    """Single-document twin of
-    :func:`operators.spans.morphological_spans` (P16, reference
+    """Morphological span former (P16, ``get_text_contours``, reference
     lib/pc_segmentation.py:70-116): close(k1) -> open(k_open) ->
-    dilate(k1)+close(k1) over the indicator; runs of the result become
-    spans (full run extents) kept when they hold >= min_main raw main
-    nodes.  Kernel widths are the Spark form's constants (k1=2,
-    k_open=1)."""
+    dilate(k1)+close(k1) over the indicator (close = windowed max then
+    min, open = min then max); runs of the result become spans (full run
+    extents, in reading order) kept when they hold >= min_main raw main
+    nodes.  Kernel widths at node granularity: k1=2 (close), k_open=1
+    (noise removal)."""
     n = len(nodes)
     if n == 0:
         return []
@@ -346,46 +340,46 @@ def cut_spans_morphological(
     return spans
 
 
-#: single-document twins of operators.spans.SPAN_FORMERS — keys must
-#: match (pinned by tests/test_extract_fused.py fused-vs-declarative
-#: identity across every registered former).
+#: span-former registry (the post-processor-registry pattern, SURVEY
+#: §2.8), keyed by ``ExtractSettings.span_former``.
 SPAN_CUTTERS = {
     "default": cut_spans,
     "xycut": cut_spans_xycut,
     "morphological": cut_spans_morphological,
 }
 
+#: post_process stage names -> whether the stage runs the CC majority
+#: vote (the reference's alias table, lib/postprocess.py:56-64).
+#: Bounding boxes fill each same-class island's extent with its class —
+#: the identity in 1-D, where islands are already contiguous — so
+#: 'bbox' leaves predictions as they are, like 'none'.
+POSTPROCESSORS: Dict[str, bool] = {
+    "ccmajority": True,
+    "cc_majority": True,
+    "ccvote": True,
+    "voteconnectedcomponents": True,
+    "votecomponents": True,
+    "boundingboxes": False,
+    "bbox": False,
+    "none": False,
+}
 
-def extract_document(
-    html: bytes | str, settings: ExtractSettings | None = None
-) -> Dict[str, Any]:
-    """Full pipeline for one page (HTML or PDF byte stream — format
-    detected by parse_page).  Returns
-    {extracted_text, spans:[(start,end,n_main)], n_nodes, char_med}."""
-    from page_segmentation_spark.functions.architectures import (
-        find_architecture,
-    )
 
-    settings = settings or ExtractSettings()
-    arch = find_architecture(settings.architecture)
-    nodes = parse_page(
-        html,
-        max_nodes=settings.max_nodes_per_doc,
-        pdf_password=settings.pdf_password,
-    )
-    preds, med = score_nodes(nodes, arch)
-    if "cc_majority" in settings.post_process:
-        preds = cc_majority_vote(nodes, preds)
-    spans = SPAN_CUTTERS[settings.span_former](nodes, preds, settings, med)
-    texts: List[str] = []
+def selected_nodes(
+    nodes: List[Dict[str, Any]],
+    preds: List[int],
+    spans: List[Tuple[int, int, int]],
+) -> List[int]:
+    """Stage 8's emit rule: the fg nodes inside kept spans whose text is
+    extracted, in document order.  The gap merge bridges short interior
+    runs for connectivity; a bridged node that is non-main AND (entirely
+    link text OR inside a boilerplate container) is an inline ad /
+    template promo / related-links block — not content.  Nodes the vote
+    kept as main are always emitted."""
     selected: List[int] = []
     for (s, e, _c) in spans:
         for k in range(s, e + 1):
             nk = nodes[k]
-            # mirror of operators/spans._not_pure_link: a bridged interior
-            # node that is non-main AND (entirely link text OR inside a
-            # boilerplate container) is an inline ad / template promo /
-            # related-links block — not content
             if nk["is_fg"] and (
                 preds[k] == CLS_MAIN
                 or (
@@ -393,16 +387,112 @@ def extract_document(
                     and nk["container"] not in sc.BOILER_CONTAINERS
                 )
             ):
-                texts.append(nk["text"])
                 selected.append(k)
+    return selected
+
+
+class Engine(NamedTuple):
+    """The names in :class:`ExtractSettings`, resolved."""
+
+    arch: Any
+    vote: bool
+    cut: Callable
+
+
+def resolve(settings: ExtractSettings) -> Engine:
+    """Resolve the architecture, post_process chain and span former that
+    ``settings`` name; an unknown name raises (KeyError for the
+    architecture, ValueError otherwise).  The Spark plans call this on
+    the driver while the plan is built and ship the result inside the
+    kernel closure, so executors score with the driver's Arch object —
+    custom registrations and :func:`plans.train.apply_weights` included.
+    The vote is idempotent and the other stages leave predictions as
+    they are, so the chain reduces to "does any stage vote"."""
+    stages = [
+        name.lower().replace("-", "_").replace("__", "_")
+        for name in settings.post_process
+    ]
+    unknown = [s for s in stages if s not in POSTPROCESSORS]
+    if unknown:
+        raise ValueError(
+            f"unknown post_process {unknown}: {sorted(POSTPROCESSORS)}"
+        )
+    if settings.span_former not in SPAN_CUTTERS:
+        raise ValueError(
+            f"unknown span_former {settings.span_former!r}: "
+            f"{sorted(SPAN_CUTTERS)}"
+        )
+    return Engine(
+        find_architecture(settings.architecture),
+        any(POSTPROCESSORS[s] for s in stages),
+        SPAN_CUTTERS[settings.span_former],
+    )
+
+
+def classify_document(
+    html: bytes | str,
+    settings: ExtractSettings | None = None,
+    engine: Engine | None = None,
+) -> Dict[str, Any]:
+    """Stages 1-7 and the emit rule for one page (HTML or PDF byte
+    stream — format detected by parse_page): the one chain behind
+    :func:`extract_document`, :func:`extract_document_markdown` and the
+    Spark kernels.  ``engine`` is ``resolve(settings)`` when the caller
+    already holds it.  Returns {nodes, char_med, features, pred_raw,
+    preds (post-vote), spans:[(start,end,n_main)], selected}."""
+    settings = settings or ExtractSettings()
+    arch, vote, cut = engine or resolve(settings)
+    nodes = parse_page(
+        html,
+        max_nodes=settings.max_nodes_per_doc,
+        pdf_password=settings.pdf_password,
+    )
+    feats, med = node_features(nodes, arch)
+    raw = [sc.classify(f, arch) for f in feats]
+    preds = cc_majority_vote(nodes, raw) if vote else raw
+    spans = cut(nodes, preds, settings, med)
     return {
-        "extracted_text": settings.separator.join(texts),
-        "spans": spans,
-        "n_nodes": len(nodes),
-        "char_med": med,
         "nodes": nodes,
+        "char_med": med,
+        "features": feats,
+        "pred_raw": raw,
         "preds": preds,
-        "selected": selected,
+        "spans": spans,
+        "selected": selected_nodes(nodes, preds, spans),
+    }
+
+
+def render(
+    doc: Dict[str, Any], settings: ExtractSettings, markdown: bool = False
+) -> str:
+    """Join a classified document's selected node texts in document
+    order; ``markdown`` prefixes each through the shared tag-prefix map
+    (functions/markdown.MD_PREFIXES)."""
+    nodes = doc["nodes"]
+    if markdown:
+        return settings.separator.join(
+            md_line(nodes[k]["tag"], nodes[k]["text"]) for k in doc["selected"]
+        )
+    return settings.separator.join(nodes[k]["text"] for k in doc["selected"])
+
+
+def extract_document(
+    html: bytes | str, settings: ExtractSettings | None = None
+) -> Dict[str, Any]:
+    """Full pipeline for one page (HTML or PDF byte stream — format
+    detected by parse_page).  Returns
+    {extracted_text, spans:[(start,end,n_main)], n_nodes, char_med,
+    nodes, preds, selected}."""
+    settings = settings or ExtractSettings()
+    doc = classify_document(html, settings)
+    return {
+        "extracted_text": render(doc, settings),
+        "spans": doc["spans"],
+        "n_nodes": len(doc["nodes"]),
+        "char_med": doc["char_med"],
+        "nodes": doc["nodes"],
+        "preds": doc["preds"],
+        "selected": doc["selected"],
     }
 
 
@@ -410,20 +500,13 @@ def extract_document_markdown(
     html: bytes | str, settings: ExtractSettings | None = None
 ) -> Dict[str, Any]:
     """Markdown-structured extraction for one page: the SAME selected
-    nodes as :func:`extract_document` (same classifier, spans, bridge
-    guard — ``selected`` is reused, not recomputed), rendered through
-    the shared tag-prefix map (functions/markdown.MD_PREFIXES, the
-    single source of truth for both engines)."""
-    from page_segmentation_spark.functions.markdown import md_line
-
-    r = extract_document(html, settings)
+    nodes as :func:`extract_document` (one :func:`classify_document`
+    chain), rendered through the shared tag-prefix map
+    (functions/markdown.MD_PREFIXES)."""
     settings = settings or ExtractSettings()
-    md = settings.separator.join(
-        md_line(r["nodes"][k]["tag"], r["nodes"][k]["text"])
-        for k in r["selected"]
-    )
+    doc = classify_document(html, settings)
     return {
-        "extracted_markdown": md,
-        "spans": r["spans"],
-        "n_nodes": r["n_nodes"],
+        "extracted_markdown": render(doc, settings, markdown=True),
+        "spans": doc["spans"],
+        "n_nodes": len(doc["nodes"]),
     }

@@ -1,191 +1,5 @@
-"""Zero-shuffle fused extraction plan (the scale-path alternate of
-:mod:`page_segmentation_spark.plans.extract`).
+"""Former name of the extraction plan, kept while the benchmark in
+``perfbench/`` still calls it: :func:`plans.extract.extract` is now the
+single-stage fused plan itself."""
 
-The declarative plan explodes pages into a node table, runs windowed
-features/scoring/voting/span formation, and re-groups by url — ONE
-``Exchange hashpartitioning`` whose only job is to reassemble nodes the
-parse kernel already emitted contiguously per page.  Measured on the
-scaling harness (BENCH/BASELINE.md round 4), that JVM shuffle+window
-stage is the pipeline's scaling floor (~0.37 N->4N on one socket; it
-sorts+shuffles ~2 GB of node rows per 120k pages) while the Python
-parse stage scales linearly (1.06).
-
-This plan deletes the Exchange entirely: every per-document operator
-(parse -> features -> scorer fold -> CC majority vote -> span cut ->
-ordered concat) is data-parallel at the DOCUMENT grain, so one
-``mapInArrow`` stage runs the whole chain per page via the SHARED
-single-document implementation (:func:`oracle.extract_document` — the
-same ``page_parse`` / ``scorer_core`` / span semantics the declarative
-plan mirrors; byte-identity between the two plans is pinned by tests
-and the ``extract_fused_flagship`` driver row).
-
-Trade-offs (why this is an ALTERNATE, not a replacement):
-
-* no exploded node table — downstream per-node analytics (metrics,
-  debug overlays, GT joins) want the declarative plan's intermediate;
-* per-task peak memory holds one document's nodes plus its text
-  (bounded by ``max_nodes_per_doc``, same guard as the node table);
-* giant-page skew lands on single tasks — the declarative plan's
-  salting applies only to its exploded stages.  At the crawl grain
-  (many pages per task, pages capped) this is immaterial.
-
-Scale shape: scan -> one ArrowEval stage -> sink.  No shuffle, no sort,
-no aggregation; linear in input bytes and embarrassingly parallel at
-any executor count — the plan shape a 1000-executor crawl job wants.
-
-Reference analog: the reference's predict loop is exactly this fusion —
-one in-process chain per page (reference scripts/predict.py,
-lib/predictor.py:34-87) — re-expressed here as a single Arrow stage
-instead of a driver loop.
-"""
-
-from __future__ import annotations
-
-from typing import Iterator
-
-import pyarrow as pa
-from pyspark.sql import DataFrame
-
-from page_segmentation_spark.config import ExtractSettings
-
-#: output schema — field-for-field identical to plans/extract.extract()
-#: (asserted by test_extract_fused.test_schema_identical).
-_SPAN_T = pa.struct(
-    [
-        pa.field("start", pa.int64()),
-        pa.field("end", pa.int64()),
-        pa.field("n_main", pa.int64()),
-    ]
-)
-ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("url", pa.string()),
-        pa.field("extracted_text", pa.string()),
-        pa.field("spans", pa.list_(_SPAN_T)),
-        pa.field("n_nodes", pa.int64()),
-    ]
-)
-OUT_SCHEMA = (
-    "url string, extracted_text string, "
-    "spans array<struct<start:bigint,end:bigint,n_main:bigint>>, "
-    "n_nodes bigint"
-)
-_MD_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("url", pa.string()),
-        pa.field("extracted_markdown", pa.string()),
-        pa.field("spans", pa.list_(_SPAN_T)),
-        pa.field("n_nodes", pa.int64()),
-    ]
-)
-MD_OUT_SCHEMA = (
-    "url string, extracted_markdown string, "
-    "spans array<struct<start:bigint,end:bigint,n_main:bigint>>, "
-    "n_nodes bigint"
-)
-
-
-def extract_fused(
-    pages: DataFrame, settings: ExtractSettings | None = None
-) -> DataFrame:
-    """Fused single-stage extraction -> (url, extracted_text, spans,
-    n_nodes), byte-identical to :func:`plans.extract.extract` for the
-    same settings.  Supports every architecture AND every registered
-    span former: the shared single-document chain dispatches through
-    ``oracle.SPAN_CUTTERS`` (default / xycut / morphological — the
-    single-doc twins of operators.spans.SPAN_FORMERS), so the crawl
-    path accepts the same configs as the declarative plan."""
-    from page_segmentation_spark.oracle import SPAN_CUTTERS
-
-    settings = settings or ExtractSettings()
-    if settings.span_former not in SPAN_CUTTERS:
-        raise ValueError(
-            f"unknown span_former {settings.span_former!r}: "
-            f"{sorted(SPAN_CUTTERS)}"
-        )
-    pruned = pages.select("url", "html")
-
-    def kernel(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        # executor-side import: resolved from the shipped package zip
-        from page_segmentation_spark.oracle import extract_document
-
-        for batch in batches:
-            d = batch.to_pydict()
-            urls, texts, spans_col, n_nodes = [], [], [], []
-            for url, html in zip(d["url"], d["html"]):
-                r = extract_document(html or b"", settings)
-                urls.append(url)
-                texts.append(r["extracted_text"])
-                spans_col.append(
-                    [
-                        {"start": s, "end": e, "n_main": c}
-                        for (s, e, c) in r["spans"]
-                    ]
-                )
-                n_nodes.append(r["n_nodes"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, type=pa.string()),
-                    pa.array(texts, type=pa.string()),
-                    pa.array(spans_col, type=pa.list_(_SPAN_T)),
-                    pa.array(n_nodes, type=pa.int64()),
-                ],
-                schema=ARROW_SCHEMA,
-            )
-
-    return pruned.mapInArrow(kernel, schema=OUT_SCHEMA)
-
-
-def extract_markdown_fused(
-    pages: DataFrame, settings: ExtractSettings | None = None
-) -> DataFrame:
-    """Zero-shuffle markdown extraction — the fused twin of
-    plans/extract.extract_markdown: one mapInArrow stage calling
-    oracle.extract_document_markdown per page (which reuses the plain
-    extraction's selected nodes and the shared MD_PREFIXES map), so
-    crawl-scale jobs get structured output at fused-plan throughput.
-    Output: (url, extracted_markdown, spans, n_nodes)."""
-    from page_segmentation_spark.oracle import SPAN_CUTTERS
-
-    settings = settings or ExtractSettings()
-    if settings.span_former not in SPAN_CUTTERS:
-        raise ValueError(
-            f"unknown span_former {settings.span_former!r}: "
-            f"{sorted(SPAN_CUTTERS)}"
-        )
-    pruned = pages.select("url", "html")
-
-    def kernel(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        from page_segmentation_spark.oracle import (
-            extract_document_markdown,
-        )
-
-        for batch in batches:
-            d = batch.to_pydict()
-            urls, mds, spans_col, n_nodes = [], [], [], []
-            for url, html in zip(d["url"], d["html"]):
-                r = extract_document_markdown(html or b"", settings)
-                urls.append(url)
-                mds.append(r["extracted_markdown"])
-                spans_col.append(
-                    [
-                        {"start": s, "end": e, "n_main": c}
-                        for (s, e, c) in r["spans"]
-                    ]
-                )
-                n_nodes.append(r["n_nodes"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, type=pa.string()),
-                    pa.array(mds, type=pa.string()),
-                    pa.array(spans_col, type=pa.list_(_SPAN_T)),
-                    pa.array(n_nodes, type=pa.int64()),
-                ],
-                schema=_MD_ARROW_SCHEMA,
-            )
-
-    return pruned.mapInArrow(kernel, schema=MD_OUT_SCHEMA)
+from page_segmentation_spark.plans.extract import extract as extract_fused  # noqa: F401

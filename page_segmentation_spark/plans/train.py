@@ -107,7 +107,9 @@ def evaluate(
 
 def apply_weights(weights: Dict[int, List[float]], biases: Dict[int, float]):
     """Context manager swapping the shipped scorer weights for trained
-    ones (both Spark expressions and the oracle read scorer_core)."""
+    ones.  The base architecture reads scorer_core.WEIGHTS/BIAS, and the
+    extraction plans resolve it on the driver when they are built, so a
+    plan built inside the context scores with the trained weights."""
     import contextlib
 
     @contextlib.contextmanager

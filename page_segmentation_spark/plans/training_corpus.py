@@ -9,11 +9,10 @@ crawl pages of the input-hint shape (url, warc_ts, html, text, lang):
       -> language ID / token count / content fingerprint
       -> exact dedup (keep min-url per fingerprint)
 
-Scale shape at 10^12 documents: the extraction stage contributes its
-single url-keyed Exchange (or zero with the fused plan); C4, Gopher,
-language ID, token counting, and fingerprinting are all zero-shuffle
-Catalyst projections fused into the same stage; the only additional
-shuffle in the whole corpus build is the dedup hash partition on the
+Scale shape at 10^12 documents: extraction is one shuffle-free Arrow
+stage; C4, Gopher, language ID, token counting, and fingerprinting are
+all zero-shuffle Catalyst projections fused into the same stage; the
+only shuffle in the whole corpus build is the dedup hash partition on the
 16-hex-char fingerprint (narrow rows: fingerprints + urls).  Every
 filter drops rows BEFORE the dedup shuffle, so the expensive exchange
 sees only surviving documents.
@@ -51,15 +50,10 @@ def corpus_features(
     Shared verbatim by the batch plan (:func:`build_training_corpus`
     adds the fingerprint-window dedup) and the streaming plan
     (``streaming.corpus_stream.stream_training_corpus`` adds stateful
-    cross-batch first-seen dedup); with ``fused=True`` every stage here
-    is stream-safe (one mapInArrow + projections, zero shuffle)."""
-    if fused:
-        from page_segmentation_spark.plans.extract_fused import extract_fused
-
-        ext = extract_fused(pages)
-    else:
-        ext = extract(pages)
-    return _funnel_from_extracted(ext, c4_opts, gopher_opts)
+    cross-batch first-seen dedup); every stage here is stream-safe (one
+    mapInArrow + projections, zero shuffle).  ``fused`` chose between
+    two extraction plans there used to be; it is accepted and ignored."""
+    return _funnel_from_extracted(extract(pages), c4_opts, gopher_opts)
 
 
 def corpus_features_from_text(
@@ -161,10 +155,9 @@ def build_training_corpus(
     ``c4_opts`` / ``gopher_opts`` are keyword overrides for the two
     filter stages (see their docstrings for rule parameters); pass
     ``dedup=False`` to keep exact duplicates (e.g. when a later
-    MinHash/SimHash pass owns dedup).  ``fused=True`` swaps in the
-    zero-shuffle fused extraction plan (plans/extract_fused —
-    byte-identical output), leaving the dedup fingerprint partition as
-    the funnel's ONLY Exchange — the 1000-executor crawl shape.
+    MinHash/SimHash pass owns dedup).  The dedup fingerprint partition
+    is the funnel's ONLY Exchange — the 1000-executor crawl shape
+    (``fused`` is accepted and ignored, see :func:`corpus_features`).
 
     ``neardup=True`` appends the full near-duplicate pass after exact
     dedup: MinHash-LSH candidates verified by exact n-gram Jaccard

@@ -1761,10 +1761,9 @@ def extract_flagship(spark, sf_dir):
 )
 def extract_markdown_flagship(spark, sf_dir):
     """Markdown-structured extraction (plans/extract.extract_markdown):
-    identical node selection to the flagship — same plan, same single
+    identical node selection to the flagship — same kernel, zero
     Exchange — with heading/list tags rendered through the shared
-    prefix map (functions/markdown.MD_PREFIXES, one source of truth for
-    the Spark when-chain AND oracle.extract_document_markdown).  The
+    prefix map (functions/markdown.MD_PREFIXES).  The
     fixture title is an h1, so every document gains exactly the '# '
     prefix over the plain-text oracle; paragraph nodes render bare."""
     from page_segmentation_spark.packaging import ship_package
@@ -2728,18 +2727,16 @@ def crawl_latest_capture(spark, sf_dir):
     """,
 )
 def extract_fused_flagship(spark, sf_dir):
-    """The ZERO-SHUFFLE fused extraction plan (plans/extract_fused.py:
-    parse + score + vote + span-cut in ONE mapInArrow stage, no
-    Exchange) over the same pages as extract_flagship, against the same
-    closed-form oracle — a green row proves the alternate scale-path
-    plan is value-identical to the declarative one under the driver
-    gate, not just in pytest."""
+    """The zero-shuffle extraction plan (parse + score + vote + span-cut
+    in ONE mapInArrow stage, no Exchange) under its former fused-plan
+    name: the same plan and pages as extract_flagship, against the same
+    closed-form oracle."""
     from page_segmentation_spark.packaging import ship_package
-    from page_segmentation_spark.plans.extract_fused import extract_fused
+    from page_segmentation_spark.plans.extract import extract
 
     ship_package(spark)
     pages = pages_from_documents(spark, sf_dir)
-    out = extract_fused(pages)
+    out = extract(pages)
     return out.select(
         "url",
         "extracted_text",
@@ -3013,8 +3010,8 @@ def extract_arch_wide(spark, sf_dir):
     architectures' robust operating range, so the closed-form oracle is
     the same as extract_flagship (verified bad=0 over all docs at sf0.01
     and sf0.1); the architectures DIFFER on adversarial layouts
-    (tests/test_architectures.py) and the plan shape is unchanged (still
-    one Exchange)."""
+    (tests/test_architectures.py) and the plan shape is unchanged (zero
+    Exchange)."""
     from page_segmentation_spark.config import ExtractSettings
     from page_segmentation_spark.packaging import ship_package
     from page_segmentation_spark.plans.extract import extract
@@ -3053,7 +3050,7 @@ def extract_arch_trained(spark, sf_dir):
     over all docs at sf0.01 and sf0.1); the trained head DIFFERS from
     base on adversarial layouts (4/80 hostile fixtures) and its golden
     is frozen (tests/goldens/extractions_trained_seed42.json).  Plan
-    shape unchanged: still one Exchange, zero Python eval."""
+    shape unchanged: zero Exchange, zero Python eval."""
     from page_segmentation_spark.config import ExtractSettings
     from page_segmentation_spark.packaging import ship_package
     from page_segmentation_spark.plans.extract import extract

@@ -5,7 +5,7 @@ a landing directory of WARC files becomes a continuously-growing,
 already-deduplicated training corpus.
 
     binaryFile stream -> WARC record parse (mapInArrow)
-      -> corpus_features (fused extract + C4 + Gopher + lang/tokens/fp —
+      -> corpus_features (extract + C4 + Gopher + lang/tokens/fp —
          ONE stateless Arrow stage plus projections, zero shuffle)
       -> stateful first-seen dedup keyed by content fingerprint
          (applyInPandasWithState, cross-micro-batch state)
@@ -24,7 +24,7 @@ that batch (deterministic); later sightings only bump the state
 counter, so an append sink stays exactly-once for corpus rows.  This
 module keeps permanent state (forever-dedup); for TTL-bounded state see
 ``dedup_stream.first_seen_stream``'s event-time horizon — the extracted
-rows here no longer carry an event-time column (the fused kernel prunes
+rows here no longer carry an event-time column (the extraction kernel prunes
 to url+html), which is the documented trade for the zero-shuffle shape.
 """
 
@@ -79,7 +79,7 @@ def corpus_stream(
     lang); returns a streaming DataFrame of CORPUS_OUTPUT_SCHEMA rows —
     write with ``outputMode("update")`` (emissions are one-shot, so
     append semantics hold at the sink)."""
-    feats = corpus_features(pages, c4_opts, gopher_opts, fused=True)
+    feats = corpus_features(pages, c4_opts, gopher_opts)
     return _first_seen_dedup(feats)
 
 

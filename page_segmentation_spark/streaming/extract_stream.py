@@ -6,7 +6,7 @@ for continuously-landing crawl data:
 
   * :func:`stream_extract` — ``readStream`` over a pages directory ->
     ``foreachBatch(extract)`` -> idempotent per-batch sink.  Extraction
-    is stateless across documents (every window/groupBy is per-url), so
+    is stateless across documents (one kernel call per page), so
     micro-batch semantics are exact: each page is extracted once,
     byte-identically to the batch pipeline.  The sink writes each
     micro-batch to its own ``batch_id=N`` subdirectory with overwrite —
@@ -30,22 +30,6 @@ from page_segmentation_spark.plans.extract import extract
 from page_segmentation_spark.sources.pages_schema import PAGES_DDL
 
 
-def _plan_fn(plan: str):
-    """Resolve the per-batch extraction plan: "declarative" (node-table
-    pipeline, one Exchange) or "fused" (zero-shuffle single Arrow stage,
-    plans/extract_fused.py) — byte-identical outputs, so streaming
-    semantics are unchanged either way."""
-    if plan == "declarative":
-        return extract
-    if plan == "fused":
-        from page_segmentation_spark.plans.extract_fused import (
-            extract_fused,
-        )
-
-        return extract_fused
-    raise ValueError(f"plan must be 'declarative' or 'fused', got {plan!r}")
-
-
 def stream_extract(
     spark: SparkSession,
     input_path: str,
@@ -53,11 +37,9 @@ def stream_extract(
     checkpoint_path: str,
     settings: ExtractSettings | None = None,
     trigger_available_now: bool = True,
-    plan: str = "declarative",
 ):
     """Incrementally extract newly-landed page files.  Returns the
     StreamingQuery (caller awaits termination)."""
-    build = _plan_fn(plan)
     pages = (
         spark.readStream.schema(PAGES_DDL)
         .option("maxFilesPerTrigger", 64)
@@ -65,7 +47,7 @@ def stream_extract(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        result = build(batch_df, settings)
+        result = extract(batch_df, settings)
         # idempotent: overwrite THIS batch's directory so a post-crash
         # retry replaces its partial output rather than duplicating it
         result.write.mode("overwrite").parquet(
@@ -105,7 +87,13 @@ def stream_extract_warc(
     :func:`..sources.warc.read_warc` + ``extract`` over the same files.
     ``max_files_per_trigger`` bounds a micro-batch to ~16 crawl files
     (~16 GB at Common-Crawl sizing) — tune to cluster memory.
+
+    ``plan`` ("declarative" or "fused") named the two extraction plans
+    there used to be; both now run the one :func:`extract`, and the
+    keyword stays accepted for callers that still pass it.
     """
+    if plan not in ("declarative", "fused"):
+        raise ValueError(f"plan must be 'declarative' or 'fused', got {plan!r}")
     from page_segmentation_spark.sources.warc import (
         BINARY_FILE_DDL,
         warc_records,
@@ -125,10 +113,8 @@ def stream_extract_warc(
         F.lit(None).cast("string").alias("lang"),
     )
 
-    build = _plan_fn(plan)
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        build(batch_df, settings).write.mode("overwrite").parquet(
+        extract(batch_df, settings).write.mode("overwrite").parquet(
             f"{output_path}/batch_id={batch_id}"
         )
 

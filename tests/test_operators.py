@@ -1,24 +1,23 @@
-"""Spark operator unit tests on tiny hand-written frames (FIXTURES.md §7)."""
+"""Operator unit tests on tiny hand-written inputs (FIXTURES.md §7):
+Spark operators over small frames, and the extraction chain's vote and
+span stages (oracle) over small node lists."""
 
-from pyspark.sql import functions as F
-
-from page_segmentation_spark.operators.islands import with_islands
-from page_segmentation_spark.operators.vote import cc_majority
-from page_segmentation_spark.operators.spans import with_spans
 from page_segmentation_spark.config import ExtractSettings
+from page_segmentation_spark.operators.islands import with_islands
+from page_segmentation_spark.oracle import (
+    cc_majority_vote,
+    cut_spans,
+    selected_nodes,
+)
 
 
-def _nodes_df(spark, rows):
-    """rows: (node_idx, tag, is_fg, pred_raw)"""
-    df = spark.createDataFrame(
-        [("u1", i, t, fg, p) for (i, t, fg, p) in rows],
-        "url string, node_idx long, tag string, is_fg boolean, pred_raw int",
-    )
-    return (
-        df.withColumn("n_chars", F.lit(10).cast("long"))
-        .withColumn("n_link_chars", F.lit(0).cast("long"))
-        .withColumn("container", F.lit(""))
-    )
+def _nodes(tags_fg):
+    """tags_fg: (tag, is_fg) per node, in document order."""
+    return [
+        {"node_idx": i, "tag": t, "is_fg": fg, "container": "",
+         "n_chars": 10, "n_link_chars": 0}
+        for i, (t, fg) in enumerate(tags_fg)
+    ]
 
 
 def test_islands_basic(spark):
@@ -32,59 +31,39 @@ def test_islands_basic(spark):
     assert [r[0] for r in out] == [1, 1, 2, 2, 3, 4]
 
 
-def test_cc_majority_tie_and_breaks(spark):
-    rows = [
-        (0, "li", True, 0),
-        (1, "li", True, 1),  # li-run tie {0,1} -> 0
-        (2, "p", True, 1),
-        (3, "img", False, 2),  # non-fg keeps raw
-        (4, "p", True, 0),
-        (5, "p", True, 1),
-        (6, "p", True, 1),  # p-run majority 1
+def test_cc_majority_tie_and_breaks():
+    nodes = _nodes(
+        [("li", True), ("li", True), ("p", True), ("img", False),
+         ("p", True), ("p", True), ("p", True)]
+    )
+    # li-run tie {0,1} -> 0; node 2 and nodes 4-6 are separate p-runs
+    # (the non-fg img breaks them); non-fg keeps raw; p-run majority 1
+    assert cc_majority_vote(nodes, [0, 1, 1, 2, 0, 1, 1]) == [
+        0, 0, 1, 2, 1, 1, 1
     ]
-    out = (
-        cc_majority(_nodes_df(spark, rows))
-        .orderBy("node_idx")
-        .select("pred")
-        .collect()
-    )
-    assert [r[0] for r in out] == [0, 0, 1, 2, 1, 1, 1]
 
 
-def test_spans_merge_and_trim(spark):
-    rows = [(i, "p", True, p) for i, p in enumerate([0, 1, 1, 0, 1, 0, 0, 0, 2])]
-    df = (
-        _nodes_df(spark, rows)
-        .withColumn("pred", F.col("pred_raw"))
-        .withColumn("char_med", F.lit(50.0))
-        .withColumn("n_nodes", F.lit(9).cast("long"))
+def test_spans_merge_and_trim():
+    nodes = _nodes([("p", True)] * 9)
+    preds = [0, 1, 1, 0, 1, 0, 0, 0, 2]
+    spans = cut_spans(
+        nodes, preds, ExtractSettings(dilate_radius=0), char_med=50.0
     )
-    out = with_spans(df, ExtractSettings(dilate_radius=0)).orderBy("node_idx")
-    sel = [r["selected"] for r in out.collect()]
-    spans = {
-        (r["span_start"], r["span_end"], r["span_main"])
-        for r in out.where("in_kept_span").collect()
-    }
     # gap at 3 (len1 < split 2) merges 1-2 with 4; gap 5-7 (len 3) cuts
-    assert spans == {(1, 4, 3)}
-    assert sel == [False, True, True, True, True, False, False, False, False]
+    assert spans == [(1, 4, 3)]
+    # the bridged non-main node 3 is emitted (not link text, no
+    # boilerplate container)
+    assert selected_nodes(nodes, preds, spans) == [1, 2, 3, 4]
 
 
-def test_spans_dilation_bridges(spark):
-    rows = [(i, "p", True, p) for i, p in enumerate([1, 0, 0, 0, 1])]
-    df = (
-        _nodes_df(spark, rows)
-        .withColumn("pred", F.col("pred_raw"))
-        .withColumn("char_med", F.lit(50.0))
-        .withColumn("n_nodes", F.lit(5).cast("long"))
+def test_spans_dilation_bridges():
+    nodes = _nodes([("p", True)] * 5)
+    spans = cut_spans(
+        nodes, [1, 0, 0, 0, 1], ExtractSettings(dilate_radius=1),
+        char_med=50.0,
     )
-    out = with_spans(df, ExtractSettings(dilate_radius=1))
-    spans = {
-        (r["span_start"], r["span_end"], r["span_main"])
-        for r in out.where("in_kept_span").collect()
-    }
     # dilation radius 1: gap 1-3 becomes just {2}, len 1 < 2 -> merged
-    assert spans == {(0, 4, 2)}
+    assert spans == [(0, 4, 2)]
 
 
 def test_semantic_dedup_keeps_lowest_id_per_neighborhood(spark):

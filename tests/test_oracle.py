@@ -3,11 +3,7 @@ span trim, thresholds, exact median — the executable spec the Spark side
 is compared against."""
 
 from page_segmentation_spark.config import ExtractSettings, derive_thresholds
-from page_segmentation_spark.functions.scorer_core import (
-    classify,
-    exact_median,
-    logit,
-)
+from page_segmentation_spark.functions import scorer_core as sc
 from page_segmentation_spark.oracle import (
     cc_majority_vote,
     cut_spans,
@@ -93,19 +89,17 @@ def test_thresholds():
 
 
 def test_exact_median_matches_spark_percentile():
-    assert exact_median([1, 2, 3]) == 2.0
-    assert exact_median([1, 2, 3, 10]) == 2.5
-    assert exact_median([]) == 0.0
-    assert exact_median([7]) == 7.0
+    assert sc.exact_median([1, 2, 3]) == 2.0
+    assert sc.exact_median([1, 2, 3, 10]) == 2.5
+    assert sc.exact_median([]) == 0.0
+    assert sc.exact_median([7]) == 7.0
 
 
 def test_classify_tie_prefers_lowest_class():
-    from page_segmentation_spark.functions.scorer_core import N_FEATURES
-
     # zero features -> logits = biases (0.5, -0.4, -1.5) -> class 0
-    feats = [0.0] * N_FEATURES
-    assert classify(feats) == 0
-    assert logit(feats, 0) == 0.5
+    feats = [0.0] * sc.N_FEATURES
+    assert sc.classify(feats) == 0
+    assert sc.logit(feats, 0) == 0.5
 
 
 def test_extract_document_empty():

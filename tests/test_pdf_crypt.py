@@ -359,8 +359,8 @@ def test_u_validation_rejects_tampered_u():
 
 def test_extract_settings_pdf_password_mirror():
     """ExtractSettings.pdf_password reaches oracle.extract_document (the
-    fused plan's kernel and the declarative parse stage share the same
-    setting — mirror sites)."""
+    extraction plan's kernel runs the same chain with the same
+    settings)."""
     from page_segmentation_spark.config import ExtractSettings
     from page_segmentation_spark.oracle import extract_document
 

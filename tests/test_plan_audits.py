@@ -126,20 +126,6 @@ def test_topk_is_take_ordered(spark):
     assert "Sort [" not in plan.split("TakeOrderedAndProject")[0]
 
 
-def test_scorer_inside_wholestage_codegen(spark, tmp_path):
-    """The classifier fold is Catalyst expressions — it must appear inside
-    a WholeStageCodegen span, with zero Python eval operators."""
-    src = str(tmp_path / "pages")
-    pages_df(spark, 8, partitions=1).write.parquet(src)
-    df = extract(spark.read.parquet(src))
-    df.collect()  # AQE shows codegen spans only in the final plan
-    plan = _plan(df)
-    assert "isFinalPlan=true" in plan
-    # '*(n)' prefixes mark whole-stage-codegen spans in the compact form
-    assert "*(" in plan
-    assert "BatchEvalPython" not in plan
-
-
 def test_queries_construction_is_action_free(spark):
     """Constructing EVERY queries() entry must run zero driver actions —
     plans stay lazy and composable (a .first()/collect() at construction

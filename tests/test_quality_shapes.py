@@ -7,14 +7,13 @@ repeated template promos in bare <div>s, articles split across multiple
 executable spec (Spark is byte-identical by test_e2e_golden), so pinning
 the oracle pins the engine.
 
-Pinned behavior (achieved by three semantics changes, all mirrored on
-both sides):
+Pinned behavior (achieved by three semantics changes):
   * class/id boilerplate hints -> synthetic 'aside' container
     (html_parse.BOILER_HINT_RE);
   * a DECISIVE in_boiler_container scorer weight (scorer_core.WEIGHTS
     f20 = +/-5.5) with HTML5 header/footer-inside-article scoping;
   * the span bridge guard also drops non-main boiler-container interior
-    nodes (operators/spans._not_pure_link twin).
+    nodes (oracle.selected_nodes).
 """
 
 import pytest

@@ -1,9 +1,9 @@
 """Round-6 optimization internals: the rolling-hash gram kernel, the
 pushdown barrier, and plan-shape pins for the restructured operators.
 
-Value identity of the big rewrites (featurize / cc_majority / with_spans
-/ funnel) is already pinned by the golden, oracle-parity, and
-value-identity suites; these tests cover the NEW mechanisms directly."""
+Value identity of the big rewrites (the funnel) is already pinned by the
+golden, oracle-parity, and value-identity suites; these tests cover the
+NEW mechanisms directly."""
 
 from __future__ import annotations
 
@@ -130,22 +130,6 @@ def test_pushdown_barrier_values_and_plan(spark):
     # must not be re-expanded into the Filter condition
     assert "Generate" in plan
     assert "Filter (length" not in plan
-
-
-def test_extract_plan_single_sort(spark):
-    """The r06 single-ordering rewrite: post-exchange, the whole
-    feature/vote/span chain shares ONE (url, node_idx) sort."""
-    from page_segmentation_spark.datagen import pages_df
-    from page_segmentation_spark.plans.extract import extract
-
-    plan = (
-        extract(pages_df(spark, 8, partitions=2))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("Sort [url") <= 1, plan
 
 
 def test_paragraph_dedup_values_unchanged(spark):

@@ -1,11 +1,14 @@
-"""XY-cut (W3) and morphological (P16) span-former tests on hand frames."""
+"""XY-cut (W3) and morphological (P16) span-former tests: the XY-cut
+Spark operator on hand frames, the extraction chain's span cutters
+(oracle.SPAN_CUTTERS) on hand node lists."""
 
 from pyspark.sql import functions as F
 
 from page_segmentation_spark.config import ExtractSettings
-from page_segmentation_spark.operators.spans import (
-    morphological_spans,
-    xycut_spans,
+from page_segmentation_spark.operators.spans import xycut_spans
+from page_segmentation_spark.oracle import (
+    SPAN_CUTTERS,
+    cut_spans_morphological,
 )
 
 
@@ -59,30 +62,39 @@ def test_xycut_all_background(spark):
     assert _spans(out) == set()
 
 
-def test_morphological_close_bridges_and_open_denoises(spark):
-    # close(2) bridges the interior 2-gap: 1 1 0 0 1 -> one span
-    out = morphological_spans(_df(spark, [1, 1, 0, 0, 1]), ExtractSettings())
-    spans = _spans(out)
-    assert spans == {(0, 4, 3)}
+def _nodes(n):
+    return [{"node_idx": i, "tag": "p", "is_fg": True} for i in range(n)]
 
 
-def test_morphological_isolated_speck_removed(spark):
-    # a single 1 surrounded by long zeros: close keeps it, open(1) removes
-    out = morphological_spans(
-        _df(spark, [0, 0, 0, 0, 1, 0, 0, 0, 0]), ExtractSettings()
+def _morph(preds):
+    return cut_spans_morphological(
+        _nodes(len(preds)), preds, ExtractSettings(), 50.0
     )
-    assert _spans(out) == set()
 
 
-def test_formers_share_output_contract(spark):
-    from page_segmentation_spark.operators.spans import SPAN_FORMERS
+def test_morphological_close_bridges_and_open_denoises():
+    # close(2) bridges the interior 2-gap: 1 1 0 0 1 -> one span
+    assert _morph([1, 1, 0, 0, 1]) == [(0, 4, 3)]
 
-    df = _df(spark, [1, 1, 0, 1])
-    for name, fn in SPAN_FORMERS.items():
-        out = fn(df, ExtractSettings())
-        for col in ("selected", "in_kept_span", "span_start", "span_end",
-                    "span_main"):
-            assert col in out.columns, (name, col)
+
+def test_morphological_isolated_speck_removed():
+    # a single 1 surrounded by long zeros: close keeps it, open(1) removes
+    assert _morph([0, 0, 0, 0, 1, 0, 0, 0, 0]) == []
+
+
+def test_formers_share_output_contract():
+    """Every cutter returns ordered, disjoint (start, end, n_main) spans
+    inside the document, each holding at least one main node."""
+    preds = [1, 1, 0, 1, 0, 0, 0, 1, 1, 1, 0, 1]
+    nodes = _nodes(len(preds))
+    for name, cut in SPAN_CUTTERS.items():
+        spans = cut(nodes, preds, ExtractSettings(), 50.0)
+        assert spans, name
+        prev_end = -1
+        for (s, e, n_main) in spans:
+            assert prev_end < s <= e < len(preds), (name, spans)
+            assert 1 <= n_main == sum(preds[s:e + 1]), (name, spans)
+            prev_end = e
 
 
 def test_extract_with_alternate_formers(spark):

@@ -242,26 +242,44 @@ def test_stream_extract_warc_matches_batch(spark, tmp_path):
 
 
 def test_stream_extract_fused_plan_matches_batch(spark, tmp_path):
+    """stream_extract_warc still accepts its former plan= names (both run
+    the one extraction plan) and rejects anything else."""
+    import os
+
     import pytest as _pytest
 
-    src = str(tmp_path / "pages_in_f")
-    out = str(tmp_path / "extracted_f")
-    ckpt = str(tmp_path / "ckpt_f")
-    pages = pages_df(spark, 16, partitions=2).cache()
-    pages.write.parquet(src)
+    from page_segmentation_spark.datagen import make_page
+    from page_segmentation_spark.sources.warc import build_warc, read_warc
+    from page_segmentation_spark.streaming.extract_stream import (
+        stream_extract_warc,
+    )
 
-    q = stream_extract(spark, src, out, ckpt, plan="fused")
-    q.awaitTermination(120)
-    got = {
-        r["url"]: r["extracted_text"]
-        for r in spark.read.parquet(out).collect()
-    }
-    want = {r["url"]: r["extracted_text"] for r in extract(pages).collect()}
-    assert got == want  # fused micro-batches, byte-identical to batch
-    pages.unpersist()
+    src = str(tmp_path / "warc_in_f")
+    os.makedirs(src)
+    recs = [
+        {"url": make_page(i)["url"], "ts": "2024-01-01T00:00:00Z",
+         "body": make_page(i)["html"]}
+        for i in range(8)
+    ]
+    with open(os.path.join(src, "a.warc.gz"), "wb") as f:
+        f.write(build_warc(recs))
+    batch = read_warc(spark, src).select("url", "html")
+    want = {r["url"]: r["extracted_text"] for r in extract(batch).collect()}
+    for plan in ("fused", "declarative"):
+        out = str(tmp_path / f"out_{plan}")
+        stream_extract_warc(
+            spark, src, out, str(tmp_path / f"ckpt_{plan}"), plan=plan
+        ).awaitTermination(120)
+        got = {
+            r["url"]: r["extracted_text"]
+            for r in spark.read.parquet(out).collect()
+        }
+        assert got == want, plan
 
     with _pytest.raises(ValueError):
-        stream_extract(spark, src, out, ckpt, plan="nope")
+        stream_extract_warc(
+            spark, src, str(tmp_path / "o"), str(tmp_path / "c"), plan="nope"
+        )
 
 
 def test_stream_training_corpus_cross_batch_dedup(spark, tmp_path):

@@ -946,9 +946,9 @@ def test_build_training_corpus_funnel(spark):
 
 
 def test_build_training_corpus_plan_shape(spark):
-    """Whole funnel = extraction's one url Exchange + ONE dedup Exchange
-    on the fingerprint; C4/Gopher/langid/fingerprint stages add no
-    shuffle and no Python eval beyond the parse kernel."""
+    """Whole funnel = ONE dedup Exchange on the fingerprint: extraction
+    is a shuffle-free Arrow stage, and C4/Gopher/langid/fingerprint add
+    no shuffle and no Python eval beyond the extraction kernel."""
     import re
 
     from page_segmentation_spark.plans.training_corpus import (
@@ -963,13 +963,14 @@ def test_build_training_corpus_plan_shape(spark):
         build_training_corpus(pages)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 2, plan
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
     assert "BatchEvalPython" not in plan, plan
 
 
 def test_build_training_corpus_fused_identity_and_plan(spark):
-    """fused=True must produce identical rows with the dedup fingerprint
-    partition as the ONLY Exchange in the whole funnel."""
+    """The still-accepted fused=True produces identical rows, with the
+    dedup fingerprint partition as the ONLY Exchange in the whole
+    funnel."""
     import re
 
     from page_segmentation_spark.plans.training_corpus import (

@@ -1,4 +1,4 @@
-"""Interleaved cross-CHECKOUT A/B for the declarative flagship.
+"""Interleaved cross-CHECKOUT A/B for the extraction flagship.
 
 VERDICT r4 finding #3: the recorded `extract_synthetic` slipped from
 7.39s (r3) to 11.26s (r4), but single-invocation runs on this shared VM
@@ -19,7 +19,7 @@ Usage:
 worktree for it is created under /tmp/pss_ab_<sha> on first use and
 reused after.  HEAD side imports from the repo itself — commit or be
 aware the working tree is what's measured.  job: extract (default) |
-fused | parse.
+fused (checkouts that still have plans/extract_fused.py).
 """
 
 from __future__ import annotations
@@ -36,8 +36,6 @@ _CHILD = r"""
 import sys, time
 repo, cpus, corpus, job = sys.argv[1], int(sys.argv[2]), sys.argv[3], sys.argv[4]
 sys.path.insert(0, repo)
-import os
-os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
 from page_segmentation_spark.session import get_spark
 from page_segmentation_spark.plans.extract import extract
 spark = get_spark(app=f"ab-{job}", master=f"local[{cpus}]",
@@ -47,9 +45,6 @@ pages = spark.read.parquet(corpus)
 if job == "fused":
     from page_segmentation_spark.plans.extract_fused import extract_fused
     build = lambda: extract_fused(pages)
-elif job == "parse":
-    from page_segmentation_spark.sources.parse import parse_pages
-    build = lambda: parse_pages(pages)
 else:
     build = lambda: extract(pages)
 print(f"READY {pages.count()}", flush=True)

@@ -27,7 +27,6 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
 CACHE_ROOT = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/pss_bench_cache")
 
 
@@ -38,7 +37,7 @@ def noop(df) -> None:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    import bench  # repo-root bench.py: reuse corpus builders
+    import bench  # repo-root bench.py: corpus builders, driver heap default
     from page_segmentation_spark.session import get_spark
 
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -65,12 +64,9 @@ def main() -> None:
     )
     from page_segmentation_spark.operators import dedup as D
     from page_segmentation_spark.plans.extract import extract
-    from page_segmentation_spark.plans.extract_fused import extract_fused
     from page_segmentation_spark.plans.training_corpus import (
         build_training_corpus,
-        corpus_features,
     )
-    from page_segmentation_spark.sources.parse import parse_pages
 
     from page_segmentation_spark.queries import QUERIES as QUERIES_local
 
@@ -80,7 +76,7 @@ def main() -> None:
 
     def ext_table():
         if not os.path.exists(os.path.join(ext_path, "_SUCCESS")):
-            extract_fused(pages).select(
+            extract(pages).select(
                 "url", F.col("extracted_text")
             ).repartition(CPUS * 4).write.mode("overwrite").parquet(ext_path)
         return spark.read.parquet(ext_path)
@@ -110,138 +106,6 @@ def main() -> None:
             token_count(F.col("clean_text")).alias("n_tokens"),
             fingerprint(F.col("clean_text")).alias("content_fp"),
             "clean_text",
-        )
-
-    # candidate variants under measurement (value-identical by
-    # construction; promoted into functions/text.py only if they win):
-    def exp_c4_v2(ext):
-        from page_segmentation_spark.functions.text import C4_TERMINALS
-
-        text = F.col("extracted_text")
-        min_words, banned = 5, ("javascript",)
-
-        def keep_line(l):
-            t = F.rtrim(l)
-            keep = F.substring(t, -1, 1).isin(*C4_TERMINALS)
-            # ">= min_words non-space runs" without materializing the
-            # word array: anchored scan, disjoint classes (no backtrack)
-            keep = keep & t.rlike(
-                r"^ *(?:[^ ]+ +){%d}[^ ]" % (min_words - 1)
-            )
-            low = F.lower(t)
-            for w in banned:
-                keep = keep & ~low.contains(w.lower())
-            return keep
-
-        df = ext.select(
-            "*",
-            F.split(text, "\n").alias("__lines"),
-            F.lower(text).alias("__low"),
-        )
-        kept_expr = F.filter(F.col("__lines"), keep_line)
-        staged = df.select("*", kept_expr.alias("__kept"))
-        kept = F.col("__kept")
-        page_bad = F.col("__low").contains("lorem ipsum") | F.col(
-            "__low"
-        ).contains("{")
-        page_kept = (~page_bad) & (F.size(kept) >= 3)
-        return staged.select(
-            F.col("url"),
-            F.array_join(kept, "\n").alias("clean_text"),
-            F.size(kept).cast("long").alias("n_kept"),
-            (F.size(F.col("__lines")) - F.size(kept)).cast("long").alias(
-                "n_removed"
-            ),
-            page_kept.cast("int").alias("page_kept"),
-        )
-
-    def exp_gopher_v2(src):
-        # gopher_quality with non_ws summed over the staged words array
-        # (no regexp_replace full-text copy); everything else identical
-        from page_segmentation_spark.functions.text import (
-            GOPHER_STOPWORDS,
-        )
-
-        text = F.col("clean_text")
-        df2 = src.select(
-            "*",
-            F.trim(text).alias("__pss_g_trim"),
-            F.split(F.trim(text), r"\s+").alias("__pss_g_words"),
-            F.split(text, "\n").alias("__pss_g_lines"),
-            F.concat(F.lit(" "), F.lower(text), F.lit(" ")).alias(
-                "__pss_g_padded"
-            ),
-        )
-        blank = F.length(F.col("__pss_g_trim")) == 0
-        words = F.col("__pss_g_words")
-        n_words = F.when(blank, F.lit(0)).otherwise(F.size(words)).cast(
-            "long"
-        )
-        non_ws = F.aggregate(
-            words,
-            F.lit(0),
-            lambda acc, w: acc + F.length(w),
-        ).cast("double")
-        mean_wl = F.when(
-            n_words > 0, non_ws / n_words.cast("double")
-        ).otherwise(F.lit(0.0))
-        n_symbols = (
-            F.size(F.regexp_extract_all(text, F.lit(r"#"), 0))
-            + F.size(F.regexp_extract_all(text, F.lit(r"\.\.\."), 0))
-        ).cast("long")
-        symbol_ratio = F.when(
-            n_words > 0, n_symbols.cast("double") / n_words.cast("double")
-        ).otherwise(F.lit(0.0))
-        lines = F.col("__pss_g_lines")
-        n_lines = F.size(lines).cast("double")
-        is_bullet = lambda l: (  # noqa: E731
-            F.ltrim(l).startswith("•")
-            | F.ltrim(l).startswith("- ")
-            | F.ltrim(l).startswith("* ")
-        )
-        bullet_frac = (
-            F.size(F.filter(lines, is_bullet)).cast("double") / n_lines
-        )
-        ends_ellipsis = lambda l: (  # noqa: E731
-            F.rtrim(l).endswith("...") | F.rtrim(l).endswith("…")
-        )
-        ellipsis_frac = (
-            F.size(F.filter(lines, ends_ellipsis)).cast("double") / n_lines
-        )
-        n_alpha_words = F.size(
-            F.filter(words, lambda w: w.rlike("[A-Za-z]"))
-        ).cast("double")
-        alpha_frac = F.when(
-            n_words > 0, n_alpha_words / n_words.cast("double")
-        ).otherwise(F.lit(0.0))
-        padded = F.col("__pss_g_padded")
-        stop_hits = F.lit(0)
-        for w in GOPHER_STOPWORDS:
-            stop_hits = stop_hits + F.when(
-                padded.contains(f" {w} "), F.lit(1)
-            ).otherwise(F.lit(0))
-        keep = (
-            (n_words >= 50)
-            & (n_words <= 100_000)
-            & (mean_wl >= 3.0)
-            & (mean_wl <= 10.0)
-            & (symbol_ratio <= 0.1)
-            & (bullet_frac <= 0.1)
-            & (ellipsis_frac <= 0.3)
-            & (alpha_frac >= 0.8)
-            & (stop_hits >= 2)
-        )
-        return df2.select(
-            F.col("url"),
-            F.col("clean_text"),
-            n_words.alias("n_words"),
-            F.round(mean_wl, 6).alias("mean_word_len"),
-            F.round(symbol_ratio, 6).alias("symbol_ratio"),
-            F.round(bullet_frac, 6).alias("bullet_frac"),
-            F.round(ellipsis_frac, 6).alias("ellipsis_frac"),
-            F.round(alpha_frac, 6).alias("alpha_frac"),
-            stop_hits.cast("long").alias("n_stop_hits"),
-            keep.cast("int").alias("keep"),
         )
 
     # barrier-form funnel tail sub-stages (the shipped r6 shape —
@@ -308,24 +172,6 @@ def main() -> None:
             "clean_text",
         )
 
-    def _barrier_kept(c4):
-        from page_segmentation_spark.functions.staging import (
-            pushdown_barrier,
-        )
-
-        c4 = pushdown_barrier(c4, ["clean_text", "page_kept"])
-        return c4.where(F.col("page_kept") == 1)
-
-    def _barrier_keep(g):
-        from page_segmentation_spark.functions.staging import (
-            pushdown_barrier,
-        )
-
-        g = pushdown_barrier(g, ["keep"])
-        return g.where(F.col("keep") == 1).select(
-            "url", "clean_text", "n_words"
-        )
-
     def tail_dedup(ext):
         from pyspark.sql import Window
 
@@ -341,25 +187,14 @@ def main() -> None:
         return spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
 
     JOBS = {
-        # declarative extraction, stage by stage
-        "parse": lambda: parse_pages(pages),
-        "featurize": lambda: _featurized(pages),
-        "score": lambda: _scored(pages),
-        "vote": lambda: _voted(pages),
-        "spans": lambda: _spanned(pages),
+        # extraction + corpus funnel tail over materialized extraction
         "extract": lambda: extract(pages),
-        # fused path + corpus funnel tail over materialized extraction
-        "fused": lambda: extract_fused(pages),
-        "corpus": lambda: build_training_corpus(pages, fused=True),
+        "corpus": lambda: build_training_corpus(pages),
         "tail_c4": lambda: tail_c4(ext_table()),
         "tail_gopher": lambda: tail_gopher(ext_table()),
         "tail_lang": lambda: tail_lang(ext_table()),
         "tail_full": lambda: tail_full(ext_table()),
         "tail_dedup": lambda: tail_dedup(ext_table()),
-        "exp_c4": lambda: _barrier_kept(exp_c4_v2(ext_table())),
-        "exp_gopher": lambda: _barrier_keep(
-            exp_gopher_v2(ftail_c4(ext_table()))
-        ),
         "lang_only": lambda: with_lang_id(
             ext_table(), "extracted_text"
         ).select("url", "lang"),
@@ -497,27 +332,6 @@ def main() -> None:
             F.count(F.when(F.col("kept"), F.lit(1))).alias("n_kept"),
             F.count(F.when(~F.col("kept"), F.lit(1))).alias("n_removed"),
         )
-
-    def _featurized(p):
-        from page_segmentation_spark.functions.features import featurize
-
-        return featurize(parse_pages(p))
-
-    def _scored(p):
-        from page_segmentation_spark.functions.scorer import score
-
-        return score(_featurized(p))
-
-    def _voted(p):
-        from page_segmentation_spark.operators.vote import cc_majority
-
-        return cc_majority(_scored(p))
-
-    def _spanned(p):
-        from page_segmentation_spark.config import ExtractSettings
-        from page_segmentation_spark.operators.spans import with_spans
-
-        return with_spans(_voted(p), ExtractSettings())
 
     if not args or args[0] == "list":
         print("jobs:", ", ".join(sorted(JOBS)))

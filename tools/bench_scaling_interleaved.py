@@ -1,7 +1,6 @@
 """Interleaved two-parallelism scaling measurement.
 
-The serial harness (tools/bench_scaling.py) measures all N-level runs,
-then all 4N-level runs.  On this shared VM the baseline machine speed
+A serial protocol measures all N-level runs, then all 4N-level runs.  On this shared VM the baseline machine speed
 drifts ~25% between measurement windows minutes apart, and that drift
 lands entirely on one side of the ratio — two consecutive serial
 invocations of the same 300k-page pair measured efficiency 0.565 and
@@ -16,12 +15,9 @@ Reported: per-level medians plus the per-adjacent-pair efficiency
 samples and their median.
 
 Usage: python tools/bench_scaling_interleaved.py [sf_dir] [N] [4N] [pages] [job] [rounds]
-``job``: "extract" (default, full pipeline), "fused" (the
-zero-shuffle single-stage plan), "parse" (the Python
-mapInArrow stage alone) — comparing the two attributes multi-core
-contention between the CPython parse kernel and the JVM agg stages —
-or "corpus" (the full fused corpus-construction funnel:
-extract -> C4 -> Gopher -> langid/fingerprint -> exact dedup).
+``job``: "extract" (default, the extraction plan) or "corpus" (the full
+corpus-construction funnel: extract -> C4 -> Gopher ->
+langid/fingerprint -> exact dedup).
 """
 
 from __future__ import annotations
@@ -36,11 +32,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
 from page_segmentation_spark.session import get_spark
 from page_segmentation_spark.plans.extract import extract
-from page_segmentation_spark.plans.extract_fused import extract_fused
-from page_segmentation_spark.sources.parse import parse_pages
 
 cpus = int(sys.argv[1]); corpus = sys.argv[2]
 job = sys.argv[3] if len(sys.argv) > 3 else "extract"
@@ -49,15 +42,10 @@ spark = get_spark(app=f"scaling-i{{cpus}}", master=f"local[{{cpus}}]",
 spark.sparkContext.setLogLevel("ERROR")
 pages = spark.read.parquet(corpus)
 n = pages.count()
-# parse = the Python (mapInArrow) stage alone, no shuffle/agg after it —
-# used to attribute multi-core contention between the CPython parse
-# kernel and the JVM window/agg stages
 from page_segmentation_spark.plans.training_corpus import build_training_corpus
 JOBS = {{
     "extract": lambda: extract(pages),
-    "fused": lambda: extract_fused(pages),
-    "parse": lambda: parse_pages(pages),
-    "corpus": lambda: build_training_corpus(pages, fused=True),
+    "corpus": lambda: build_training_corpus(pages),
 }}
 build = JOBS[job]
 print(f"READY {{n}}", flush=True)

@@ -16,7 +16,6 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
 
 
 def main() -> None:
@@ -39,7 +38,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from page_segmentation_spark.plans.extract import extract
-    from page_segmentation_spark.plans.extract_fused import extract_fused
     from page_segmentation_spark.plans.training_corpus import (
         build_training_corpus,
     )
@@ -59,7 +57,6 @@ def main() -> None:
 
     BUILDERS = {
         "extract_synthetic": lambda: extract(pages),
-        "extract_fused": lambda: extract_fused(pages),
         "extract_testdata": lambda: extract(
             pages_from_documents(spark, SF_DIR)
         ),
@@ -67,9 +64,7 @@ def main() -> None:
         "extract_pdf": lambda: extract(
             pdf_pages_from_documents(spark, SF_DIR)
         ),
-        "corpus_build_fused": lambda: build_training_corpus(
-            pages, fused=True
-        ),
+        "corpus_build_fused": lambda: build_training_corpus(pages),
         "dedup_minhash_lsh": lambda: QUERIES["dedup_minhash_lsh"](
             spark, SF_DIR
         ),

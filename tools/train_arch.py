@@ -113,7 +113,7 @@ def main() -> None:
             "lang string",
         )
         pages = pages.unionByName(extra_df)
-    nodes = classified_nodes(pages).where("node_idx >= 0")
+    nodes = classified_nodes(pages)
 
     gt_rows = []
     for i in range(n_pages):
@@ -146,7 +146,7 @@ def main() -> None:
     from page_segmentation_spark.plans.train import apply_weights
 
     with apply_weights(weights, biases):
-        relabeled = classified_nodes(pages).where("node_idx >= 0").join(
+        relabeled = classified_nodes(pages).join(
             gt, ["url", "text"], "left"
         ).withColumn(
             "gt_label",
