@@ -29,11 +29,6 @@ MAX_NODES_PER_DOC = 50_000
 #: section).  Read by oracle.cut_spans and the scorer's heading feature.
 HEADING_TAGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 
-#: Target of the per-document normalization (analog of
-#: ``target_line_height``, reference lib/dataset.py:131-137): node lengths
-#: are normalized by the per-doc median foreground block length (A12).
-DEFAULT_TARGET_BLOCK_CHARS = 80
-
 
 @dataclass(frozen=True)
 class ExtractSettings:
@@ -66,7 +61,6 @@ class ExtractSettings:
     architecture: str = "base"
     #: separator used when concatenating node texts.
     separator: str = "\n\n"
-    n_classes: int = N_CLASSES
     max_nodes_per_doc: int = MAX_NODES_PER_DOC
     #: user password for encrypted PDFs (empty = the owner-locked crawl
     #: shape; a wrong password degrades to visible ops, never garbles).

@@ -86,7 +86,7 @@ N_FEATURES = len(FEATURE_NAMES)
 #: wrapper (html_parse.BOILER_HINT_RE: comment threads, inline promos,
 #: share bars) never extracts.  Legitimate article headers survive via
 #: the parser's HTML5 scoping rule (header/footer inside article/main
-#: resolve to the article, html_parse._current_container).
+#: resolve to the article, html_parse._BlockCollector._push_ctx).
 WEIGHTS: Dict[int, List[float]] = {
     CLS_BOILER: [-0.8, 3.0, -0.5, -0.5, 0.1, -0.5, 2.0, 0.0,
                  0.5, 0.8, -0.1, 2.0, -0.05, 1.0, 0.5, 0.2,

@@ -5,9 +5,24 @@ front-end (``DatasetLoader.load_images``, reference lib/dataset.py:160-191):
 it turns one raw page byte-stream into the "pixel grid in long form" — an
 ordered list of text-block node records, for the single-document chain
 in :mod:`page_segmentation_spark.oracle` (which the Spark plans run per
-page).  Pure stdlib (``html.parser``) — no lxml/bs4 in this
-environment — and fully deterministic: no dict-order dependence, no
-randomness.
+page).  Pure stdlib (one compiled regex scans the page; no lxml/bs4
+in this environment) and fully deterministic: no dict-order
+dependence, no randomness.
+
+Parser behaviour (pinned by tests/test_html_parse.py):
+  * only class/id attributes are read (the boilerplate hint, matched
+    ASCII-case-insensitively on the attribute name); other attributes
+    are ignored;
+  * a ``>`` inside a quoted attribute value ends the tag early; the
+    rest of the value becomes text;
+  * character references are resolved per data segment
+    (``html.unescape``);
+  * ``/>`` on a non-void tag is ignored (``<div/>`` opens a div);
+    ``<script>``/``<style>`` content is skipped to the matching close
+    tag, or to the end of the document if there is none;
+  * comments, CDATA sections, declarations and processing instructions
+    are dropped; an unterminated comment or CDATA section runs to the
+    end of the document.
 
 Node record fields (FIXTURES.md §2):
     node_idx  — document-order position (0-based)
@@ -23,8 +38,9 @@ Node record fields (FIXTURES.md §2):
 
 from __future__ import annotations
 
+import re
 import string
-from html.parser import HTMLParser
+from html import unescape
 from typing import Any, Dict, List
 
 # Block-level elements: a new node begins whenever one opens or closes.
@@ -46,13 +62,6 @@ VOID_TAGS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
 
-# Semantic sectioning ancestors recorded per node ("container" field): the
-# innermost of these on the open-element stack.  'footer'-ness of a <p>
-# is invisible from its own tag — the container carries it.
-SEMANTIC_CONTAINERS = frozenset(
-    "article main aside nav footer header".split()
-)
-
 # class/id tokens that mark an element as boilerplate regardless of tag —
 # real-crawl boilerplate (comment threads, inline promos, share bars,
 # cookie banners) lives in <div>/<section> wrappers whose tag carries no
@@ -61,9 +70,7 @@ SEMANTIC_CONTAINERS = frozenset(
 # matching this is treated as a synthetic 'aside' container for every
 # node inside it (innermost-ancestor rule unchanged).  Word-ish
 # boundaries so 'download'/'shadow'/'gradient' never match.
-import re as _re
-
-BOILER_HINT_RE = _re.compile(
+BOILER_HINT_RE = re.compile(
     r"(?:^|[\s_-])(?:ad|ads|advert\w*|promo\w*|sponsor\w*|comment\w*|"
     r"sidebar|related|share|social|newsletter|subscrib\w*|cookie\w*|"
     r"banner|breadcrumb\w*|widget|masthead|disclaimer|pagination|pager|"
@@ -72,14 +79,23 @@ BOILER_HINT_RE = _re.compile(
 )
 
 
-def _attrs_boiler(attrs) -> bool:
-    """True if the element's class/id marks it as boilerplate."""
-    if not attrs:
+#: class/id values in a raw attribute string (one group per quoting
+#: style).  Attribute names are ASCII case-insensitive; \b keeps
+#: 'width=' from matching 'id='.
+_CLASS_ID = re.compile(
+    r"""\b(?ai:class|id)\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>"']+))"""
+)
+
+
+def _attrs_boiler(attrs: str) -> bool:
+    """True if the class/id values in the raw attribute text ``attrs``
+    mark the element as boilerplate."""
+    lo = attrs.lower()
+    if "class" not in lo and "id" not in lo:  # cheap prefilter
         return False
-    vals = [v for (k, v) in attrs if k in ("class", "id") and v]
-    if not vals:
-        return False
-    return BOILER_HINT_RE.search(" ".join(vals).lower()) is not None
+    vals = " ".join(map("".join, _CLASS_ID.findall(attrs)))
+    return BOILER_HINT_RE.search(vals.lower()) is not None
+
 
 # Small fixed multilingual stopword set for the stop-ratio feature.
 STOPWORDS = frozenset(
@@ -88,40 +104,20 @@ STOPWORDS = frozenset(
     et de un une du est el los las y en que se no""".split()
 )
 
-_PUNCT = frozenset(string.punctuation)
-
-# C-speed char-class counting via str.translate deletion tables (the
-# per-char Python loop dominated parse cost).  Classes are ASCII +
-# Latin-1-supplement letters — a fixed, documented definition shared by
-# oracle and Spark, so both sides shift together if it ever changes.
-_UPPER_CHARS = string.ascii_uppercase + "".join(
-    chr(c) for c in range(0xC0, 0xDF) if c != 0xD7
-)
-_LOWER_CHARS = string.ascii_lowercase + "".join(
-    chr(c) for c in range(0xDF, 0x100) if c != 0xF7
-)
+#: memo of `token.lower().strip(punct) in STOPWORDS` (0/1) — token
+#: vocabulary repeats heavily, so the per-token lower/strip becomes a
+#: dict hit.  Bounded at 1M entries.
 _STOP_CACHE: Dict[str, int] = {}
 
-
-def _is_stopword(token: str) -> int:
-    """Memoized `token.lower().strip(punct) in STOPWORDS` — token
-    vocabulary repeats heavily, so the cache turns the per-token
-    lower/strip into a dict hit.  Pure function, bounded cache."""
-    v = _STOP_CACHE.get(token)
-    if v is None:
-        v = 1 if token.lower().strip(string.punctuation) in STOPWORDS else 0
-        if len(_STOP_CACHE) < 1_000_000:
-            _STOP_CACHE[token] = v
-    return v
-
-
-
+# Char classes are ASCII + Latin-1-supplement letters — a fixed
+# definition (tests/test_properties.py pins it against its own reference
+# sets), counted at C speed:
 # bytes.translate uses a 256-entry C table (vs per-char dict lookups for
 # str.translate) — ~6x faster.  It runs on the UTF-8 encoding of ANY
 # text: the deletion tables are pure-ASCII bytes, and UTF-8 never uses
 # a byte < 0x80 for a non-ASCII character, so deleted-byte counts equal
 # deleted-char counts exactly.  The non-ASCII class members (the
-# Latin-1-supplement letters above) are exactly the C3-prefixed UTF-8
+# Latin-1-supplement letters) are exactly the C3-prefixed UTF-8
 # pairs — 0xC3 is never a continuation or other lead byte, so counting
 # C3 pairs at C speed (bytes.count / one small regex) adds them without
 # false positives.  This replaced a str.translate fallback that was
@@ -131,7 +127,7 @@ _BDEL_DIGITS = bytes(string.digits, "ascii")
 _BDEL_UPPER = bytes(string.ascii_uppercase, "ascii")
 _BDEL_ALPHA = bytes(string.ascii_letters, "ascii")
 #: U+00C0-U+00DE minus multiplication sign, as UTF-8 pairs
-_RE_L1_UPPER = _re.compile(rb"\xc3[\x80-\x96\x98-\x9e]")
+_RE_L1_UPPER = re.compile(rb"\xc3[\x80-\x96\x98-\x9e]")
 
 
 def text_stats(
@@ -162,8 +158,8 @@ def text_stats(
             n_upper += len(_RE_L1_UPPER.findall(b))
     if tokens is None:
         tokens = text.split()
-    # inlined _is_stopword memo loop (the function-call dispatch was ~8%
-    # of total parse time at 2.3M tokens per 1500 pages)
+    # _STOP_CACHE memo, inlined (a per-token function call was ~8% of
+    # total parse time at 2.3M tokens per 1500 pages)
     cache = _STOP_CACHE
     try:
         # warm-cache fast path: one C-level pass, no per-token bytecode
@@ -214,14 +210,27 @@ for _t in VOID_TAGS:
     _TAG_KIND[_t] = _TAG_KIND.get(_t, 0) | _K_VOID
 del _t
 
+_TOKEN = re.compile(
+    r"<!--.*?(?:-->|$)"          # comments (unterminated -> rest of doc)
+    r"|<!\[CDATA\[.*?(?:\]\]>|$)"
+    r"|<![^>]*>?"                # doctype / other declarations
+    r"|<\?[^>]*>?"               # processing instructions
+    r"|</\s*([a-zA-Z][a-zA-Z0-9:-]*)[^>]*>"   # end tag  (group 1)
+    r"|<([a-zA-Z][a-zA-Z0-9:-]*)((?:[^>])*?)(/?)>",  # start tag (2,3,4)
+    re.S,
+)
 
-class _BlockCollector(HTMLParser):
+#: elements whose raw content is skipped up to the matching close tag
+#: (nested-tag bookkeeping inside noscript/template/svg stays live)
+_RAWTEXT = ("script", "style")
+
+
+class _BlockCollector:
     """Streams text into the nearest open block element; flushes a node on
     every block boundary.  Anchor (<a>) nesting is tracked so link-char
     counts are exact."""
 
     def __init__(self, max_nodes: int) -> None:
-        super().__init__(convert_charrefs=True)
         self.max_nodes = max_nodes
         self.nodes: List[Dict[str, Any]] = []
         self._stack: List[str] = []  # open elements (incl. inline)
@@ -242,7 +251,10 @@ class _BlockCollector(HTMLParser):
     def _push_ctx(self, tag: str, boiler: bool) -> None:
         """Push the container state for a newly-opened element.
 
-        Semantics (identical to the old innermost-ancestor stack walk):
+        A node's "container" field is its innermost semantic sectioning
+        ancestor (article main aside nav footer header): 'footer'-ness
+        of a <p> is invisible from its own tag — the container carries
+        it.  Semantics (identical to an innermost-ancestor stack walk):
           * class/id-flagged boilerplate wrappers count as 'aside';
           * header/footer defer to an ENCLOSING article/main (HTML5
             scoping: an article's own <header> belongs to the article,
@@ -265,23 +277,9 @@ class _BlockCollector(HTMLParser):
         else:
             ctx.append(T)  # transparent element: share the state tuple
 
-    def _current_container(
-        self, extra_tag: str | None = None, extra_flag: bool = False
-    ) -> str:
-        """Innermost semantic sectioning ancestor (O(1) via _ctx),
-        optionally with a not-yet-pushed element on top."""
-        T = self._ctx[-1] if self._ctx else _CTX0
-        if extra_tag is None:
-            return T[0]
-        if extra_flag:
-            return "aside"
-        if extra_tag == "header":
-            return T[1]
-        if extra_tag == "footer":
-            return T[2]
-        if extra_tag in SEMANTIC_CONTAINERS:
-            return extra_tag
-        return T[0]
+    def _current_container(self) -> str:
+        """Container of the innermost open element (O(1) via _ctx)."""
+        return self._ctx[-1][0] if self._ctx else ""
 
     # -- node emission -------------------------------------------------
     def _flush(self) -> None:
@@ -319,8 +317,49 @@ class _BlockCollector(HTMLParser):
         rec["is_fg"] = len(text) > 0
         self.nodes.append(rec)
 
-    # -- HTMLParser hooks ------------------------------------------------
-    def handle_starttag(self, tag, attrs):  # noqa: D401
+    # -- tokenizer --------------------------------------------------------
+    def feed(self, html: str) -> None:
+        """Scan ``html`` with one regex, fire the tag/data events, then
+        flush the last node."""
+        pos = 0
+        n = len(html)
+        lower = None  # lazily lowered copy for rawtext close-tag search
+        # bind the per-event callees once: the loop fires ~200+ events per
+        # page and each dotted lookup costs a dict probe per event
+        handle_data = self.handle_data
+        handle_starttag = self.handle_starttag
+        handle_endtag = self.handle_endtag
+        search = _TOKEN.search
+        while pos < n:
+            m = search(html, pos)
+            stop = n if m is None else m.start()
+            if stop > pos:
+                data = html[pos:stop]
+                handle_data(unescape(data) if "&" in data else data)
+            if m is None:
+                break
+            end_name, start_name, attrs, selfclose = m.group(1, 2, 3, 4)
+            pos = m.end()
+            if end_name is not None:
+                handle_endtag(end_name.lower())
+            elif start_name is not None:
+                tag = start_name.lower()
+                handle_starttag(tag, attrs)
+                if tag in _RAWTEXT and not selfclose:
+                    # skip raw content to the matching close tag (or to
+                    # the end of the document)
+                    if lower is None:
+                        lower = html.lower()
+                    close = lower.find("</" + tag, pos)
+                    gt = -1 if close == -1 else html.find(">", close)
+                    pos = n if gt == -1 else gt + 1
+                    handle_endtag(tag)
+            # else: comment/CDATA/declaration/PI -> ignored
+        self._flush()
+
+    # -- events -----------------------------------------------------------
+    def handle_starttag(self, tag: str, attrs: str) -> None:
+        """``attrs`` is the tag's raw attribute text."""
         kind = _TAG_KIND.get(tag, 0)
         if kind & _K_SKIP:
             self._flush()
@@ -329,7 +368,7 @@ class _BlockCollector(HTMLParser):
                 self._stack.append(tag)
                 self._push_ctx(tag, False)
             return
-        boiler = _attrs_boiler(attrs)
+        boiler = bool(attrs) and _attrs_boiler(attrs)
         if self._skip_depth == 0:
             if kind & _K_MEDIA:
                 self._flush()
@@ -340,16 +379,15 @@ class _BlockCollector(HTMLParser):
                 if tag not in ("br", "hr"):
                     self._block_tag = tag
                     self._block_depth = len(self._stack)
-                    # the block itself may BE a semantic container, or a
-                    # class/id-flagged boilerplate wrapper
-                    self._block_container = self._current_container(
-                        extra_tag=tag, extra_flag=boiler
-                    )
             elif tag == "a":
                 self._anchor_depth += 1
         if not kind & _K_VOID:
             self._stack.append(tag)
             self._push_ctx(tag, boiler)
+            if kind & _K_BLOCK and self._skip_depth == 0:
+                # the block itself may BE a semantic container, or a
+                # class/id-flagged boilerplate wrapper
+                self._block_container = self._current_container()
 
     def handle_endtag(self, tag):
         kind = _TAG_KIND.get(tag, 0)
@@ -381,29 +419,12 @@ class _BlockCollector(HTMLParser):
             self._block_depth = len(stack)
             self._block_container = self._current_container()
 
-    def handle_startendtag(self, tag, attrs):
-        self.handle_starttag(tag, attrs)
-
     def handle_data(self, data):
         if self._skip_depth > 0 or not data:
             return
         self._buf.append(data)
         if self._anchor_depth > 0:
             self._buf_link.append(data)
-
-    def close(self):
-        super().close()
-        self._flush()
-
-
-#: parser backend: 'tokenizer' (fast regex scanner, html_tokenize.py) or
-#: 'htmlparser' (stdlib html.parser).  Node streams are equal on
-#: well-formed pages (tested corpus-wide); oracle and Spark share this
-#: switch so byte-identity holds under either.  Env-controlled so Spark
-#: workers (which import this module from the shipped zip) honor it.
-import os as _os
-
-PARSER_BACKEND = _os.environ.get("PSS_PARSER_BACKEND", "tokenizer")
 
 
 # -- charset sniffing (deterministic, shared by oracle and Spark) -------
@@ -416,10 +437,10 @@ PARSER_BACKEND = _os.environ.get("PSS_PARSER_BACKEND", "tokenizer")
 # errors='replace', so malformed bytes are still deterministic.
 
 _SNIFF_WINDOW = 2048
-_META_CHARSET = _re.compile(
+_META_CHARSET = re.compile(
     rb"""<meta[^>]+?(?:charset\s*=\s*["']?\s*([a-zA-Z0-9_.:-]+)"""
     rb"""|content\s*=\s*["'][^"']*?charset=([a-zA-Z0-9_.:-]+))""",
-    _re.I,
+    re.I,
 )
 #: WHATWG maps these labels away from their IANA meaning; everything
 #: else goes through Python's codec alias table.
@@ -457,7 +478,7 @@ def decode_page_bytes(raw: bytes) -> str:
 
 
 def parse_html(
-    html: bytes | str, max_nodes: int = 50_000, backend: str | None = None
+    html: bytes | str, max_nodes: int = 50_000
 ) -> List[Dict[str, Any]]:
     """Parse one page into ordered node records.
 
@@ -470,14 +491,7 @@ def parse_html(
         html = decode_page_bytes(bytes(html))
     collector = _BlockCollector(max_nodes=max_nodes)
     try:
-        if (backend or PARSER_BACKEND) == "tokenizer":
-            from page_segmentation_spark.html_tokenize import feed_events
-
-            feed_events(collector, html)
-            collector._flush()
-        else:
-            collector.feed(html)
-            collector.close()
+        collector.feed(html)
     except Exception:
         # malformed page: keep whatever was parsed (never fail a batch)
         collector._flush()

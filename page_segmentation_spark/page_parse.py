@@ -20,23 +20,16 @@ _PDF_MAGIC = b"%PDF-"
 def parse_page(
     content: bytes | str,
     max_nodes: int = 50_000,
-    backend: str | None = None,
     pdf_password: str = "",
 ) -> List[Dict[str, Any]]:
     """Parse one page byte-stream (HTML or PDF) into ordered node records
     (html_parse.NODE_FIELDS contract).  ``pdf_password`` is the user
     password for encrypted PDFs (empty = the owner-locked crawl shape;
     a wrong password degrades, never garbles — see build_decryptor)."""
-    pw = pdf_password.encode("utf-8") if pdf_password else b""
-    if isinstance(content, (bytes, bytearray)):
-        if bytes(content[:5]) == _PDF_MAGIC:
-            return parse_pdf(bytes(content), max_nodes=max_nodes, password=pw)
-        return parse_html(content, max_nodes=max_nodes, backend=backend)
     if isinstance(content, str) and content.startswith("%PDF-"):
         # a PDF that travelled as text: recover the byte stream
-        return parse_pdf(
-            content.encode("latin-1", errors="replace"),
-            max_nodes=max_nodes,
-            password=pw,
-        )
-    return parse_html(content, max_nodes=max_nodes, backend=backend)
+        content = content.encode("latin-1", errors="replace")
+    if isinstance(content, (bytes, bytearray)) and content[:5] == _PDF_MAGIC:
+        pw = pdf_password.encode("utf-8") if pdf_password else b""
+        return parse_pdf(bytes(content), max_nodes=max_nodes, password=pw)
+    return parse_html(content, max_nodes=max_nodes)

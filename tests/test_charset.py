@@ -52,14 +52,6 @@ def test_charset_page_extracts_decoded_text(codec):
     assert "�" not in ext  # no replacement-char soup
 
 
-@pytest.mark.parametrize("codec", sorted(dg.CHARSET_CASES))
-def test_charset_backends_agree(codec):
-    raw = dg.make_charset_page(codec, 3)["html"]
-    assert parse_html(raw, backend="tokenizer") == parse_html(
-        raw, backend="htmlparser"
-    )
-
-
 def test_decode_is_deterministic_on_garbage():
     junk = b"\xff\x00\xfe garbage \x80\x81"
     assert decode_page_bytes(junk) == decode_page_bytes(junk)

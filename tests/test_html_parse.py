@@ -86,3 +86,59 @@ def test_text_stats_lone_surrogates_dont_raise():
     with_surr = text_stats("Hello,\ud800 World 42\udfff", 0)
     for k in ("n_punct", "n_digits", "n_alpha", "n_upper"):
         assert with_surr[k] == base[k], k
+
+
+def _tuples(html):
+    return [
+        (n["tag"], n["container"], n["depth"], n["text"])
+        for n in parse_html(html)
+    ]
+
+
+#: (html, exact node tuples) for the parser's edge cases
+_EDGE_CASES = [
+    # '/>' on a non-void tag is ignored: <div/> opens a div and <script/>
+    # opens a script whose content never ends
+    ("<body><p>a<div/>b</p><script/>c<p>d</p></body>",
+     [("p", "", 1, "a"), ("div", "", 2, "b")]),
+    # tag names are case-insensitive
+    ("<BODY><DIV><P>Up</P></DIV><SCRIPT>x</SCRIPT><Br>z</BODY>",
+     [("p", "", 2, "Up"), ("body", "", 1, "z")]),
+    # an unterminated comment swallows the rest of the document
+    ("<body><p>keep</p><!-- never closed <p>gone</p>", [("p", "", 1, "keep")]),
+    # <script> with no closing tag hides the rest of the document
+    ("<body><p>before</p><script>var a='<p>x</p>';",
+     [("p", "", 1, "before")]),
+    # CDATA sections are dropped like comments
+    ("<body><p>a<![CDATA[hidden <p>q</p>]]>b</p></body>",
+     [("p", "", 1, "ab")]),
+    # character references resolve inside text
+    ("<body><p>fish &amp; chips &lt;3 &#233;</p></body>",
+     [("p", "", 1, "fish & chips <3 é")]),
+    # <br> flushes a node but keeps the enclosing block's tag
+    ("<body><p>line one<br>line two<br/>three</p></body>",
+     [("p", "", 1, "line one"), ("p", "", 1, "line two"),
+      ("p", "", 1, "three")]),
+    # a '>' inside a quoted attribute value ends the tag early
+    ('<body><div title="a>b"><p>x</p></div></body>',
+     [("div", "", 1, 'b">'), ("p", "", 2, "x")]),
+]
+
+
+def test_parser_edge_behaviour_pinned():
+    for html, want in _EDGE_CASES:
+        assert _tuples(html) == want, html
+
+
+def test_class_id_attribute_names_case_insensitive():
+    """Mixed-case class/id attribute names still flag boilerplate."""
+    html = (
+        '<body><div data-x="1" Id="comments"><p>Hi</p></div>'
+        '<div Class="promo"><p>Buy</p></div>'
+        '<div cLaSs="article"><p>Body</p></div></body>'
+    )
+    assert _tuples(html) == [
+        ("p", "aside", 2, "Hi"),
+        ("p", "aside", 2, "Buy"),
+        ("p", "", 2, "Body"),
+    ]

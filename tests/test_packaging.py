@@ -1,6 +1,7 @@
 """ship_package guards (page_segmentation_spark/packaging.py)."""
 
 import os
+import shutil
 import zipfile
 
 from page_segmentation_spark import packaging
@@ -29,3 +30,37 @@ def test_ship_package_noop_when_imported_from_zip(monkeypatch, tmp_path):
 
     assert packaging.ship_package(Boom()) == fake
     assert not os.path.exists(fake)
+
+
+def test_ship_package_path_is_content_addressed(monkeypatch, tmp_path):
+    # two package trees with different sources ship to different paths;
+    # the same tree shipped twice reuses its zip without rewriting it
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    added = []
+
+    class FakeSpark:
+        class sparkContext:  # noqa: N801 - mimics SparkSession attribute
+            addPyFile = staticmethod(added.append)
+
+    paths = []
+    for tree in ("a", "b"):
+        dst = tmp_path / tree / "page_segmentation_spark"
+        shutil.copytree(
+            os.path.dirname(packaging.__file__), dst,
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+        (dst / "probe.py").write_text(f"TREE = {tree!r}\n")
+        monkeypatch.setattr(packaging, "_PKG_DIR", str(dst))
+        paths.append(packaging.ship_package(FakeSpark()))
+        zf = zipfile.ZipFile(paths[-1])
+        assert zf.read("page_segmentation_spark/probe.py") == (
+            f"TREE = {tree!r}\n".encode()
+        )
+    assert paths[0] != paths[1] and added == paths
+
+    os.utime(paths[1], ns=(0, 10**9))  # a rewrite would move the mtime
+    before = os.stat(paths[1])
+    assert packaging.ship_package(FakeSpark()) == paths[1]
+    after = os.stat(paths[1])
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, 10**9)
+    assert not [n for n in os.listdir(tmp_path) if n.endswith(".tmp")]

@@ -142,36 +142,6 @@ def main() -> None:
 
         return _funnel_from_extracted(ext)
 
-    def ftail_full_orig(ext):
-        # the pre-share wiring (no emit_lines / lines_col / padded_col):
-        # gopher re-splits clean_text on '\n' and with_lang_id rebuilds
-        # the padded lower — the round-close A/B baseline for the
-        # cross-operator staging reuse
-        from page_segmentation_spark.functions.staging import (
-            pushdown_barrier,
-        )
-        from page_segmentation_spark.functions.text import fingerprint
-
-        c4 = c4_line_filter(ext, "url", "extracted_text")
-        c4 = pushdown_barrier(c4, ["clean_text", "page_kept"])
-        g = gopher_quality(
-            c4.where(F.col("page_kept") == 1),
-            "url",
-            "clean_text",
-            extra_cols=("clean_text",),
-        )
-        g = pushdown_barrier(g, ["keep"])
-        survivors = g.where(F.col("keep") == 1).select(
-            "url", "clean_text", "n_words"
-        )
-        return with_lang_id(survivors, "clean_text").select(
-            "url",
-            "lang",
-            F.col("n_words").alias("n_tokens"),
-            fingerprint(F.col("clean_text")).alias("content_fp"),
-            "clean_text",
-        )
-
     def tail_dedup(ext):
         from pyspark.sql import Window
 
@@ -202,7 +172,6 @@ def main() -> None:
         "ftail_gopher": lambda: ftail_gopher(ext_table()),
         "ftail_lang": lambda: ftail_lang(ext_table()),
         "ftail_full": lambda: ftail_full(ext_table()),
-        "ftail_full_orig": lambda: ftail_full_orig(ext_table()),
         # non-flagship bench queries on their own inputs
         "span_scrub": lambda: D.duplicate_span_scrub(
             docs(), "doc_id", "text", k=10
@@ -210,12 +179,9 @@ def main() -> None:
         "paragraphs": lambda: D.paragraph_dedup(
             docs(), "doc_id", D.word_chunks(F.col("text"), 3), max_dup=1
         ),
-        "paragraphs_orig": lambda: _paragraphs_orig(docs()),
         "span_scrub_k50": lambda: D.duplicate_span_scrub(
             docs(), "doc_id", "text", k=50
         ),
-        "span_scrub_orig": lambda: _span_scrub_orig(docs(), 10),
-        "span_scrub_orig_k50": lambda: _span_scrub_orig(docs(), 50),
         "a2_vote": lambda: QUERIES_local["a2_vote"](spark, SF_DIR),
         "w1_islands": lambda: QUERIES_local["w1_islands"](spark, SF_DIR),
         "sim_cosine_topk": lambda: QUERIES_local["sim_cosine_topk"](
@@ -226,112 +192,6 @@ def main() -> None:
             n=3, n_perms=8, band_size=1,
         ),
     }
-
-    def _span_scrub_orig(d, k):
-        # round-5 gram stage (per-position md5 of the k-word slice join)
-        # grafted onto the current keeper/rebuild tail, for the rolling-
-        # hash A/B
-        from pyspark.sql import functions as F
-
-        words_arr = F.split(D.normalized(F.col("text")), " ")
-        base = d.select(
-            F.col("doc_id").alias("id"), words_arr.alias("words")
-        ).withColumn("n_words", F.size("words"))
-        starts = F.sequence(
-            F.lit(0), F.greatest(F.col("n_words") - k, F.lit(-1))
-        )
-        grams = base.select(
-            "id",
-            "n_words",
-            F.explode(
-                F.transform(
-                    starts,
-                    lambda p: F.struct(
-                        p.alias("pos"),
-                        F.md5(
-                            F.array_join(F.slice("words", p + 1, k), " ")
-                        ).alias("gh"),
-                    ),
-                )
-            ).alias("g"),
-        ).select(
-            "id", F.col("g.pos").alias("pos"), F.col("g.gh").alias("gh")
-        )
-        keeper = grams.groupBy("gh").agg(
-            F.min(F.struct("id", "pos")).alias("keep"),
-            F.count(F.lit(1)).alias("n_occ"),
-        )
-        dup_starts = (
-            grams.join(keeper, "gh")
-            .where(
-                (F.col("n_occ") > 1)
-                & ~(
-                    (F.col("id") == F.col("keep.id"))
-                    & (F.col("pos") == F.col("keep.pos"))
-                )
-            )
-            .select("id", "pos")
-        )
-        covered = dup_starts.select(
-            "id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + (k - 1))
-            ).alias("wpos"),
-        ).distinct()
-        positioned = base.select(
-            "id", "n_words", F.posexplode("words").alias("wpos", "word")
-        )
-        survivors = positioned.join(covered, ["id", "wpos"], "left_anti")
-        rebuilt = survivors.groupBy("id").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("wpos", "word"))),
-                    lambda x: x.getField("word"),
-                ),
-                " ",
-            ).alias("clean_text"),
-            F.count(F.lit(1)).alias("n_kept"),
-        )
-        return (
-            base.select("id", "n_words")
-            .join(rebuilt, "id", "left")
-            .select(
-                F.col("id").alias("doc_id"),
-                F.coalesce(F.col("clean_text"), F.lit("")).alias(
-                    "clean_text"
-                ),
-                F.col("n_words"),
-                (
-                    F.col("n_words")
-                    - F.coalesce(F.col("n_kept"), F.lit(0))
-                ).alias("n_scrubbed"),
-            )
-        )
-
-    def _paragraphs_orig(d):
-        # round-5 paragraph_dedup stage 1 (no explicit repartition) for A/B
-        ex = d.select(
-            F.col("doc_id"),
-            F.posexplode(D.word_chunks(F.col("text"), 3)).alias(
-                "pos", "para"
-            ),
-        ).withColumn("para_hash", F.md5(F.col("para")))
-        freq = ex.groupBy("para_hash").agg(F.count(F.lit(1)).alias("n_occ"))
-        marked = ex.join(freq, "para_hash").withColumn(
-            "kept", F.col("n_occ") <= 1
-        )
-        kept_struct = F.when(F.col("kept"), F.struct("pos", "para"))
-        return marked.groupBy("doc_id").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(kept_struct)),
-                    lambda x: x.getField("para"),
-                ),
-                " ",
-            ).alias("clean_text"),
-            F.count(F.when(F.col("kept"), F.lit(1))).alias("n_kept"),
-            F.count(F.when(~F.col("kept"), F.lit(1))).alias("n_removed"),
-        )
 
     if not args or args[0] == "list":
         print("jobs:", ", ".join(sorted(JOBS)))
