@@ -7,50 +7,27 @@ length cap, weights, bias) bundle — the multi-scale context windows ARE
 the conv/pool pyramid of the 1-D model, so varying their radii is the
 honest equivalent of varying encoder depth.  Dispatch mirrors the
 span-former registry (oracle.SPAN_CUTTERS): look up by name from
-:class:`~page_segmentation_spark.config.ExtractSettings`.
+:class:`~page_segmentation_spark.config.ExtractSettings`.  The
+:class:`~page_segmentation_spark.functions.scorer_core.Arch` bundle and
+the default ``BASE`` live in scorer_core; the heads here vary it.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import replace
 from typing import Dict, List
 
 from page_segmentation_spark.config import CLS_MAIN
-from page_segmentation_spark.functions import scorer_core as sc
-
-
-@dataclass(frozen=True)
-class Arch:
-    """One named scorer configuration.  Weights/bias rows follow
-    scorer_core.FEATURE_NAMES order; radii set the context windows of
-    oracle.node_features."""
-
-    name: str
-    weights: Dict[int, List[float]]
-    bias: Dict[int, float]
-    local_radius: int = sc.LOCAL_RADIUS
-    section_radius: int = sc.SECTION_RADIUS
-    directional_radius: int = sc.DIRECTIONAL_RADIUS
-    chars_norm_cap: float = sc.CHARS_NORM_CAP
-
-
-#: the default architecture — exactly the module-level scorer_core
-#: constants (arch=None paths and this object are interchangeable).
-BASE = Arch(
-    name="base",
-    weights=sc.WEIGHTS,
-    bias=sc.BIAS,
-)
+from page_segmentation_spark.functions.scorer_core import BASE, Arch
 
 #: wider multi-scale context: local ±3, section ±12, directional ±4 —
 #: the "deeper encoder" variant (more smoothing, steadier on long
 #: documents; slightly slower to react at content/boilerplate borders).
 #: Same weight head: the (2r+1) feature normalization keeps the context
 #: features on the same scale, so the head transfers.
-WIDE_CONTEXT = Arch(
+WIDE_CONTEXT = replace(
+    BASE,
     name="wide_context",
-    weights=sc.WEIGHTS,
-    bias=sc.BIAS,
     local_radius=3,
     section_radius=12,
     directional_radius=4,
@@ -59,10 +36,9 @@ WIDE_CONTEXT = Arch(
 #: tighter windows: local ±1, section ±4, directional ±2 — the "shallow
 #: encoder": reacts immediately at content/boilerplate borders, best on
 #: short chatty pages where ±8 smoothing bleeds across regions.
-LOCAL_FINE = Arch(
+LOCAL_FINE = replace(
+    BASE,
     name="local_fine",
-    weights=sc.WEIGHTS,
-    bias=sc.BIAS,
     local_radius=1,
     section_radius=4,
     directional_radius=2,
@@ -74,21 +50,15 @@ LOCAL_FINE = Arch(
 #: false-positive boilerplate sentence in the corpus costs more than a
 #: dropped caption.  Weight rows are shared; only the bias literal moves,
 #: so the byte-identity fold is unchanged in shape.
-PRECISION = Arch(
-    name="precision",
-    weights=sc.WEIGHTS,
-    bias={**sc.BIAS, CLS_MAIN: -1.2},
+PRECISION = replace(
+    BASE, name="precision", bias={**BASE.bias, CLS_MAIN: -1.2}
 )
 
 #: recall-oriented head: base windows, main-class bias raised from -0.4
 #: to +0.4 — borderline nodes (short paragraphs, captions near link
 #: blocks) are kept.  The mirror of 'precision': for corpora where a
 #: dropped real sentence costs more than an occasional boilerplate one.
-RECALL = Arch(
-    name="recall",
-    weights=sc.WEIGHTS,
-    bias={**sc.BIAS, CLS_MAIN: 0.4},
-)
+RECALL = replace(BASE, name="recall", bias={**BASE.bias, CLS_MAIN: 0.4})
 
 #: long-document tuning: section ±16 and directional ±5 windows with the
 #: char-density cap raised 3.0 -> 5.0 — dense long-form pages (docs,
@@ -96,10 +66,9 @@ RECALL = Arch(
 #: hold context across figure/blockquote interruptions and the length
 #: feature saturates early.  Same head: the (2r+1) normalization keeps
 #: context features on a shared scale.
-LONG_DOC = Arch(
+LONG_DOC = replace(
+    BASE,
     name="long_doc",
-    weights=sc.WEIGHTS,
-    bias=sc.BIAS,
     section_radius=16,
     directional_radius=5,
     chars_norm_cap=5.0,
@@ -130,15 +99,10 @@ _TRAINED_V1_WEIGHTS: Dict[int, List[float]] = {
 }
 _TRAINED_V1_BIAS: Dict[int, float] = {0: 5.711999, 1: -0.210790, 2: -5.501209}
 
-#: the trained architecture — the register_architecture path exercised
-#: end-to-end: plans/train.py fit these weights on construction GT; the
-#: deterministic scorer then folds them exactly like the hand-set
-#: heads.
-TRAINED_V1 = Arch(
-    name="trained_v1",
-    weights=_TRAINED_V1_WEIGHTS,
-    bias=_TRAINED_V1_BIAS,
-)
+#: the trained architecture: plans/train.py fit these weights on
+#: construction GT; the deterministic scorer folds them exactly like the
+#: hand-set heads.
+TRAINED_V1 = Arch("trained_v1", _TRAINED_V1_WEIGHTS, _TRAINED_V1_BIAS)
 
 ARCHITECTURES: Dict[str, Arch] = {
     a.name: a
@@ -162,5 +126,7 @@ def find_architecture(name: str) -> Arch:
 
 def register_architecture(arch: Arch) -> None:
     """Extension point: ship trained weights as a new named architecture
-    (the plans/train.py export path can feed this)."""
+    (``Arch(name, *plans.train.train_scorer(...))``), then select it
+    with ``ExtractSettings(architecture=name)``.  The extraction plans
+    resolve the name on the driver and ship the Arch to executors."""
     ARCHITECTURES[arch.name] = arch

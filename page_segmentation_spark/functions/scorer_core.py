@@ -21,6 +21,7 @@ Determinism contract (byte-identical output under any partitioning):
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Dict, List, Sequence
 
 from page_segmentation_spark.config import (
@@ -76,9 +77,33 @@ FEATURE_NAMES: List[str] = [
 ]
 N_FEATURES = len(FEATURE_NAMES)
 
-#: fixed scorer weights, class id -> per-feature weight row (+ bias).
-#: Shipped as literals (the "deterministic weights npz" of SURVEY §7) so
-#: both sides embed identical doubles.
+
+@dataclass(frozen=True)
+class Arch:
+    """One named scorer configuration — the only way weights, bias,
+    window radii and the length cap reach the scorer.  Weight/bias rows
+    follow :data:`FEATURE_NAMES` order; the radii set the context
+    windows of ``oracle.node_features``."""
+
+    name: str
+    weights: Dict[int, List[float]]
+    bias: Dict[int, float]
+    local_radius: int = 2
+    section_radius: int = 8
+    #: one-sided lookahead/lookbehind for the directional link features —
+    #: a sidebar/nav header is FOLLOWED by a link list; symmetric windows
+    #: can't see the asymmetry (the conv analog of a directional kernel).
+    directional_radius: int = 3
+    #: cap on the length-ratio features (f0/f10/f12): "longer than
+    #: typical" saturates at 3x — on boilerplate-only pages char_med is
+    #: tiny (median of nav-link texts) and an unbounded ratio lets one
+    #: modest footer line overwhelm every link-density signal.
+    chars_norm_cap: float = 3.0
+
+
+#: the default architecture: the shipped scorer literals (the
+#: "deterministic weights npz" of SURVEY §7), class id -> per-feature
+#: weight row (+ bias).
 #: f20 (in_boiler_container) is DECISIVE by design: ±5.5 exceeds the
 #: maximum main-vs-boiler margin any prose node can assemble from the
 #: other features (~+6.5 observed, ~+10.6 theoretical bound → swing 11),
@@ -87,32 +112,21 @@ N_FEATURES = len(FEATURE_NAMES)
 #: share bars) never extracts.  Legitimate article headers survive via
 #: the parser's HTML5 scoping rule (header/footer inside article/main
 #: resolve to the article, html_parse._BlockCollector._push_ctx).
-WEIGHTS: Dict[int, List[float]] = {
-    CLS_BOILER: [-0.8, 3.0, -0.5, -0.5, 0.1, -0.5, 2.0, 0.0,
-                 0.5, 0.8, -0.1, 2.0, -0.05, 1.0, 0.5, 0.2,
-                 2.0, 1.0, -0.35, -1.0, 5.5],
-    CLS_MAIN: [1.2, -4.0, 1.5, 2.0, -0.1, 1.0, -2.0, -4.0,
-               -1.0, -0.8, 0.25, -2.5, 0.15, -1.0, -0.5, -0.2,
-               -2.5, -0.5, 0.35, 1.0, -5.5],
-    CLS_MEDIA: [-2.0, 0.0, 0.0, 0.0, 0.0, -1.0, -1.0, 6.0,
-                0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
-                0.0, 0.0, 0.0, 0.0, 0.0],
-}
-BIAS: Dict[int, float] = {CLS_BOILER: 0.5, CLS_MAIN: -0.4, CLS_MEDIA: -1.5}
-CLASS_ORDER = [CLS_BOILER, CLS_MAIN, CLS_MEDIA]
-
-#: cap on the length-ratio features (f0/f10/f12): "longer than typical"
-#: saturates at 3x — on boilerplate-only pages char_med is tiny (median
-#: of nav-link texts) and an unbounded ratio lets one modest footer line
-#: overwhelm every link-density signal.
-CHARS_NORM_CAP = 3.0
-
-LOCAL_RADIUS = 2
-SECTION_RADIUS = 8
-#: one-sided lookahead/lookbehind for the directional link features —
-#: a sidebar/nav header is FOLLOWED by a link list; symmetric windows
-#: can't see the asymmetry (the conv analog of a directional kernel).
-DIRECTIONAL_RADIUS = 3
+BASE = Arch(
+    name="base",
+    weights={
+        CLS_BOILER: [-0.8, 3.0, -0.5, -0.5, 0.1, -0.5, 2.0, 0.0,
+                     0.5, 0.8, -0.1, 2.0, -0.05, 1.0, 0.5, 0.2,
+                     2.0, 1.0, -0.35, -1.0, 5.5],
+        CLS_MAIN: [1.2, -4.0, 1.5, 2.0, -0.1, 1.0, -2.0, -4.0,
+                   -1.0, -0.8, 0.25, -2.5, 0.15, -1.0, -0.5, -0.2,
+                   -2.5, -0.5, 0.35, 1.0, -5.5],
+        CLS_MEDIA: [-2.0, 0.0, 0.0, 0.0, 0.0, -1.0, -1.0, 6.0,
+                    0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
+                    0.0, 0.0, 0.0, 0.0, 0.0],
+    },
+    bias={CLS_BOILER: 0.5, CLS_MAIN: -0.4, CLS_MEDIA: -1.5},
+)
 
 
 def exact_median(sorted_vals: Sequence[int]) -> float:
@@ -142,22 +156,15 @@ def build_features(
     fwd_link: int = 0,
     bwd_chars: int = 0,
     bwd_link: int = 0,
-    arch=None,
+    arch: Arch = BASE,
 ) -> List[float]:
     """Assemble the feature vector for one node
     (:func:`page_segmentation_spark.oracle.node_features` supplies the
-    window sums).  ``arch`` (an :class:`~page_segmentation_spark.functions.architectures
-    .Arch`) sets the window radii whose (2r+1) widths normalize the
-    context sums, and the length cap; None = the base architecture."""
-    loc_w, sec_w, cap = (
-        (5.0, 17.0, CHARS_NORM_CAP)
-        if arch is None
-        else (
-            2.0 * arch.local_radius + 1.0,
-            2.0 * arch.section_radius + 1.0,
-            arch.chars_norm_cap,
-        )
-    )
+    window sums).  ``arch`` sets the window radii whose (2r+1) widths
+    normalize the context sums, and the length cap."""
+    loc_w = 2.0 * arch.local_radius + 1.0
+    sec_w = 2.0 * arch.section_radius + 1.0
+    cap = arch.chars_norm_cap
     tag = node["tag"]
     return [
         min(node["n_chars"] / (char_med + 1.0), cap),
@@ -184,40 +191,27 @@ def build_features(
     ]
 
 
-def logit(features: Sequence[float], cls: int, arch=None) -> float:
-    """Sequential fold, fixed order, starting from the bias."""
-    acc = BIAS[cls] if arch is None else arch.bias[cls]
-    w = WEIGHTS[cls] if arch is None else arch.weights[cls]
-    for i in range(N_FEATURES):
-        acc = acc + features[i] * w[i]
-    return acc
-
-
-def classify(features: Sequence[float], arch=None) -> int:
+def classify(features: Sequence[float], arch: Arch = BASE) -> int:
     """First-max argmax over class logits (lowest class id wins ties),
     matching np.argmax semantics in the reference CC vote
     (reference lib/postprocess.py:23).
 
-    The three logits are folded in ONE pass over the feature vector
-    (three accumulators advanced in lockstep) — each accumulator sees
-    exactly the :func:`logit` sequential order, so every logit value is
-    bit-identical to the unfused form; the fusion only removes the
-    3x feature re-iteration and call dispatch (this is the extraction
-    hot loop)."""
-    c0, c1, c2 = CLASS_ORDER
-    if arch is None:
-        w, b = WEIGHTS, BIAS
-    else:
-        w, b = arch.weights, arch.bias
-    a0, a1, a2 = b[c0], b[c1], b[c2]
-    for f, x0, x1, x2 in zip(features, w[c0], w[c1], w[c2]):
+    Each logit is the sequential fold ``acc + f[i]*w[i]`` in feature
+    order starting from the bias; the three folds advance in lockstep in
+    ONE pass over the feature vector, which leaves every logit value
+    bit-identical to folding it alone and only removes the 3x feature
+    re-iteration (this is the extraction hot loop)."""
+    w, b = arch.weights, arch.bias
+    a0, a1, a2 = b[CLS_BOILER], b[CLS_MAIN], b[CLS_MEDIA]
+    for f, x0, x1, x2 in zip(
+        features, w[CLS_BOILER], w[CLS_MAIN], w[CLS_MEDIA]
+    ):
         a0 = a0 + f * x0
         a1 = a1 + f * x1
         a2 = a2 + f * x2
-    best_cls = c0
-    best = a0
+    best, best_cls = a0, CLS_BOILER
     if a1 > best:
-        best, best_cls = a1, c1
+        best, best_cls = a1, CLS_MAIN
     if a2 > best:
-        best_cls = c2
+        best_cls = CLS_MEDIA
     return best_cls

@@ -221,8 +221,11 @@ _TOKEN = re.compile(
 )
 
 #: elements whose raw content is skipped up to the matching close tag
-#: (nested-tag bookkeeping inside noscript/template/svg stays live)
-_RAWTEXT = ("script", "style")
+#: (nested-tag bookkeeping inside noscript/template/svg stays live),
+#: each with its close-tag pattern.  The search runs on the page itself,
+#: ASCII-case-insensitively: a lowered copy would shift every index
+#: after a U+0130, the one code point whose str.lower() grows.
+_RAWTEXT = {t: re.compile(f"(?ai)</{t}").search for t in ("script", "style")}
 
 
 class _BlockCollector:
@@ -323,7 +326,6 @@ class _BlockCollector:
         flush the last node."""
         pos = 0
         n = len(html)
-        lower = None  # lazily lowered copy for rawtext close-tag search
         # bind the per-event callees once: the loop fires ~200+ events per
         # page and each dotted lookup costs a dict probe per event
         handle_data = self.handle_data
@@ -348,10 +350,8 @@ class _BlockCollector:
                 if tag in _RAWTEXT and not selfclose:
                     # skip raw content to the matching close tag (or to
                     # the end of the document)
-                    if lower is None:
-                        lower = html.lower()
-                    close = lower.find("</" + tag, pos)
-                    gt = -1 if close == -1 else html.find(">", close)
+                    close = _RAWTEXT[tag](html, pos)
+                    gt = -1 if close is None else html.find(">", close.start())
                     pos = n if gt == -1 else gt + 1
                     handle_endtag(tag)
             # else: comment/CDATA/declaration/PI -> ignored

@@ -77,18 +77,17 @@ def char_median(nodes: List[Dict[str, Any]]) -> float:
 
 
 def node_features(
-    nodes: List[Dict[str, Any]], arch=None
+    nodes: List[Dict[str, Any]], arch: sc.Arch = sc.BASE
 ) -> Tuple[List[List[float]], float]:
     """Stages 2-3: per-node feature vectors (scorer_core.FEATURE_NAMES
     order) and the per-document char_med they are normalized by.
-    ``arch`` selects a named architecture's radii and cap (None = base)."""
+    ``arch`` supplies the window radii and the length cap."""
     if not nodes:
         return [], 0.0
     med = char_median(nodes)
     chars = [n["n_chars"] for n in nodes]
     links = [n["n_link_chars"] for n in nodes]
-    loc_r = sc.LOCAL_RADIUS if arch is None else arch.local_radius
-    sec_r = sc.SECTION_RADIUS if arch is None else arch.section_radius
+    loc_r, sec_r = arch.local_radius, arch.section_radius
     n_n = len(nodes)
     pc = _prefix(chars)
     pl = _prefix(links)
@@ -96,7 +95,7 @@ def node_features(
     loc_l = _sums_from_prefix(pl, n_n, -loc_r, loc_r)
     sec_c = _sums_from_prefix(pc, n_n, -sec_r, sec_r)
     sec_l = _sums_from_prefix(pl, n_n, -sec_r, sec_r)
-    r = sc.DIRECTIONAL_RADIUS if arch is None else arch.directional_radius
+    r = arch.directional_radius
     fwd_c = _sums_from_prefix(pc, n_n, 1, r)
     fwd_l = _sums_from_prefix(pl, n_n, 1, r)
     bwd_c = _sums_from_prefix(pc, n_n, -r, -1)
@@ -114,7 +113,7 @@ def node_features(
 
 
 def score_nodes(
-    nodes: List[Dict[str, Any]], arch=None
+    nodes: List[Dict[str, Any]], arch: sc.Arch = sc.BASE
 ) -> Tuple[List[int], float]:
     """Stages 2-4: per-node predicted class (raw, pre-vote) and
     char_med."""
@@ -122,166 +121,32 @@ def score_nodes(
     return [sc.classify(f, arch) for f in feats], med
 
 
-def cc_majority_vote(
-    nodes: List[Dict[str, Any]], preds: List[int]
-) -> List[int]:
-    """Stage 5: connected components = maximal runs of consecutive fg
-    nodes sharing the same (tag, container) (the 1-D analog of a
-    glyph/blob-scale binary component — structurally homogeneous, smaller
-    than a region; a footer paragraph is not the same component as an
-    adjacent article paragraph); every member gets the run's most
-    frequent class, ties to the lowest class id (np.argmax(bins[1:])
-    first-max, reference lib/postprocess.py:19-24).  Non-fg nodes keep
-    their raw prediction (only binary-fg pixels belong to components in
-    the reference)."""
-    voted = list(preds)
+def _runs(keys: List[Any]) -> List[Tuple[int, int, Any]]:
+    """Maximal runs of equal consecutive keys as (start, end_exclusive,
+    key) — the one run scanner behind the CC vote and every span former
+    (the reference's islands: lib/postprocess.py:9-26 components,
+    lib/xycut.py:112-117 gaps)."""
+    runs = []
+    n = len(keys)
     i = 0
-    n = len(nodes)
     while i < n:
-        if not nodes[i]["is_fg"]:
-            i += 1
-            continue
-        j = i
-        while (
-            j < n
-            and nodes[j]["is_fg"]
-            and nodes[j]["tag"] == nodes[i]["tag"]
-            and nodes[j]["container"] == nodes[i]["container"]
-        ):
+        key = keys[i]
+        j = i + 1
+        while j < n and keys[j] == key:
             j += 1
-        counts: Dict[int, int] = {}
-        for k in range(i, j):
-            counts[preds[k]] = counts.get(preds[k], 0) + 1
-        win = min(
-            counts, key=lambda c: (-counts[c], c)
-        )  # max count, lowest class id on ties
-        for k in range(i, j):
-            voted[k] = win
+        runs.append((i, j, key))
         i = j
-    return voted
+    return runs
 
 
-def cut_spans(
-    nodes: List[Dict[str, Any]],
-    voted: List[int],
-    settings: ExtractSettings,
-    char_med: float,
-) -> List[Tuple[int, int, int]]:
-    """Stages 6-7: (start_idx, end_idx_inclusive, n_main) spans.
-
-    indicator = node is fg AND voted main; dilate by radius; merge gaps
-    shorter than split_size (W4-derived); keep segments with at least
-    min_main original main nodes (px_threshold analog,
-    reference lib/xycut.py:148,166,170)."""
-    n = len(nodes)
-    if n == 0:
-        return []
-    split_size, _ = derive_thresholds(char_med)
-    min_main = settings.min_main_nodes
-    ind = [
-        1 if (voted[i] == CLS_MAIN and nodes[i]["is_fg"]) else 0
-        for i in range(n)
+def _main_indicator(
+    nodes: List[Dict[str, Any]], voted: List[int]
+) -> List[int]:
+    """The span formers' input: 1 where the node is fg AND voted main."""
+    return [
+        1 if (v == CLS_MAIN and node["is_fg"]) else 0
+        for node, v in zip(nodes, voted)
     ]
-    # dilation: windowed max, radius settings.dilate_radius (P15)
-    r = settings.dilate_radius
-    dil = [
-        1 if any(ind[max(0, i - r): min(n, i + r + 1)]) else 0
-        for i in range(n)
-    ]
-    # merge gaps < split_size that lie BETWEEN segments (sentinel gaps at
-    # the borders are never merged — reference adds Gap(0,0)/Gap(len,0)
-    # sentinels instead, lib/xycut.py:165-166)
-    merged = list(dil)
-    i = 0
-    while i < n:
-        if merged[i] == 0:
-            j = i
-            while j < n and merged[j] == 0:
-                j += 1
-            interior = i > 0 and j < n
-            if interior and (j - i) < split_size:
-                for k in range(i, j):
-                    merged[k] = 1
-            i = j
-        else:
-            i += 1
-    # islands of merged==1 -> spans; trim each island to its raw-main
-    # extents (dilation is for connectivity only — segments cover exactly
-    # the content extent, like xy-cut segments between gaps); keep those
-    # with >= min_main raw main nodes.
-    spans: List[Tuple[int, int, int]] = []
-    i = 0
-    while i < n:
-        if merged[i] == 1:
-            j = i
-            while j < n and merged[j] == 1:
-                j += 1
-            members = [k for k in range(i, j) if ind[k] == 1]
-            # trailing-heading trim:
-            # a heading ending a span announces content OUTSIDE the span;
-            # end at the last non-heading main node instead.  A span whose
-            # main nodes are ALL headings has no content and is dropped.
-            content = [
-                k for k in members if nodes[k]["tag"] not in HEADING_TAGS
-            ]
-            members = [k for k in members if content and k <= content[-1]]
-            if len(members) >= min_main and members:
-                spans.append((members[0], members[-1], len(members)))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
-def cut_spans_xycut(
-    nodes: List[Dict[str, Any]],
-    voted: List[int],
-    settings: ExtractSettings,
-    char_med: float,
-) -> List[Tuple[int, int, int]]:
-    """Single-document twin of :func:`operators.spans.xycut_spans` (W3,
-    reference lib/xycut.py:127-173): kept gaps = maximal zero-runs of the
-    indicator with length >= split_size (border runs included); segments
-    = maximal runs outside kept gaps (short gaps swallowed); keep
-    segments with length > px_threshold AND at least one main node.
-    Spans cover the FULL segment extent (not main-trimmed — mirror of
-    the Spark form's min/max(node_idx) over the segment)."""
-    n = len(nodes)
-    if n == 0:
-        return []
-    split_size, _ = derive_thresholds(char_med)
-    px_threshold = settings.min_main_nodes
-    ind = [
-        1 if (voted[i] == CLS_MAIN and nodes[i]["is_fg"]) else 0
-        for i in range(n)
-    ]
-    in_kept_gap = [False] * n
-    i = 0
-    while i < n:
-        if ind[i] == 0:
-            j = i
-            while j < n and ind[j] == 0:
-                j += 1
-            if j - i >= split_size:
-                for k in range(i, j):
-                    in_kept_gap[k] = True
-            i = j
-        else:
-            i += 1
-    spans: List[Tuple[int, int, int]] = []
-    i = 0
-    while i < n:
-        if not in_kept_gap[i]:
-            j = i
-            while j < n and not in_kept_gap[j]:
-                j += 1
-            span_main = sum(ind[i:j])
-            if (j - i) > px_threshold and span_main > 0:
-                spans.append((i, j - 1, span_main))
-            i = j
-        else:
-            i += 1
-    return spans
 
 
 def _wmax(vals: List[int], r: int) -> List[int]:
@@ -299,6 +164,110 @@ def _wmin(vals: List[int], r: int) -> List[int]:
     ]
 
 
+def cc_majority_vote(
+    nodes: List[Dict[str, Any]], preds: List[int]
+) -> List[int]:
+    """Stage 5: connected components = maximal runs of consecutive fg
+    nodes sharing the same (tag, container) (the 1-D analog of a
+    glyph/blob-scale binary component — structurally homogeneous, smaller
+    than a region; a footer paragraph is not the same component as an
+    adjacent article paragraph); every member gets the run's most
+    frequent class, ties to the lowest class id (np.argmax(bins[1:])
+    first-max, reference lib/postprocess.py:19-24).  Non-fg nodes keep
+    their raw prediction (only binary-fg pixels belong to components in
+    the reference)."""
+    voted = list(preds)
+    keys = [
+        (node["tag"], node["container"]) if node["is_fg"] else None
+        for node in nodes
+    ]
+    for i, j, key in _runs(keys):
+        if key is None:
+            continue
+        counts: Dict[int, int] = {}
+        for p in preds[i:j]:
+            counts[p] = counts.get(p, 0) + 1
+        win = min(
+            counts, key=lambda c: (-counts[c], c)
+        )  # max count, lowest class id on ties
+        voted[i:j] = [win] * (j - i)
+    return voted
+
+
+def cut_spans(
+    nodes: List[Dict[str, Any]],
+    voted: List[int],
+    settings: ExtractSettings,
+    char_med: float,
+) -> List[Tuple[int, int, int]]:
+    """Stages 6-7: (start_idx, end_idx_inclusive, n_main) spans.
+
+    indicator = node is fg AND voted main; dilate by radius; merge gaps
+    shorter than split_size (W4-derived); keep segments with at least
+    min_main original main nodes (px_threshold analog,
+    reference lib/xycut.py:148,166,170)."""
+    n = len(nodes)
+    split_size, _ = derive_thresholds(char_med)
+    min_main = settings.min_main_nodes
+    ind = _main_indicator(nodes, voted)
+    # dilation: windowed max, radius settings.dilate_radius (P15)
+    dil = _wmax(ind, settings.dilate_radius)
+    # merge gaps < split_size that lie BETWEEN segments (sentinel gaps at
+    # the borders are never merged — reference adds Gap(0,0)/Gap(len,0)
+    # sentinels instead, lib/xycut.py:165-166)
+    merged = list(dil)
+    for i, j, v in _runs(dil):
+        if not v and i > 0 and j < n and (j - i) < split_size:
+            merged[i:j] = [1] * (j - i)
+    # islands of merged==1 -> spans; trim each island to its raw-main
+    # extents (dilation is for connectivity only — segments cover exactly
+    # the content extent, like xy-cut segments between gaps); keep those
+    # with >= min_main raw main nodes.
+    spans: List[Tuple[int, int, int]] = []
+    for i, j, v in _runs(merged):
+        if not v:
+            continue
+        members = [k for k in range(i, j) if ind[k] == 1]
+        # trailing-heading trim:
+        # a heading ending a span announces content OUTSIDE the span;
+        # end at the last non-heading main node instead.  A span whose
+        # main nodes are ALL headings has no content and is dropped.
+        content = [k for k in members if nodes[k]["tag"] not in HEADING_TAGS]
+        members = [k for k in members if content and k <= content[-1]]
+        if len(members) >= min_main and members:
+            spans.append((members[0], members[-1], len(members)))
+    return spans
+
+
+def cut_spans_xycut(
+    nodes: List[Dict[str, Any]],
+    voted: List[int],
+    settings: ExtractSettings,
+    char_med: float,
+) -> List[Tuple[int, int, int]]:
+    """Single-document twin of :func:`operators.spans.xycut_spans` (W3,
+    reference lib/xycut.py:127-173): kept gaps = maximal zero-runs of the
+    indicator with length >= split_size (border runs included); segments
+    = maximal runs outside kept gaps (short gaps swallowed); keep
+    segments with length > px_threshold AND at least one main node.
+    Spans cover the FULL segment extent (not main-trimmed — mirror of
+    the Spark form's min/max(node_idx) over the segment)."""
+    n = len(nodes)
+    split_size, _ = derive_thresholds(char_med)
+    px_threshold = settings.min_main_nodes
+    ind = _main_indicator(nodes, voted)
+    in_kept_gap = [False] * n
+    for i, j, v in _runs(ind):
+        if not v and j - i >= split_size:
+            in_kept_gap[i:j] = [True] * (j - i)
+    spans: List[Tuple[int, int, int]] = []
+    for i, j, gap in _runs(in_kept_gap):
+        span_main = sum(ind[i:j])
+        if not gap and (j - i) > px_threshold and span_main > 0:
+            spans.append((i, j - 1, span_main))
+    return spans
+
+
 def cut_spans_morphological(
     nodes: List[Dict[str, Any]],
     voted: List[int],
@@ -312,31 +281,17 @@ def cut_spans_morphological(
     extents, in reading order) kept when they hold >= min_main raw main
     nodes.  Kernel widths at node granularity: k1=2 (close), k_open=1
     (noise removal)."""
-    n = len(nodes)
-    if n == 0:
-        return []
     min_main = settings.min_main_nodes
     k1, k_open = 2, 1
-    ind = [
-        1 if (voted[i] == CLS_MAIN and nodes[i]["is_fg"]) else 0
-        for i in range(n)
-    ]
+    ind = _main_indicator(nodes, voted)
     m1 = _wmin(_wmax(ind, k1), k1)                       # close
     m2 = _wmax(_wmin(m1, k_open), k_open)                # open
     m3 = _wmin(_wmax(_wmax(m2, k1), k1), k1)             # dilate + close
     spans: List[Tuple[int, int, int]] = []
-    i = 0
-    while i < n:
-        if m3[i] == 1:
-            j = i
-            while j < n and m3[j] == 1:
-                j += 1
-            span_main = sum(ind[i:j])
-            if span_main >= min_main:
-                spans.append((i, j - 1, span_main))
-            i = j
-        else:
-            i += 1
+    for i, j, v in _runs(m3):
+        span_main = sum(ind[i:j])
+        if v and span_main >= min_main:
+            spans.append((i, j - 1, span_main))
     return spans
 
 
@@ -394,7 +349,7 @@ def selected_nodes(
 class Engine(NamedTuple):
     """The names in :class:`ExtractSettings`, resolved."""
 
-    arch: Any
+    arch: sc.Arch
     vote: bool
     cut: Callable
 
@@ -402,10 +357,11 @@ class Engine(NamedTuple):
 def resolve(settings: ExtractSettings) -> Engine:
     """Resolve the architecture, post_process chain and span former that
     ``settings`` name; an unknown name raises (KeyError for the
-    architecture, ValueError otherwise).  The Spark plans call this on
+    architecture, ValueError otherwise), as does a negative
+    ``dilate_radius``.  The Spark plans call this on
     the driver while the plan is built and ship the result inside the
     kernel closure, so executors score with the driver's Arch object —
-    custom registrations and :func:`plans.train.apply_weights` included.
+    custom registrations included.
     The vote is idempotent and the other stages leave predictions as
     they are, so the chain reduces to "does any stage vote"."""
     stages = [
@@ -421,6 +377,10 @@ def resolve(settings: ExtractSettings) -> Engine:
         raise ValueError(
             f"unknown span_former {settings.span_former!r}: "
             f"{sorted(SPAN_CUTTERS)}"
+        )
+    if settings.dilate_radius < 0:
+        raise ValueError(
+            f"dilate_radius must be >= 0, got {settings.dilate_radius}"
         )
     return Engine(
         find_architecture(settings.architecture),

@@ -13,8 +13,9 @@ Parity points:
   * per-epoch shuffle (X5, lib/network.py:134-135) -> orderBy(rand(seed))
     handled by ml's own sampling; exposed as epoch_shuffle for parity
   * eval (lib/trainer.py:152-159) -> metrics aggregations (A5-A9)
-  * the trained weights export in scorer_core.WEIGHTS format so a run
-    can ship them back into the deterministic extraction scorer.
+  * the trained weights export as an Arch's weights/bias, so a run
+    ships them into the deterministic extraction scorer as a registered
+    architecture (functions/architectures.register_architecture).
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from page_segmentation_spark import metrics as M
-from page_segmentation_spark.functions import scorer_core as sc
 
 
 def epoch_shuffle(df: DataFrame, seed: int) -> DataFrame:
@@ -48,7 +48,8 @@ def train_scorer(
     seed: int = 42,
 ) -> Tuple[Dict[int, List[float]], Dict[int, float]]:
     """Fit multinomial LR on (features, label) and export weights/biases
-    in scorer_core format ({cls: [w...]}, {cls: b}).
+    in :class:`~page_segmentation_spark.functions.scorer_core.Arch` form
+    ({cls: [w...]}, {cls: b}).
 
     Foreground masking (F5, reference lib/network.py:146-147) is the
     caller's concern: pass only rows that should contribute (e.g.
@@ -103,26 +104,3 @@ def evaluate(
         "accuracy", "tp", "fp", "fn",
         prec.alias("precision"), rec.alias("recall"), f1.alias("f1"),
     )
-
-
-def apply_weights(weights: Dict[int, List[float]], biases: Dict[int, float]):
-    """Context manager swapping the shipped scorer weights for trained
-    ones.  The base architecture reads scorer_core.WEIGHTS/BIAS, and the
-    extraction plans resolve it on the driver when they are built, so a
-    plan built inside the context scores with the trained weights."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _ctx():
-        old_w, old_b = dict(sc.WEIGHTS), dict(sc.BIAS)
-        sc.WEIGHTS.update(weights)
-        sc.BIAS.update(biases)
-        try:
-            yield
-        finally:
-            sc.WEIGHTS.clear()
-            sc.WEIGHTS.update(old_w)
-            sc.BIAS.clear()
-            sc.BIAS.update(old_b)
-
-    return _ctx()

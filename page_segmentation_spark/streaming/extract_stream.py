@@ -30,6 +30,32 @@ from page_segmentation_spark.plans.extract import extract
 from page_segmentation_spark.sources.pages_schema import PAGES_DDL
 
 
+def _start_extract_sink(
+    pages: DataFrame, output_path: str, checkpoint_path: str,
+    settings: ExtractSettings | None, trigger_available_now: bool,
+):
+    """The sink both extraction streams share: ``foreachBatch(extract)``
+    writing each micro-batch to its own ``batch_id=N`` directory, with
+    the checkpoint, append mode and (optionally) the availableNow
+    trigger.  Returns the started StreamingQuery."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # idempotent: overwrite THIS batch's directory so a post-crash
+        # retry replaces its partial output rather than duplicating it
+        extract(batch_df, settings).write.mode("overwrite").parquet(
+            f"{output_path}/batch_id={batch_id}"
+        )
+
+    writer = (
+        pages.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append")
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_extract(
     spark: SparkSession,
     input_path: str,
@@ -45,23 +71,9 @@ def stream_extract(
         .option("maxFilesPerTrigger", 64)
         .parquet(input_path)
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        result = extract(batch_df, settings)
-        # idempotent: overwrite THIS batch's directory so a post-crash
-        # retry replaces its partial output rather than duplicating it
-        result.write.mode("overwrite").parquet(
-            f"{output_path}/batch_id={batch_id}"
-        )
-
-    writer = (
-        pages.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    return _start_extract_sink(
+        pages, output_path, checkpoint_path, settings, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_extract_warc(
@@ -113,19 +125,9 @@ def stream_extract_warc(
         F.lit(None).cast("string").alias("lang"),
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        extract(batch_df, settings).write.mode("overwrite").parquet(
-            f"{output_path}/batch_id={batch_id}"
-        )
-
-    writer = (
-        pages.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    return _start_extract_sink(
+        pages, output_path, checkpoint_path, settings, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def crawl_stats_stream(

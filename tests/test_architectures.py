@@ -17,7 +17,7 @@ from page_segmentation_spark.functions.architectures import (
     find_architecture,
     register_architecture,
 )
-from page_segmentation_spark.functions import scorer_core as sc
+from page_segmentation_spark.functions.scorer_core import BASE
 from page_segmentation_spark.oracle import extract_document
 from page_segmentation_spark.plans.extract import extract
 
@@ -25,14 +25,15 @@ WIDE = ExtractSettings(architecture="wide_context")
 
 
 def test_registry_lookup_and_unknown():
-    assert find_architecture("base").local_radius == sc.LOCAL_RADIUS
+    assert find_architecture("base") is BASE
+    assert BASE.local_radius == 2 and BASE.section_radius == 8
     assert find_architecture("wide_context").section_radius == 12
     with pytest.raises(KeyError, match="unknown architecture"):
         find_architecture("nope")
 
 
 def test_register_custom_architecture():
-    arch = Arch(name="_test_tmp", weights=sc.WEIGHTS, bias=sc.BIAS,
+    arch = Arch(name="_test_tmp", weights=BASE.weights, bias=BASE.bias,
                 local_radius=1)
     register_architecture(arch)
     try:
@@ -74,7 +75,7 @@ def test_registry_has_all_named_architectures():
     assert find_architecture("precision").bias[1] == -1.2
     assert find_architecture("recall").bias[1] == 0.4
     assert find_architecture("long_doc").chars_norm_cap == 5.0
-    assert find_architecture("trained_v1").weights[1][0] != sc.WEIGHTS[1][0]
+    assert find_architecture("trained_v1").weights[1][0] != BASE.weights[1][0]
 
 
 def test_local_fine_differs_on_adversarial_layout():

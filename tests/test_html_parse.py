@@ -20,6 +20,19 @@ def test_skip_script_style():
     assert [n["text"] for n in nodes] == ["yes"]
 
 
+def test_raw_text_skip_after_dotted_capital_i():
+    """U+0130 lowers to two code points; text before a <script>/<style>
+    must not shift where its raw-text skip ends.  The close tag matches
+    ASCII case-insensitively only (U+017F, long s, does not close)."""
+    for raw in ("<script>var x=1;</SCRIPT>", "<style>p{}</Style>"):
+        nodes = parse_html(
+            "<p>" + "İ" * 12 + " title</p>" + raw + "<p>Kept after.</p>"
+        )
+        assert [n["text"] for n in nodes] == ["İ" * 12 + " title", "Kept after."]
+    nodes = parse_html("<script>a</ſcript><p>no</p></script><p>yes</p>")
+    assert [n["text"] for n in nodes] == ["yes"]
+
+
 def test_link_chars_counted():
     nodes = parse_html('<body><p>pre <a href="/x">link text</a> post</p></body>')
     assert len(nodes) == 1

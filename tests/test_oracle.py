@@ -2,6 +2,8 @@
 span trim, thresholds, exact median — the executable spec the Spark side
 is compared against."""
 
+import pytest
+
 from page_segmentation_spark.config import ExtractSettings, derive_thresholds
 from page_segmentation_spark.functions import scorer_core as sc
 from page_segmentation_spark.oracle import (
@@ -74,6 +76,11 @@ def test_cut_spans_border_gap_never_merged():
     assert spans == [(1, 3, 3)]
 
 
+def test_negative_dilate_radius_rejected():
+    with pytest.raises(ValueError, match="dilate_radius"):
+        extract_document(b"<p>x</p>", ExtractSettings(dilate_radius=-1))
+
+
 def test_cut_spans_split_on_large_gap():
     settings = ExtractSettings(dilate_radius=0)
     nodes = [_node(i) for i in range(9)]
@@ -99,7 +106,6 @@ def test_classify_tie_prefers_lowest_class():
     # zero features -> logits = biases (0.5, -0.4, -1.5) -> class 0
     feats = [0.0] * sc.N_FEATURES
     assert sc.classify(feats) == 0
-    assert sc.logit(feats, 0) == 0.5
 
 
 def test_extract_document_empty():

@@ -10,8 +10,8 @@ the oracle pins the engine.
 Pinned behavior (achieved by three semantics changes):
   * class/id boilerplate hints -> synthetic 'aside' container
     (html_parse.BOILER_HINT_RE);
-  * a DECISIVE in_boiler_container scorer weight (scorer_core.WEIGHTS
-    f20 = +/-5.5) with HTML5 header/footer-inside-article scoping;
+  * a DECISIVE in_boiler_container scorer weight (scorer_core.BASE
+    weights f20 = +/-5.5) with HTML5 header/footer-inside-article scoping;
   * the span bridge guard also drops non-main boiler-container interior
     nodes (oracle.selected_nodes).
 """

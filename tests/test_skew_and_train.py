@@ -90,9 +90,7 @@ def test_train_scorer_learns_and_exports(spark):
         train_scorer,
     )
 
-    nodes = classified_nodes(pages_df(spark, 30, partitions=2)).where(
-        "node_idx >= 0"
-    )
+    nodes = classified_nodes(pages_df(spark, 30, partitions=2))
     # learn to reproduce the shipped scorer's own labels (sanity target)
     labeled = nodes.withColumn("gt_label", F.col("pred")).cache()
     base = {r[0]: r["pct"] for r in label_baseline(labeled).collect()}
@@ -106,36 +104,52 @@ def test_train_scorer_learns_and_exports(spark):
     assert ev["accuracy"] == 1.0  # self-consistency of the eval path
 
 
-def test_apply_weights_roundtrip(spark):
-    from page_segmentation_spark.functions import scorer_core as sc
-    from page_segmentation_spark.plans.train import apply_weights
-
-    orig = sc.WEIGHTS[1][0]
-    with apply_weights({1: [9.9] * sc.N_FEATURES}, {1: 1.0}):
-        assert sc.WEIGHTS[1][0] == 9.9
-    assert sc.WEIGHTS[1][0] == orig
-
-
 def test_train_then_ship_byte_identity(spark):
-    """The full train-then-ship loop: fit on labels, swap the trained
-    weights into the scorer, and the Spark pipeline must STILL be
-    byte-identical to the oracle — the mirror holds for ANY weights
-    (both sides read scorer_core.WEIGHTS; Spark embeds them as plan
-    literals, the oracle folds them in Python)."""
+    """The full train-then-ship loop: fit on labels, register the trained
+    weights as their own architecture, and the Spark pipeline must STILL
+    be byte-identical to the oracle under that architecture — the one
+    chain holds for ANY weights.  Shipping registers a new Arch; no
+    shipped architecture's weights or bias move while it is in use."""
+    import copy
+
+    from page_segmentation_spark.config import ExtractSettings
     from page_segmentation_spark.datagen import make_page, pages_df
+    from page_segmentation_spark.functions.architectures import (
+        ARCHITECTURES,
+        Arch,
+        register_architecture,
+    )
     from page_segmentation_spark.oracle import extract_document
     from page_segmentation_spark.plans.extract import classified_nodes, extract
-    from page_segmentation_spark.plans.train import apply_weights, train_scorer
+    from page_segmentation_spark.plans.train import train_scorer
 
+    shipped = {
+        name: copy.deepcopy((a.weights, a.bias))
+        for name, a in ARCHITECTURES.items()
+    }
     pages = pages_df(spark, 20, partitions=2).cache()
-    nodes = classified_nodes(pages).where("node_idx >= 0")
-    labeled = nodes.withColumn("gt_label", F.col("pred"))
+    labeled = classified_nodes(pages).withColumn("gt_label", F.col("pred"))
     weights, biases = train_scorer(labeled, max_iter=25)
 
-    with apply_weights(weights, biases):
-        got = {r["url"]: r["extracted_text"] for r in extract(pages).collect()}
+    register_architecture(Arch("_test_trained", weights, biases))
+    try:
+        settings = ExtractSettings(architecture="_test_trained")
+        got = {
+            r["url"]: r["extracted_text"]
+            for r in extract(pages, settings).collect()
+        }
         want = {}
         for i in range(20):
             p = make_page(i)
-            want[p["url"]] = extract_document(p["html"])["extracted_text"]
+            want[p["url"]] = extract_document(p["html"], settings)[
+                "extracted_text"
+            ]
+        # checked while the trained head is live, not after
+        assert {
+            name: (a.weights, a.bias)
+            for name, a in ARCHITECTURES.items()
+            if name != "_test_trained"
+        } == shipped
+    finally:
+        ARCHITECTURES.pop("_test_trained")
     assert got == want

@@ -29,6 +29,11 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F  # noqa: E402
 
 from page_segmentation_spark import datagen as dg  # noqa: E402
+from page_segmentation_spark.config import ExtractSettings  # noqa: E402
+from page_segmentation_spark.functions.architectures import (  # noqa: E402
+    Arch,
+    register_architecture,
+)
 from page_segmentation_spark.plans.extract import classified_nodes  # noqa: E402
 from page_segmentation_spark.plans.train import (  # noqa: E402
     evaluate,
@@ -113,7 +118,6 @@ def main() -> None:
             "lang string",
         )
         pages = pages.unionByName(extra_df)
-    nodes = classified_nodes(pages)
 
     gt_rows = []
     for i in range(n_pages):
@@ -127,12 +131,17 @@ def main() -> None:
         gt_rows, "url string, text string"
     ).dropDuplicates().withColumn("gt_hit", F.lit(1))
 
-    labeled = nodes.join(gt, ["url", "text"], "left").withColumn(
-        "gt_label",
-        F.when(F.col("n_chars") == 0, F.lit(2))
-        .when(F.col("gt_hit") == 1, F.lit(1))
-        .otherwise(F.lit(0)),
-    ).cache()
+    def labeled_nodes(settings=None):
+        return classified_nodes(pages, settings).join(
+            gt, ["url", "text"], "left"
+        ).withColumn(
+            "gt_label",
+            F.when(F.col("n_chars") == 0, F.lit(2))
+            .when(F.col("gt_hit") == 1, F.lit(1))
+            .otherwise(F.lit(0)),
+        )
+
+    labeled = labeled_nodes().cache()
 
     print("label baseline (A4):")
     for r in label_baseline(labeled).collect():
@@ -143,18 +152,11 @@ def main() -> None:
     ev = evaluate(labeled, pred_col="pred", label_col="gt_label").first()
     print("shipped-scorer vs GT:", ev.asDict())
 
-    from page_segmentation_spark.plans.train import apply_weights
-
-    with apply_weights(weights, biases):
-        relabeled = classified_nodes(pages).join(
-            gt, ["url", "text"], "left"
-        ).withColumn(
-            "gt_label",
-            F.when(F.col("n_chars") == 0, F.lit(2))
-            .when(F.col("gt_hit") == 1, F.lit(1))
-            .otherwise(F.lit(0)),
-        )
-        ev2 = evaluate(relabeled, pred_col="pred", label_col="gt_label").first()
+    register_architecture(Arch("trained_candidate", weights, biases))
+    trained = ExtractSettings(architecture="trained_candidate")
+    ev2 = evaluate(
+        labeled_nodes(trained), pred_col="pred", label_col="gt_label"
+    ).first()
     print("trained scorer vs GT:", ev2.asDict())
 
     print("\n# paste into functions/architectures.py:")
