@@ -1,15 +1,34 @@
-"""Text-analysis column functions for training-data pipelines.
+"""Text-analysis functions for training-data pipelines.
 
 First-class large-scale operators beyond the reference's own inventory
 (per the build brief): language ID, quality scoring, token counting,
-document fingerprinting — all pure ``pyspark.sql.functions`` column math
-(JVM-side, codegen-friendly, no UDFs) with exact DuckDB-SQL twins used by
-the driver's correctness gate.
+document fingerprinting.  Most are pure ``pyspark.sql.functions`` column
+math (JVM-side, codegen-friendly, no UDFs).  The corpus funnel's gates
+(C4 lines, Gopher rules, language ID) are plain Python over one
+document's text, implemented once here: :func:`c4_line_filter`,
+:func:`gopher_quality` and :func:`with_lang_id` run them over Arrow
+batches (:func:`per_document`), and ``plans.training_corpus`` runs them
+inside the worker that extracts the page.  Each has an exact DuckDB-SQL
+twin used by the correctness gate (``tools/crosscheck.py``).
+
+Spark parity of the gates: Spark's ``trim``/``ltrim``/``rtrim`` strip
+only U+0020 (``strip(" ")`` here); Java's ``\\s`` is ASCII (``_WS`` is
+``re.ASCII``, so NBSP and U+0085 are not whitespace); Spark's ``split``
+keeps leading and trailing empty strings (as ``str.split`` and
+``re.split`` do); marker and ``...`` counts are non-overlapping
+(``str.count``); ``str.lower`` matches Spark's ``lower`` (dotted capital
+I, final sigma, ligatures).  Python's ``round`` is not ``F.round`` in
+the 6th decimal, so ``keep`` is decided on unrounded values and the
+displayed signals are rounded by Spark.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import re
+from typing import Callable, Iterator, Sequence
+
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: language marker words (counted as ' word ' substrings of the padded,
@@ -21,104 +40,68 @@ LANG_MARKERS = {
     "es": ["el", "los", "las", "que", "es"],
 }
 
-
-def _marker_count(text: Column, word: str) -> Column:
-    """Occurrences of ' word ' in the space-padded lowered text via the
-    length-difference trick (portable to ANSI SQL)."""
-    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-    needle = f" {word} "
-    return (
-        F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit("")))
-    ) / F.lit(len(needle))
+#: one whitespace run as Java regex ``\s+`` matches it (ASCII only)
+_WS = re.compile(r"\s+", re.ASCII)
+_ALPHA = re.compile(r"[A-Za-z]")
 
 
-def lang_score(text: Column, lang: str) -> Column:
-    score = F.lit(0.0)
-    for w in LANG_MARKERS[lang]:
-        score = score + _marker_count(text, w)
-    return score
+def detect_lang(text: str | None) -> str:
+    """Marker-word language ID of one document: per language, the number
+    of non-overlapping ``' word '`` occurrences of its markers in the
+    space-padded lowered text; the argmax with first-max tie-break over
+    the fixed ``LANG_MARKERS`` order; ``'und'`` when no marker hits (or
+    the text is null)."""
+    padded = f" {(text or '').lower()} "
+    scores = [
+        sum(padded.count(f" {w} ") for w in words)
+        for words in LANG_MARKERS.values()
+    ]
+    best = max(scores)
+    return list(LANG_MARKERS)[scores.index(best)] if best > 0 else "und"
 
 
-def lang_id(text: Column) -> Column:
-    """Argmax language with first-max tie-break over the fixed LANG order;
-    'und' when no marker hits at all."""
-    langs = list(LANG_MARKERS)
-    scores = {lg: lang_score(text, lg) for lg in langs}
-    best = scores[langs[0]]
-    best_lang = F.lit(langs[0])
-    for lg in langs[1:]:
-        is_better = scores[lg] > best
-        best_lang = F.when(is_better, F.lit(lg)).otherwise(best_lang)
-        best = F.when(is_better, scores[lg]).otherwise(best)
-    return F.when(best > 0.0, best_lang).otherwise(F.lit("und"))
+def per_document(
+    df: DataFrame,
+    keep_cols: Sequence[str],
+    col: str,
+    fn: Callable,
+    ddl: str,
+) -> DataFrame:
+    """Run a per-document Python function over ``df`` in ONE
+    ``mapInArrow``: ``fn(value of col)`` returns a tuple that fills the
+    columns of ``ddl`` (a Spark DDL field list) after the ``keep_cols``,
+    which pass through unchanged — or None, which drops the row inside
+    the kernel.  The one batch loop of the gate operators below, the
+    extraction plan and the corpus funnel."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType
 
+    out = StructType.fromDDL(ddl)
+    types = [to_arrow_type(f.dataType) for f in out.fields]
+    schema = StructType([df.schema[c] for c in keep_cols] + out.fields)
 
-def with_lang_id(
-    df, text_col: str, out_col: str = "lang", padded_col: str | None = None
-):
-    """DataFrame-level language ID — identical semantics (and identical
-    values, verified) to ``lang_id(col)`` but 5-7x faster on real
-    corpora (78.6s -> 11-15s on 85k extracted documents, local[16]).
-
-    Why: the single-Column form inlines the padded lowered text into
-    every one of the 20 marker counts (each count references it twice),
-    and the resulting expression tree is large enough that codegen's
-    common-subexpression elimination stops saving it — lower() runs up
-    to 40x per row.  This form stages four projections: (1) pad+lower
-    ONCE as a real column (referenced-many alias, so CollapseProject
-    keeps the barrier), (2) twenty small per-marker counts, (3) the
-    four per-language score sums (staged too — the first-max argmax
-    CASE tree below references each sum many times, and inlining them
-    re-added ~40% to this stage), (4) the argmax.  Marker occurrences
-    are counted with ``regexp_count`` on the literal padded needle —
-    same non-overlapping left-to-right count as the replace
-    length-difference trick (which the SQL twin keeps), without
-    building a 2 KB replaced copy of the text per marker (~20%
-    faster measured).  Markers are plain lowercase words, so the
-    needle contains no regex metacharacters.
-    Use this in pipelines; ``lang_id`` remains for ad-hoc column use.
-
-    ``padded_col`` (optional): a column the CALLER guarantees already
-    holds ``concat(' ', lower(text_col), ' ')`` — exactly the padded
-    lowered text step (1) would build (:func:`gopher_quality` stages
-    the same expression as ``__pss_g_padded``).  Step (1) is then
-    skipped and the pad/lower pass is not paid a second time; the
-    padded column is consumed, NOT emitted in the output."""
-    cols = [F.col(c) for c in df.columns if c != padded_col]
-    if padded_col is None:
-        padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
-        step1 = df.select(*cols, padded.alias("__pss_padded"))
-        pcol = "__pss_padded"
-    else:
-        step1 = df
-        pcol = padded_col
-    mcols = []
-    for lg, words in LANG_MARKERS.items():
-        for w in words:
-            needle = f" {w} "
-            mcols.append(
-                F.regexp_count(F.col(pcol), F.lit(needle))
-                .cast("double")
-                .alias(f"__pss_mc_{lg}_{w}")
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [fn(v) for v in batch.column(col).to_pylist()]
+            kept = batch.select(keep_cols)
+            if None in rows:
+                kept = kept.filter(pa.array([r is not None for r in rows]))
+                rows = [r for r in rows if r is not None]
+            cols = list(zip(*rows)) if rows else [()] * len(types)
+            arrays = [pa.array(v, type=t) for v, t in zip(cols, types)]
+            yield pa.RecordBatch.from_arrays(
+                kept.columns + arrays, names=[*keep_cols, *out.names]
             )
-    step2 = step1.select(*cols, *mcols)
-    langs = list(LANG_MARKERS)
-    score_cols = []
-    for lg in langs:
-        s = F.lit(0.0)
-        for w in LANG_MARKERS[lg]:
-            s = s + F.col(f"__pss_mc_{lg}_{w}")
-        score_cols.append(s.alias(f"__pss_s_{lg}"))
-    step3 = step2.select(*cols, *score_cols)
-    best = F.col(f"__pss_s_{langs[0]}")
-    best_lang = F.lit(langs[0])
-    for lg in langs[1:]:
-        is_better = F.col(f"__pss_s_{lg}") > best
-        best_lang = F.when(is_better, F.lit(lg)).otherwise(best_lang)
-        best = F.when(is_better, F.col(f"__pss_s_{lg}")).otherwise(best)
-    return step3.select(
-        *cols,
-        F.when(best > 0.0, best_lang).otherwise(F.lit("und")).alias(out_col),
+
+    return df.mapInArrow(kernel, schema)
+
+
+def with_lang_id(df: DataFrame, text_col: str, out_col: str = "lang"):
+    """DataFrame-level language ID: every column of ``df`` plus
+    ``out_col`` = :func:`detect_lang` of ``text_col``."""
+    return per_document(
+        df, df.columns, text_col,
+        lambda t: (detect_lang(t),), f"`{out_col}` string",
     )
 
 
@@ -246,9 +229,7 @@ def url_normalize_sql(expr: str) -> str:
     )
 
 
-def repetition_signals(
-    df, id_col: str, text_col: str, extra_cols: tuple[str, ...] = ()
-):
+def repetition_signals(df, id_col: str, text_col: str):
     """Gopher-style repetition quality signals, per document:
 
       * ``top_word_frac`` — occurrences of the most frequent word over
@@ -282,20 +263,17 @@ def repetition_signals(
 
     base = df.select(
         F.col(id_col),
-        *[F.col(c) for c in extra_cols],
         F.explode(words).alias("word"),
         dup_frac.alias("dup_2gram_frac"),
     )
-    counts = base.groupBy(id_col, *extra_cols, "dup_2gram_frac", "word").agg(
+    counts = base.groupBy(id_col, "dup_2gram_frac", "word").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    return counts.groupBy(id_col, *extra_cols, "dup_2gram_frac").agg(
+    return counts.groupBy(id_col, "dup_2gram_frac").agg(
         F.round(
             F.max("cnt") / F.sum("cnt").cast("double"), 6
         ).alias("top_word_frac")
-    ).select(
-        id_col, *extra_cols, "top_word_frac", "dup_2gram_frac"
-    )
+    ).select(id_col, "top_word_frac", "dup_2gram_frac")
 
 
 def truncate_tokens(df, id_col: str, text_col: str, max_tokens: int):
@@ -482,7 +460,6 @@ def vocab_coverage(
     id_col: str,
     text_col: str,
     top_k: int = 500,
-    extra_cols: tuple[str, ...] = (),
 ):
     """Vocabulary-coverage quality signal (the CCNet/C4-style "is this
     mostly real words" filter): fraction of a document's whitespace
@@ -504,7 +481,6 @@ def vocab_coverage(
         df.where(F.length(F.trim(F.col(text_col))) > 0)
         .select(
             F.col(id_col),
-            *[F.col(c) for c in extra_cols],
             F.explode(F.split(trimmed, r"\s+")).alias("tok"),
         )
     )
@@ -516,7 +492,7 @@ def vocab_coverage(
         .select("tok", F.lit(1).alias("in_v"))
     )
     marked = toks.join(F.broadcast(vocab), "tok", "left")
-    agg = marked.groupBy(id_col, *extra_cols).agg(
+    agg = marked.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum(F.coalesce(F.col("in_v"), F.lit(0)))
         .cast("long")
@@ -524,7 +500,6 @@ def vocab_coverage(
     )
     return agg.select(
         id_col,
-        *extra_cols,
         "n_tokens",
         "in_vocab",
         (F.col("in_vocab") / F.col("n_tokens")).alias("coverage"),
@@ -790,39 +765,118 @@ C4_TERMINALS = (".", "!", "?", '"')
 
 
 def c4_keep_line(
-    line: Column,
+    line: str,
     min_words: int = 5,
     banned_words: tuple = ("javascript",),
-) -> Column:
-    """The C4 per-line retention predicate: the (space-)rtrimmed line
-    ends in terminal punctuation, carries at least ``min_words``
-    whitespace words, and mentions none of ``banned_words``
-    (case-insensitive).  Pure column math with an exact DuckDB twin
-    (queries._c4_keep_sql)."""
-    t = F.rtrim(line)
-    keep = F.substring(t, -1, 1).isin(*C4_TERMINALS)
-    # ">= min_words space-separated words" as an anchored early-exit
-    # scan instead of materializing the full word array per line
-    # (size(regexp_extract_all(t, '[^ ]+')) allocated every word of
-    # every line just to count them; the r6 A/B measured the c4 stage
-    # 1.17 -> 0.80s at 30k pages).  The classes are disjoint
-    # ([^ ] vs ' '), so the pattern cannot backtrack pathologically,
-    # and it stops after the min_words-th word.  Counts are identical:
-    # the string has >= m maximal non-space runs iff it matches
-    # ^ *(?:[^ ]+ +){m-1}[^ ].  The DuckDB twin (queries._c4_keep_sql)
-    # keeps the regexp_extract_all spelling — values match, pinned by
-    # tests/test_r06_optimizations.py + the driver gate.
-    if min_words >= 1:
-        keep = keep & t.rlike(r"^ *(?:[^ ]+ +){%d}[^ ]" % (min_words - 1))
-    low = F.lower(t)
-    for w in banned_words:
-        keep = keep & ~low.contains(w.lower())
-    return keep
+) -> bool:
+    """The C4 per-line retention predicate: the line, right-stripped of
+    spaces, ends in terminal punctuation, carries at least ``min_words``
+    space-separated words, and mentions none of ``banned_words``
+    (case-insensitive).  DuckDB twin: queries._c4_keep_sql."""
+    t = line.rstrip(" ")
+    if t[-1:] not in C4_TERMINALS:
+        return False
+    words = t.split(" ")
+    if len(words) - words.count("") < min_words:
+        return False
+    low = t.lower()
+    return not any(w.lower() in low for w in banned_words)
+
+
+def c4_document(
+    text: str | None,
+    min_words: int = 5,
+    banned_words: tuple = ("javascript",),
+    page_banned: tuple = ("lorem ipsum", "{"),
+    min_kept_lines: int = 3,
+) -> tuple:
+    """C4-style line cleaning of one document (Raffel et al. 2020, the
+    filter that built the C4 corpus from Common Crawl): keep the lines
+    passing :func:`c4_keep_line`, in order, and flag the page for
+    corpus-level drop when it contains any ``page_banned`` marker
+    ("lorem ipsum", a ``{`` suggesting code; case-insensitive) or keeps
+    fewer than ``min_kept_lines`` lines.
+
+    Returns ``(clean_text, n_kept, n_removed, page_kept)``, page_kept
+    0/1; all None for a null text."""
+    if text is None:
+        return (None,) * 4
+    lines = text.split("\n")
+    kept = [ln for ln in lines if c4_keep_line(ln, min_words, banned_words)]
+    page_kept = len(kept) >= min_kept_lines
+    if page_kept:
+        low = text.lower()
+        page_kept = not any(m.lower() in low for m in page_banned)
+    return "\n".join(kept), len(kept), len(lines) - len(kept), int(page_kept)
 
 
 #: Gopher document-filter stop words (Rae et al. 2021, Appendix A1.1 —
 #: "contains at least 2 of the following stop words").
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
+
+
+def gopher_document(
+    text: str | None,
+    min_words: int = 50,
+    max_words: int = 100_000,
+    min_mean_word_len: float = 3.0,
+    max_mean_word_len: float = 10.0,
+    max_symbol_ratio: float = 0.1,
+    max_bullet_frac: float = 0.1,
+    max_ellipsis_frac: float = 0.3,
+    min_alpha_frac: float = 0.8,
+    min_stop_hits: int = 2,
+) -> tuple:
+    """Gopher document-level quality rules of one document (Rae et al.
+    2021, Appendix A1.1 — the MassiveWeb filter reused by
+    RefinedWeb/FineWeb/Dolma):
+
+      * word count in [min_words, max_words];
+      * mean word length in [min_mean_word_len, max_mean_word_len];
+      * symbol-to-word ratio (``#`` and ``...`` marks) <= max_symbol_ratio;
+      * fraction of lines starting with a bullet <= max_bullet_frac
+        (the paper's ">= 90% of lines do not start with a bullet");
+      * fraction of lines ending with an ellipsis <= max_ellipsis_frac;
+      * fraction of words containing an alphabetic char >= min_alpha_frac;
+      * at least ``min_stop_hits`` distinct Gopher stop words present.
+
+    Words are the whitespace split of the space-trimmed text (boundary
+    empties included, as Spark's ``split`` keeps them); a blank text has
+    zero words.  Returns ``(n_words, mean_word_len, symbol_ratio,
+    bullet_frac, ellipsis_frac, alpha_frac, n_stop_hits, keep)``, the
+    signals unrounded and ``keep`` (0/1) decided on them; a null text
+    has null signals and keep 0."""
+    if text is None:
+        return (None,) * 7 + (0,)
+    trimmed = text.strip(" ")
+    words = _WS.split(trimmed)
+    n_words = len(words) if trimmed else 0
+    if n_words:
+        mean_wl = sum(map(len, words)) / n_words
+        symbol_ratio = (text.count("#") + text.count("...")) / n_words
+        alpha_frac = sum(1 for w in words if _ALPHA.search(w)) / n_words
+    else:
+        mean_wl = symbol_ratio = alpha_frac = 0.0
+    lines = text.split("\n")
+    bullet_frac = sum(
+        ln.lstrip(" ").startswith(("•", "- ", "* ")) for ln in lines
+    ) / len(lines)
+    ellipsis_frac = sum(
+        ln.rstrip(" ").endswith(("...", "…")) for ln in lines
+    ) / len(lines)
+    padded = f" {text.lower()} "
+    stop_hits = sum(1 for w in GOPHER_STOPWORDS if f" {w} " in padded)
+    keep = (
+        min_words <= n_words <= max_words
+        and min_mean_word_len <= mean_wl <= max_mean_word_len
+        and symbol_ratio <= max_symbol_ratio
+        and bullet_frac <= max_bullet_frac
+        and ellipsis_frac <= max_ellipsis_frac
+        and alpha_frac >= min_alpha_frac
+        and stop_hits >= min_stop_hits
+    )
+    return (n_words, mean_wl, symbol_ratio, bullet_frac, ellipsis_frac,
+            alpha_frac, stop_hits, int(keep))
 
 
 def gopher_quality(
@@ -838,146 +892,32 @@ def gopher_quality(
     max_ellipsis_frac: float = 0.3,
     min_alpha_frac: float = 0.8,
     min_stop_hits: int = 2,
-    extra_cols: tuple = (),
-    lines_col: str | None = None,
 ):
-    """Gopher document-level quality rules (Rae et al. 2021, Appendix
-    A1.1 — the MassiveWeb filter reused by RefinedWeb/FineWeb/Dolma):
-
-      * word count in [min_words, max_words];
-      * mean word length in [min_mean_word_len, max_mean_word_len];
-      * symbol-to-word ratio (``#`` and ``...`` marks) <= max_symbol_ratio;
-      * fraction of lines starting with a bullet <= max_bullet_frac
-        (the paper's ">= 90% of lines do not start with a bullet");
-      * fraction of lines ending with an ellipsis <= max_ellipsis_frac;
-      * fraction of words containing an alphabetic char >= min_alpha_frac;
-      * at least ``min_stop_hits`` distinct Gopher stop words present.
+    """:func:`gopher_document` over every row of ``df``.
 
     Output: (id, n_words, mean_word_len, symbol_ratio, bullet_frac,
-    ellipsis_frac, alpha_frac, n_stop_hits, keep int) — signal columns
-    rounded to 6 for display, ``keep`` decided on UNROUNDED values
-    (mirroring the oracle twin, same discipline as the dedup thresholds).
+    ellipsis_frac, alpha_frac, n_stop_hits, keep int) — the five double
+    signals rounded to 6 by Spark for display, ``keep`` decided on
+    UNROUNDED values (mirroring the oracle twin, same discipline as the
+    dedup thresholds).
 
-    ``lines_col`` (optional): an array column that the CALLER
-    guarantees equals ``split(text_col, '\\n')`` up to the one-element
-    empty edge — i.e. ``text_col == array_join(lines_col, '\\n')`` with
-    no element containing a newline (exactly what
-    :func:`c4_line_filter` ``emit_lines`` provides for its
-    ``clean_text``).  The bullet/ellipsis line signals then reuse the
-    array instead of re-splitting the reconstructed text; the empty
-    edge (``lines_col == []`` joins to ``''`` which SPLITS to
-    ``['']``) is normalized here, so values are identical for every
-    input, including pages that kept zero lines.
-
-    Scale shape: a pure per-row projection (split / filter / size /
-    regexp are Catalyst array expressions) — zero shuffle, whole-stage
-    codegen, embarrassingly parallel at any corpus size; the corpus-wide
-    repetition rules of the same paper live in
+    Scale shape: one ``mapInArrow`` over (id, text) plus a projection —
+    zero shuffle, embarrassingly parallel at any corpus size; the
+    corpus-wide repetition rules of the same paper live in
     :func:`repetition_signals` (those need aggregation, these do not)."""
-    text = F.col(text_col)
-    # stage the text-wide derivations (trim / both splits / padded-lower)
-    # as REAL columns: each is referenced by several signal columns
-    # below, and codegen's common-subexpression elimination is not
-    # reliable on trees this wide (the with_lang_id lesson) — staged
-    # aliases referenced more than once block CollapseProject inlining,
-    # so every full-text scan here runs exactly once per row.
-    lines_src = (
-        F.when(
-            F.size(F.col(lines_col)) == 0, F.array(F.lit(""))
-        ).otherwise(F.col(lines_col))
-        if lines_col
-        else F.split(text, "\n")
+    rules = (min_words, max_words, min_mean_word_len, max_mean_word_len,
+             max_symbol_ratio, max_bullet_frac, max_ellipsis_frac,
+             min_alpha_frac, min_stop_hits)
+    out = per_document(
+        df.select(id_col, text_col), [id_col], text_col,
+        lambda t: gopher_document(t, *rules),
+        "n_words long, mean_word_len double, symbol_ratio double, "
+        "bullet_frac double, ellipsis_frac double, alpha_frac double, "
+        "n_stop_hits long, keep int",
     )
-    df = df.select(
-        "*",
-        F.trim(text).alias("__pss_g_trim"),
-        F.split(F.trim(text), r"\s+").alias("__pss_g_words"),
-        lines_src.alias("__pss_g_lines"),
-        F.concat(F.lit(" "), F.lower(text), F.lit(" ")).alias(
-            "__pss_g_padded"
-        ),
-    )
-    blank = F.length(F.col("__pss_g_trim")) == 0
-    words = F.col("__pss_g_words")
-    n_words = F.when(blank, F.lit(0)).otherwise(F.size(words)).cast("long")
-    # non-whitespace char count as a fold over the ALREADY-staged word
-    # array instead of length(regexp_replace(text, '\s+', '')) — the
-    # replace built a full de-whitespaced copy of every document just
-    # to take its length.  Identical by construction: split on \s+
-    # partitions the string into its non-\s segments (boundary empties
-    # contribute 0), so the length sum equals the replaced length
-    # (r6 interleaved A/B: gopher stage ~2.5 -> ~2.0s at 30k pages;
-    # value identity pinned by tests/test_r06_optimizations.py).
-    non_ws = F.aggregate(
-        words, F.lit(0), lambda acc, w: acc + F.length(w)
-    ).cast("double")
-    mean_wl = F.when(
-        n_words > 0, non_ws / n_words.cast("double")
-    ).otherwise(F.lit(0.0))
-    n_symbols = (
-        F.size(F.regexp_extract_all(text, F.lit(r"#"), 0))
-        + F.size(F.regexp_extract_all(text, F.lit(r"\.\.\."), 0))
-    ).cast("long")
-    symbol_ratio = F.when(
-        n_words > 0, n_symbols.cast("double") / n_words.cast("double")
-    ).otherwise(F.lit(0.0))
-    lines = F.col("__pss_g_lines")
-    n_lines = F.size(lines).cast("double")  # >= 1 for non-null text
-    is_bullet = lambda l: (  # noqa: E731 — shared by filter + twin
-        F.ltrim(l).startswith("•")
-        | F.ltrim(l).startswith("- ")
-        | F.ltrim(l).startswith("* ")
-    )
-    bullet_frac = F.size(F.filter(lines, is_bullet)).cast("double") / n_lines
-    ends_ellipsis = lambda l: (  # noqa: E731
-        F.rtrim(l).endswith("...") | F.rtrim(l).endswith("…")
-    )
-    ellipsis_frac = (
-        F.size(F.filter(lines, ends_ellipsis)).cast("double") / n_lines
-    )
-    # Formulation chosen by measurement (120k pages, local[16], per
-    # signal over a materialized input): the HOF filter+rlike costs
-    # 6.4s — dwarfed by the unavoidable n_words split (17.2s).  Two
-    # plausible "optimizations" are catastrophically WORSE and must not
-    # come back: a whole-text match regex `[^\s]*[A-Za-z][^\s]*`
-    # backtracks O(k^3) on letterless runs, and a char-deletion
-    # regexp_replace('[^A-Za-z\\s]','') costs 280s (Java per-match
-    # append on ~1 match per character).
-    n_alpha_words = F.size(
-        F.filter(words, lambda w: w.rlike("[A-Za-z]"))
-    ).cast("double")
-    alpha_frac = F.when(
-        n_words > 0, n_alpha_words / n_words.cast("double")
-    ).otherwise(F.lit(0.0))
-    padded = F.col("__pss_g_padded")
-    stop_hits = F.lit(0)
-    for w in GOPHER_STOPWORDS:
-        stop_hits = stop_hits + F.when(
-            padded.contains(f" {w} "), F.lit(1)
-        ).otherwise(F.lit(0))
-    keep = (
-        (n_words >= min_words)
-        & (n_words <= max_words)
-        & (mean_wl >= min_mean_word_len)
-        & (mean_wl <= max_mean_word_len)
-        & (symbol_ratio <= max_symbol_ratio)
-        & (bullet_frac <= max_bullet_frac)
-        & (ellipsis_frac <= max_ellipsis_frac)
-        & (alpha_frac >= min_alpha_frac)
-        & (stop_hits >= min_stop_hits)
-    )
-    return df.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        n_words.alias("n_words"),
-        F.round(mean_wl, 6).alias("mean_word_len"),
-        F.round(symbol_ratio, 6).alias("symbol_ratio"),
-        F.round(bullet_frac, 6).alias("bullet_frac"),
-        F.round(ellipsis_frac, 6).alias("ellipsis_frac"),
-        F.round(alpha_frac, 6).alias("alpha_frac"),
-        stop_hits.cast("long").alias("n_stop_hits"),
-        keep.cast("int").alias("keep"),
-    )
+    return out.select(*[
+        F.round(c, 6).alias(c) if t == "double" else c for c, t in out.dtypes
+    ])
 
 
 def c4_line_filter(
@@ -988,65 +928,21 @@ def c4_line_filter(
     banned_words: tuple = ("javascript",),
     page_banned: tuple = ("lorem ipsum", "{"),
     min_kept_lines: int = 3,
-    emit_lines: str | None = None,
 ):
-    """C4-style line-level cleaning (Raffel et al. 2020, the filter that
-    built the C4 corpus from Common Crawl): keep only lines passing
-    :func:`c4_keep_line`, reconstruct the document from kept lines in
-    original order, and flag pages for corpus-level drop — a page is
-    rejected when it contains any ``page_banned`` marker ("lorem ipsum",
-    a ``{`` suggesting code) or retains fewer than ``min_kept_lines``
-    lines.
+    """:func:`c4_document` over every row of ``df``.
 
-    Output: (id, clean_text, n_kept, n_removed, page_kept int);
-    ``emit_lines`` additionally emits the kept-lines array under that
-    name — ``clean_text`` is exactly ``array_join(emit_lines, '\\n')``
-    and no element contains a newline, so a downstream consumer that
-    would re-split ``clean_text`` on newlines can take the array
-    instead of paying the split (see :func:`gopher_quality`
-    ``lines_col``; the funnel wiring in plans/training_corpus.py).
+    Output: (id, clean_text, n_kept, n_removed, page_kept int).
 
-    Scale shape: a pure per-row projection — split / filter / array_join
-    are Catalyst array expressions, so the operator is zero-shuffle,
-    whole-stage-codegen'd, and embarrassingly parallel at any corpus
-    size (contrast paragraph_dedup, whose frequencies are corpus-wide
-    and need a shuffle).  The kept-lines array is staged as a real
-    column first (the with_lang_id discipline): the output select
-    references it four times, and inlining would run the per-line
-    filter chain once per reference."""
-    # stage the line split and the lowered text as REAL columns (the
-    # with_lang_id discipline): the output select references the line
-    # array twice (kept_expr input + n_lines) and the lowered text once
-    # per page_banned needle — inlined, each reference re-split /
-    # re-lowered the full text (r6 A/B: 1.17 -> 0.80s at 30k pages
-    # together with the c4_keep_line rlike change).
-    staged0 = df.select(
-        "*",
-        F.split(F.col(text_col), "\n").alias("__pss_c4_lines"),
-        F.lower(F.col(text_col)).alias("__pss_c4_low"),
-    )
-    lines = F.col("__pss_c4_lines")
-    kept_expr = F.filter(
-        lines, lambda l: c4_keep_line(l, min_words, banned_words)
-    )
-    staged = staged0.select(
-        "*", kept_expr.alias("__pss_c4_kept")
-    )
-    kept = F.col("__pss_c4_kept")
-    n_lines = F.size(lines)
-    n_kept = F.size(kept)
-    low_text = F.col("__pss_c4_low")
-    page_bad = F.lit(False)
-    for m in page_banned:
-        page_bad = page_bad | low_text.contains(m.lower())
-    page_kept = (~page_bad) & (n_kept >= min_kept_lines)
-    return staged.select(
-        F.col(id_col),
-        F.array_join(kept, "\n").alias("clean_text"),
-        n_kept.cast("long").alias("n_kept"),
-        (n_lines - n_kept).cast("long").alias("n_removed"),
-        page_kept.cast("int").alias("page_kept"),
-        *([kept.alias(emit_lines)] if emit_lines else []),
+    Scale shape: one ``mapInArrow`` over (id, text) — zero shuffle,
+    embarrassingly parallel at any corpus size (contrast
+    paragraph_dedup, whose frequencies are corpus-wide and need a
+    shuffle)."""
+    return per_document(
+        df.select(id_col, text_col), [id_col], text_col,
+        lambda t: c4_document(
+            t, min_words, banned_words, page_banned, min_kept_lines
+        ),
+        "clean_text string, n_kept long, n_removed long, page_kept int",
     )
 
 

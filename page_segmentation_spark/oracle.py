@@ -150,18 +150,16 @@ def _main_indicator(
 
 
 def _wmax(vals: List[int], r: int) -> List[int]:
-    """Clipped windowed max over ±r (rowsBetween(-r, r) semantics)."""
-    n = len(vals)
-    return [
-        max(vals[max(0, i - r): min(n, i + r + 1)]) for i in range(n)
-    ]
+    """Clipped windowed max over ±r (rowsBetween(-r, r) semantics) of a
+    0/1 indicator: 1 where the window sum is positive."""
+    sums = _sums_from_prefix(_prefix(vals), len(vals), -r, r)
+    return [1 if s > 0 else 0 for s in sums]
 
 
 def _wmin(vals: List[int], r: int) -> List[int]:
-    n = len(vals)
-    return [
-        min(vals[max(0, i - r): min(n, i + r + 1)]) for i in range(n)
-    ]
+    """Clipped windowed min over ±r of a 0/1 indicator (dual of
+    :func:`_wmax`)."""
+    return [1 - v for v in _wmax([1 - v for v in vals], r)]
 
 
 def cc_majority_vote(

@@ -33,15 +33,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from page_segmentation_spark.config import ExtractSettings
-from page_segmentation_spark.oracle import resolve
+from page_segmentation_spark.functions.text import per_document
+from page_segmentation_spark.oracle import classify_document, render, resolve
 
-_SPAN_T = pa.struct(
-    [
-        pa.field("start", pa.int64()),
-        pa.field("end", pa.int64()),
-        pa.field("n_main", pa.int64()),
-    ]
-)
 _NODE_TYPES = [
     ("node_idx", pa.int64()),
     ("tag", pa.string()),
@@ -71,49 +65,31 @@ _NODE_SCHEMA = pa.schema(
 )
 
 
+def page_text(html, settings: ExtractSettings, engine, markdown=False):
+    """``(doc, text)`` of one page: ``oracle.classify_document`` then
+    ``oracle.render`` — the per-page chain of the extraction kernel here
+    and of the corpus funnel's kernel (plans/training_corpus)."""
+    doc = classify_document(html or b"", settings, engine)
+    return doc, render(doc, settings, markdown)
+
+
 def _extract(
     pages: DataFrame, settings: ExtractSettings | None, markdown: bool
 ) -> DataFrame:
     settings = settings or ExtractSettings()
     engine = resolve(settings)  # on the driver: unknown names raise here
     text_col = "extracted_markdown" if markdown else "extracted_text"
-    schema = pa.schema(
-        [
-            ("url", pa.string()),
-            (text_col, pa.string()),
-            ("spans", pa.list_(_SPAN_T)),
-            ("n_nodes", pa.int64()),
-        ]
-    )
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # executor-side import: resolved from the shipped package zip
-        from page_segmentation_spark.oracle import classify_document, render
+    def row(html):
+        doc, text = page_text(html, settings, engine, markdown)
+        # (start, end, n_main) tuples fill the span structs positionally
+        return text, doc["spans"], len(doc["nodes"])
 
-        for batch in batches:
-            texts, spans, n_nodes = [], [], []
-            for html in batch.column("html").to_pylist():
-                doc = classify_document(html or b"", settings, engine)
-                texts.append(render(doc, settings, markdown))
-                spans.append(
-                    [
-                        {"start": s, "end": e, "n_main": c}
-                        for (s, e, c) in doc["spans"]
-                    ]
-                )
-                n_nodes.append(len(doc["nodes"]))
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "url": batch.column("url").to_pylist(),
-                    text_col: texts,
-                    "spans": spans,
-                    "n_nodes": n_nodes,
-                },
-                schema=schema,
-            )
-
-    return pages.select("url", "html").mapInArrow(
-        kernel, schema=from_arrow_schema(schema)
+    return per_document(
+        pages.select("url", "html"), ["url"], "html", row,
+        f"{text_col} string, "
+        "spans array<struct<start:bigint,end:bigint,n_main:bigint>>, "
+        "n_nodes bigint",
     )
 
 
@@ -148,8 +124,6 @@ def classified_nodes(
     names = _NODE_SCHEMA.names
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from page_segmentation_spark.oracle import classify_document
-
         for batch in batches:
             cols: dict = {c: [] for c in names}
             node_cols = [(k, cols[k]) for k, _ in _NODE_TYPES]

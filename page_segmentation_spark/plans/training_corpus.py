@@ -4,18 +4,20 @@ The C4/RefinedWeb/FineWeb recipe as ONE declarative Spark plan over
 crawl pages of the input-hint shape (url, warc_ts, html, text, lang):
 
     extract (main-content, byte-identical to the oracle)
-      -> C4 line filtering        (functions/text.c4_line_filter)
-      -> Gopher document rules    (functions/text.gopher_quality)
-      -> language ID / token count / content fingerprint
+      -> C4 line filtering        (functions/text.c4_document)
+      -> Gopher document rules    (functions/text.gopher_document)
+      -> language ID / token count (functions/text.detect_lang)
+      -> content fingerprint      (functions/text.fingerprint)
       -> exact dedup (keep min-url per fingerprint)
 
-Scale shape at 10^12 documents: extraction is one shuffle-free Arrow
-stage; C4, Gopher, language ID, token counting, and fingerprinting are
-all zero-shuffle Catalyst projections fused into the same stage; the
-only shuffle in the whole corpus build is the dedup hash partition on the
-16-hex-char fingerprint (narrow rows: fingerprints + urls).  Every
-filter drops rows BEFORE the dedup shuffle, so the expensive exchange
-sees only surviving documents.
+Scale shape at 10^12 documents: extraction and the three gates run per
+document in ONE ``mapInArrow`` worker (the reference's predict loop is
+one in-process chain per page, and the gates ride the same boundary
+crossing); a rejected document never leaves the worker.  The
+fingerprint is a projection fused into the same stage; the only
+shuffle in the whole corpus build is the dedup hash partition on the
+16-hex-char fingerprint (narrow rows: fingerprints + urls), and it sees
+only surviving documents.
 
 Determinism: gate decisions are made on unrounded values; the dedup
 keeps the lexicographic-min url per fingerprint (same total order in
@@ -24,16 +26,59 @@ Spark and ANSI SQL); no first()/rand() anywhere.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from page_segmentation_spark.config import ExtractSettings
 from page_segmentation_spark.functions.text import (
-    c4_line_filter,
+    c4_document,
+    detect_lang,
     fingerprint,
-    gopher_quality,
-    with_lang_id,
+    gopher_document,
+    per_document,
 )
-from page_segmentation_spark.plans.extract import extract
+from page_segmentation_spark.oracle import resolve
+from page_segmentation_spark.plans.extract import page_text
+
+
+def _gate(text: str | None, c4_opts: dict, gopher_opts: dict):
+    """The funnel's gates over one document: C4 lines and page gate,
+    Gopher rules on the clean text, language ID.  ``(lang, n_tokens,
+    clean_text)`` for a kept document (n_tokens is Gopher's word
+    count), None for a rejected (or null) one."""
+    clean, _, _, page_kept = c4_document(text, **c4_opts)
+    if not page_kept:
+        return None
+    g = gopher_document(clean, **gopher_opts)
+    return (detect_lang(clean), g[0], clean) if g[-1] else None
+
+
+def _gated(
+    rows: DataFrame,
+    col: str,
+    text_of: Callable,
+    c4_opts: dict | None,
+    gopher_opts: dict | None,
+) -> DataFrame:
+    """(url, lang, n_tokens, content_fp, clean_text) for the rows of
+    (url, ``col``) whose text, ``text_of(col value)``, passes the
+    gates: one ``mapInArrow`` that drops the rejected ones, then the
+    fingerprint as a projection."""
+    c4_opts, gopher_opts = dict(c4_opts or {}), dict(gopher_opts or {})
+    out = per_document(
+        rows, ["url"], col,
+        lambda v: _gate(text_of(v), c4_opts, gopher_opts),
+        "lang string, n_tokens bigint, clean_text string",
+    )
+    return out.select(
+        "url",
+        "lang",
+        "n_tokens",
+        fingerprint(F.col("clean_text")).alias("content_fp"),
+        "clean_text",
+    )
 
 
 def corpus_features(
@@ -45,15 +90,22 @@ def corpus_features(
     """The STATELESS part of the funnel — extraction, C4 and Gopher
     filters, language ID, token count, and content fingerprint, one row
     per surviving document (url, lang, n_tokens, content_fp,
-    clean_text), duplicates still present.
+    clean_text), duplicates still present.  Each page is extracted
+    (``plans.extract.page_text``) and gated in the same worker.
 
     Shared verbatim by the batch plan (:func:`build_training_corpus`
-    adds the fingerprint-window dedup) and the streaming plan
+    adds the fingerprint dedup) and the streaming plan
     (``streaming.corpus_stream.stream_training_corpus`` adds stateful
     cross-batch first-seen dedup); every stage here is stream-safe (one
-    mapInArrow + projections, zero shuffle).  ``fused`` chose between
+    mapInArrow + a projection, zero shuffle).  ``fused`` chose between
     two extraction plans there used to be; it is accepted and ignored."""
-    return _funnel_from_extracted(extract(pages), c4_opts, gopher_opts)
+    settings = ExtractSettings()
+    engine = resolve(settings)  # on the driver, like plans.extract
+    return _gated(
+        pages.select("url", "html"), "html",
+        lambda html: page_text(html, settings, engine)[1],
+        c4_opts, gopher_opts,
+    )
 
 
 def corpus_features_from_text(
@@ -65,71 +117,11 @@ def corpus_features_from_text(
     """The same stateless funnel over ALREADY-EXTRACTED text — the WET
     input shape (``sources.warc.read_wet``): Common Crawl publishes
     extracted plain text alongside raw captures, and a corpus built
-    from it skips the parse/extract stage entirely.  Every downstream
-    stage (C4, Gopher, lang ID, tokens, fingerprint, dedup) is
-    IDENTICAL code to the pages path, so WET-built and HTML-built
+    from it skips the parse/extract stage entirely.  The gates are the
+    same :func:`_gate` as the pages path, so WET-built and HTML-built
     corpora cannot drift in filter semantics."""
-    ext = docs.select("url", F.col(text_col).alias("extracted_text"))
-    return _funnel_from_extracted(ext, c4_opts, gopher_opts)
-
-
-def _funnel_from_extracted(
-    ext: DataFrame,
-    c4_opts: dict | None = None,
-    gopher_opts: dict | None = None,
-) -> DataFrame:
-    """C4 -> Gopher -> lang ID / tokens / fingerprint over an
-    (url, extracted_text) table — the shared tail of both input paths
-    (zero-shuffle Catalyst projections, fused into the upstream stage).
-
-    Both gate filters sit behind a :func:`pushdown_barrier`: without it
-    PushDownPredicates substitutes ``page_kept``/``keep`` through every
-    projection and the merged Filter re-computes the C4 line chain ~40x
-    per row (the r06 before-plan); with the barrier each gate expression
-    is evaluated exactly once and the filters test plain attributes."""
-    from page_segmentation_spark.functions.staging import pushdown_barrier
-
-    # cross-operator staging reuse (both exact by construction):
-    #   * C4 emits its kept-lines array; gopher's bullet/ellipsis line
-    #     signals take it via lines_col instead of re-splitting the
-    #     clean_text it was just joined into (clean_text ==
-    #     array_join(kept, '\n'), no element contains '\n');
-    #   * gopher's staged padded-lower (__pss_g_padded) IS the padded
-    #     lowered text with_lang_id's step (1) would rebuild — emit it
-    #     through extra_cols and pass it as padded_col, so the
-    #     pad/lower pass over every surviving document runs once.
-    c4 = c4_line_filter(
-        ext, "url", "extracted_text",
-        emit_lines="__pss_f_lines", **(c4_opts or {}),
-    )
-    c4 = pushdown_barrier(c4, ["clean_text", "page_kept"])
-    page_kept = c4.where(F.col("page_kept") == 1)
-    g = gopher_quality(
-        page_kept,
-        "url",
-        "clean_text",
-        extra_cols=("clean_text", "__pss_g_padded"),
-        lines_col="__pss_f_lines",
-        **(gopher_opts or {}),
-    )
-    g = pushdown_barrier(g, ["keep"])
-    # n_words is gopher's whitespace token count — the SAME expression
-    # token_count() would rebuild over the same clean_text (split of the
-    # trimmed text on \s+, blank -> 0, cast long), so reuse it instead
-    # of re-splitting every surviving document.
-    survivors = g.where(F.col("keep") == 1).select(
-        "url", "clean_text", "n_words", "__pss_g_padded"
-    )
-    # staged lang ID (with_lang_id docstring: 5-7x over the inline form)
-    return with_lang_id(
-        survivors, "clean_text", padded_col="__pss_g_padded"
-    ).select(
-        "url",
-        "lang",
-        F.col("n_words").alias("n_tokens"),
-        fingerprint(F.col("clean_text")).alias("content_fp"),
-        "clean_text",
-    )
+    rows = docs.select("url", text_col)
+    return _gated(rows, text_col, lambda t: t, c4_opts, gopher_opts)
 
 
 def build_training_corpus(

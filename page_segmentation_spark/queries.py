@@ -1049,8 +1049,11 @@ def sim_kmeans_step(spark, sf_dir):
 )
 def text_langid(spark, sf_dir):
     """Marker-word language ID; first-max tie-break == the >= chain."""
-    d = _t(spark, sf_dir, "documents")
-    return d.select(T.lang_id(F.col("text")).alias("detected_lang")).groupBy(
+    from page_segmentation_spark.packaging import ship_package
+
+    ship_package(spark)
+    d = _t(spark, sf_dir, "documents").select("text")
+    return T.with_lang_id(d, "text", "detected_lang").groupBy(
         "detected_lang"
     ).agg(F.count(F.lit(1)).alias("n_docs"))
 
@@ -1820,7 +1823,7 @@ def text_c4_filter(spark, sf_dir):
     extraction pipeline end-to-end: extract -> keep lines with terminal
     punctuation, >= 5 words, and no banned word -> ordered reconstruct +
     a page-level keep flag ('lorem ipsum' / '{' markers, min kept
-    lines).  The operator itself is a zero-shuffle Catalyst projection
+    lines).  The operator itself is a zero-shuffle mapInArrow
     (functions/text.c4_line_filter).  Fixture knobs for non-vacuity on
     the synthetic corpus: banned word 'customer' (varies per document),
     min_kept_lines=2 (so a banned-word hit also flips page_kept)."""
@@ -1935,7 +1938,10 @@ def text_gopher_quality(spark, sf_dir):
     lines every 4th doc, trailing-ellipsis line every 5th, hash symbols
     every 6th, numeric words every 7th, extra stop words every 2nd.
     The operator (functions/text.gopher_quality) is a zero-shuffle
-    Catalyst projection; keep decided on unrounded values both sides."""
+    mapInArrow; keep decided on unrounded values both sides."""
+    from page_segmentation_spark.packaging import ship_package
+
+    ship_package(spark)
     d = _t(spark, sf_dir, "documents")
     t = F.col("text")
     for mod, s in _GOPHER_AUG:

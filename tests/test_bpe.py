@@ -61,9 +61,11 @@ def test_frozen_table_trained_and_effective():
 
 
 def test_training_is_deterministic():
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "tools"))
     from train_bpe import train
 
     assert train(20, 30) == train(20, 30)

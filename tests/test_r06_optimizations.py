@@ -1,5 +1,6 @@
 """Round-6 optimization internals: the rolling-hash gram kernel, the
-pushdown barrier, and plan-shape pins for the restructured operators.
+C4 word count and Gopher's non-whitespace count, and the funnel's
+one-kernel gates against the public operators composed.
 
 Value identity of the big rewrites (the funnel) is already pinned by the
 golden, oracle-parity, and value-identity suites; these tests cover the
@@ -109,29 +110,6 @@ def test_span_scrub_end_to_end_values(spark):
     assert out[3]["n_scrubbed"] == 0
 
 
-def test_pushdown_barrier_values_and_plan(spark):
-    from page_segmentation_spark.functions.staging import pushdown_barrier
-
-    df = spark.range(20).select(
-        F.col("id"),
-        F.concat(F.lit("v"), F.col("id")).alias("t"),
-    )
-    derived = df.select(
-        "id", "t", (F.length("t") + F.col("id")).alias("score")
-    )
-    plain = derived.where(F.col("score") > 4)
-    barred = pushdown_barrier(derived, ["score"]).where(F.col("score") > 4)
-    assert barred.columns == derived.columns
-    assert sorted(map(tuple, barred.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-    plan = barred._jdf.queryExecution().executedPlan().toString()
-    # the filter tests the generated attribute — the derived expression
-    # must not be re-expanded into the Filter condition
-    assert "Generate" in plan
-    assert "Filter (length" not in plan
-
-
 def test_paragraph_dedup_values_unchanged(spark):
     rows = [
         (1, "a b c a b c x y z"),
@@ -150,10 +128,10 @@ def test_paragraph_dedup_values_unchanged(spark):
     assert out[2]["clean_text"] == "d e f"
 
 
-def test_c4_keep_line_rlike_word_count(spark):
-    """The r6 anchored-rlike word-count in c4_keep_line must count
-    exactly like the word-array form it replaced (and like the frozen
-    DuckDB twin): >= min_words maximal non-space runs."""
+def test_c4_keep_line_rlike_word_count():
+    """c4_keep_line counts words exactly like the frozen DuckDB twin:
+    >= min_words maximal runs of non-space characters (a tab is a word
+    character, as in Spark's rlike form this replaced)."""
     from page_segmentation_spark.functions.text import c4_keep_line
 
     cases = [
@@ -168,13 +146,7 @@ def test_c4_keep_line_rlike_word_count(spark):
         "one-word.",                          # 1 -> drop
         ("w " * 60).strip() + ".",            # long line -> keep
     ]
-    df = spark.createDataFrame([(c,) for c in cases], ["line"])
-    got = [
-        bool(r["k"])
-        for r in df.select(
-            c4_keep_line(F.col("line")).alias("k")
-        ).collect()
-    ]
+    got = [c4_keep_line(c) for c in cases]
 
     def ref(line: str) -> bool:
         t = line.rstrip(" ")
@@ -185,34 +157,24 @@ def test_c4_keep_line_rlike_word_count(spark):
         return "javascript" not in t.lower()
 
     assert got == [ref(c) for c in cases]
+    assert got == [True, False, True, True, True, True, False, False,
+                   False, True]
 
 
-def test_c4_keep_line_min_words_edges(spark):
+def test_c4_keep_line_min_words_edges():
     from page_segmentation_spark.functions.text import c4_keep_line
 
-    df = spark.createDataFrame([("word.",), ("  .",)], ["line"])
+    lines = ["word.", "  ."]
     # min_words=1: any non-space content counts ('.' alone is 1 word)
-    got1 = [
-        bool(r["k"])
-        for r in df.select(
-            c4_keep_line(F.col("line"), min_words=1).alias("k")
-        ).collect()
-    ]
-    assert got1 == [True, True]
+    assert [c4_keep_line(ln, min_words=1) for ln in lines] == [True, True]
     # min_words=0: the count clause vanishes (always satisfied)
-    got0 = [
-        bool(r["k"])
-        for r in df.select(
-            c4_keep_line(F.col("line"), min_words=0).alias("k")
-        ).collect()
-    ]
-    assert got0 == [True, True]
+    assert [c4_keep_line(ln, min_words=0) for ln in lines] == [True, True]
 
 
 def test_gopher_non_ws_fold_matches_replace(spark):
-    """The r6 aggregate-over-words non-whitespace count must equal the
-    regexp_replace('\\s+','') length it replaced — including mixed
-    whitespace, boundary empties, and blank text."""
+    """gopher_quality's mean_word_len must use the non-whitespace count
+    of the DuckDB twin's regexp_replace('\\s+','') length — including
+    mixed whitespace, boundary empties, and blank text."""
     import re
 
     from page_segmentation_spark.functions.text import gopher_quality
@@ -244,98 +206,10 @@ def test_gopher_non_ws_fold_matches_replace(spark):
             assert out[i]["mean_word_len"] == 0.0
 
 
-def test_c4_emit_lines_roundtrip(spark):
-    """emit_lines must satisfy the documented contract consumers rely
-    on: clean_text == array_join(lines, '\n'), size(lines) == n_kept,
-    and no element contains a newline."""
-    from page_segmentation_spark.functions.text import c4_line_filter
-
-    texts = [
-        "good line one here now\nshort\nanother decent line of text ok",
-        "javascript only line here yes\nmore text without banned word!",
-        "",
-        "one two three four five\r\nsix seven eight nine ten",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["id", "t"]
-    )
-    rows = c4_line_filter(
-        df, "id", "t", min_kept_lines=0, emit_lines="kl"
-    ).collect()
-    assert len(rows) == len(texts)
-    for r in rows:
-        assert "\n".join(r["kl"]) == r["clean_text"]
-        assert len(r["kl"]) == r["n_kept"]
-        assert all("\n" not in ln for ln in r["kl"])
-
-
-def test_gopher_lines_col_matches_resplit(spark):
-    """gopher_quality(lines_col=...) must equal the default re-split
-    form on every output column for any array satisfying the contract
-    text == array_join(lines, '\n') — including the [] edge, whose
-    join-then-split round trip yields [''], and single-line docs."""
-    from page_segmentation_spark.functions.text import gopher_quality
-
-    line_sets = [
-        ["alpha beta gamma", "- bullet line", "trailing dots..."],
-        [],
-        ["single line and the with of to"],
-        ["", "", ""],          # blank lines survive a '\n' round trip
-        ["• bullet", "plain", "ellipsis…"],
-    ]
-    df = spark.createDataFrame(
-        [(i, ls) for i, ls in enumerate(line_sets)], ["id", "ls"]
-    ).select(
-        "id", "ls", F.array_join("ls", "\n").alias("t")
-    )
-    base = {
-        r["id"]: r
-        for r in gopher_quality(df, "id", "t", min_words=0).collect()
-    }
-    reused = {
-        r["id"]: r
-        for r in gopher_quality(
-            df, "id", "t", min_words=0, lines_col="ls"
-        ).collect()
-    }
-    assert set(base) == set(reused)
-    for i in base:
-        assert tuple(base[i]) == tuple(reused[i]), f"row {i} differs"
-
-
-def test_with_lang_id_padded_col_identity(spark):
-    """with_lang_id(padded_col=...) must produce the same lang for the
-    same text as the self-built padded form, and must consume (not
-    emit) the padded column."""
-    from page_segmentation_spark.functions.text import with_lang_id
-
-    texts = [
-        "the cat and the dog with the ball",
-        "el perro y el gato en la casa",
-        "der Hund und die Katze mit dem Ball",
-        "le chien et le chat dans la maison",
-        "",
-        "zzz qqq xxx",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["id", "t"]
-    )
-    pre = df.select(
-        "*",
-        F.concat(F.lit(" "), F.lower(F.col("t")), F.lit(" ")).alias("pp"),
-    )
-    base = {r["id"]: r["lang"] for r in with_lang_id(df, "t").collect()}
-    shared = with_lang_id(pre, "t", padded_col="pp")
-    assert "pp" not in shared.columns
-    got = {r["id"]: r["lang"] for r in shared.collect()}
-    assert base == got
-
-
 def test_funnel_share_wiring_matches_unshared(spark):
-    """_funnel_from_extracted (kept-lines + padded-lower shared across
-    C4/gopher/langid) must be row-identical to the unshared composition
-    of the same operators over hostile text shapes."""
-    from page_segmentation_spark.functions.staging import pushdown_barrier
+    """The funnel's one-kernel gates must be row-identical to the public
+    operators composed (c4_line_filter -> page gate -> gopher_quality ->
+    keep -> with_lang_id -> fingerprint) over hostile text shapes."""
     from page_segmentation_spark.functions.text import (
         c4_line_filter,
         fingerprint,
@@ -343,13 +217,13 @@ def test_funnel_share_wiring_matches_unshared(spark):
         with_lang_id,
     )
     from page_segmentation_spark.plans.training_corpus import (
-        _funnel_from_extracted,
+        corpus_features_from_text,
     )
 
     body = (
-        "the quick brown fox jumps over the lazy dog again and again\n"
-        "and the story of the dog and the fox continues here today\n"
-        "with more of the words that the filters want to see now\n"
+        "the quick brown fox jumps over the lazy dog again and again.\n"
+        "and the story of the dog and the fox continues here today!\n"
+        "with more of the words that the filters want to see now?\n"
     )
     texts = [
         body * 3,
@@ -363,27 +237,26 @@ def test_funnel_share_wiring_matches_unshared(spark):
         ["url", "extracted_text"],
     )
 
-    def unshared(ext):
-        c4 = c4_line_filter(ext, "url", "extracted_text")
-        c4 = pushdown_barrier(c4, ["clean_text", "page_kept"])
-        g = gopher_quality(
-            c4.where(F.col("page_kept") == 1),
-            "url",
-            "clean_text",
-            extra_cols=("clean_text",),
+    def composed(ext):
+        c4 = c4_line_filter(ext, "url", "extracted_text").where(
+            F.col("page_kept") == 1
         )
-        g = pushdown_barrier(g, ["keep"])
-        sv = g.where(F.col("keep") == 1).select(
-            "url", "clean_text", "n_words"
+        g = gopher_quality(c4, "url", "clean_text").where(F.col("keep") == 1)
+        sv = c4.join(g, "url").select(
+            "url", "clean_text", F.col("n_words").alias("n_tokens")
         )
         return with_lang_id(sv, "clean_text").select(
             "url",
             "lang",
-            F.col("n_words").alias("n_tokens"),
+            "n_tokens",
             fingerprint(F.col("clean_text")).alias("content_fp"),
             "clean_text",
         )
 
-    a = sorted(tuple(r) for r in unshared(ext).collect())
-    b = sorted(tuple(r) for r in _funnel_from_extracted(ext).collect())
+    a = sorted(tuple(r) for r in composed(ext).collect())
+    b = sorted(
+        tuple(r)
+        for r in corpus_features_from_text(ext, "extracted_text").collect()
+    )
+    assert len(a) == 3
     assert a == b

@@ -1,6 +1,11 @@
 """XY-cut (W3) and morphological (P16) span-former tests: the XY-cut
 Spark operator on hand frames, the extraction chain's span cutters
-(oracle.SPAN_CUTTERS) on hand node lists."""
+(oracle.SPAN_CUTTERS) on hand node lists, and frozen spans over random
+block layouts."""
+
+import hashlib
+import os
+import sys
 
 from pyspark.sql import functions as F
 
@@ -8,6 +13,7 @@ from page_segmentation_spark.config import ExtractSettings
 from page_segmentation_spark.operators.spans import xycut_spans
 from page_segmentation_spark.oracle import (
     SPAN_CUTTERS,
+    classify_document,
     cut_spans_morphological,
 )
 
@@ -106,3 +112,35 @@ def test_extract_with_alternate_formers(spark):
         rows = extract(pages, ExtractSettings(span_former=former)).collect()
         assert len(rows) == 12
         assert any(r["extracted_text"] for r in rows), former
+
+
+#: (span_former, post_process) -> (number of spans, sha256[:16] of the
+#: per-page span lists) of classify_document over
+#: tools/identity_check.layout_soup(0..199)
+SOUP_SPANS = {
+    ("default", "cc_majority"): (313, "cdc2c6bdd0b242fa"),
+    ("default", "none"): (324, "58ad10999030b936"),
+    ("morphological", "cc_majority"): (230, "b906ab9ef120e933"),
+    ("morphological", "none"): (227, "03323a39e9f03486"),
+    ("xycut", "cc_majority"): (414, "e4f425a52959f611"),
+    ("xycut", "none"): (421, "60b1116cc580958b"),
+}
+
+
+def test_layout_soup_spans_frozen():
+    """Datagen pages almost always yield one contiguous article span;
+    these random layouts have interior gaps and tied vote runs, so a
+    change to the gap merge or the vote's tie-break shows here."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "tools"))
+    from identity_check import layout_soup
+
+    pages = [layout_soup(i) for i in range(200)]
+    got = {}
+    for former in sorted(SPAN_CUTTERS):
+        for post in ("cc_majority", "none"):
+            s = ExtractSettings(span_former=former, post_process=(post,))
+            spans = [classify_document(p, s)["spans"] for p in pages]
+            digest = hashlib.sha256(repr(spans).encode()).hexdigest()[:16]
+            got[(former, post)] = (sum(map(len, spans)), digest)
+    assert got == SOUP_SPANS

@@ -294,7 +294,7 @@ def test_lang_id(spark):
         ],
         "text string",
     )
-    out = [r[0] for r in df.select(T.lang_id(F.col("text"))).collect()]
+    out = [r["lang"] for r in T.with_lang_id(df, "text").collect()]
     assert out == ["en", "de", "und"]
 
 
@@ -836,8 +836,8 @@ def test_c4_line_filter_rules(spark):
 
 
 def test_c4_line_filter_is_zero_shuffle(spark):
-    """The standalone operator must plan as a pure projection: no
-    Exchange, no Python eval — it composes into any pipeline for free."""
+    """The standalone operator must plan as one Arrow kernel: no
+    Exchange, no per-row Python eval — it composes into any pipeline."""
     from page_segmentation_spark.functions.text import c4_line_filter
 
     df = spark.createDataFrame([(0, "x.")], "doc_id long, text string")
@@ -886,9 +886,9 @@ def test_gopher_quality_rules(spark):
 
 
 def test_gopher_quality_is_zero_shuffle(spark):
-    """Doc-level Gopher rules must plan as a pure projection (the
+    """Doc-level Gopher rules must plan as one Arrow kernel (the
     corpus-wide repetition rules live elsewhere): no Exchange, no
-    Python eval."""
+    per-row Python eval."""
     from page_segmentation_spark.functions.text import gopher_quality
 
     df = spark.createDataFrame([(0, "x.")], "doc_id long, text string")
@@ -947,8 +947,8 @@ def test_build_training_corpus_funnel(spark):
 
 def test_build_training_corpus_plan_shape(spark):
     """Whole funnel = ONE dedup Exchange on the fingerprint: extraction
-    is a shuffle-free Arrow stage, and C4/Gopher/langid/fingerprint add
-    no shuffle and no Python eval beyond the extraction kernel."""
+    and the C4/Gopher/langid gates are ONE shuffle-free Arrow kernel,
+    and the fingerprint adds no shuffle and no Python eval."""
     import re
 
     from page_segmentation_spark.plans.training_corpus import (
@@ -965,6 +965,8 @@ def test_build_training_corpus_plan_shape(spark):
     )
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
     assert "BatchEvalPython" not in plan, plan
+    # extraction and the gates share ONE Python worker per task
+    assert len(re.findall(r"MapInArrow", plan)) == 1, plan
 
 
 def test_build_training_corpus_fused_identity_and_plan(spark):

@@ -55,17 +55,11 @@ def main() -> None:
     corpus = bench.corpus_path(spark, n_pages)
     pages = spark.read.parquet(corpus)
 
-    from page_segmentation_spark.functions.text import (
-        c4_line_filter,
-        fingerprint,
-        gopher_quality,
-        token_count,
-        with_lang_id,
-    )
     from page_segmentation_spark.operators import dedup as D
     from page_segmentation_spark.plans.extract import extract
     from page_segmentation_spark.plans.training_corpus import (
         build_training_corpus,
+        corpus_features_from_text,
     )
 
     from page_segmentation_spark.queries import QUERIES as QUERIES_local
@@ -81,76 +75,12 @@ def main() -> None:
             ).repartition(CPUS * 4).write.mode("overwrite").parquet(ext_path)
         return spark.read.parquet(ext_path)
 
-    def tail_c4(ext):
-        return c4_line_filter(ext, "url", "extracted_text")
-
-    def tail_gopher(ext):
-        c4 = tail_c4(ext).where(F.col("page_kept") == 1)
-        return gopher_quality(
-            c4, "url", "clean_text", extra_cols=("clean_text",)
-        )
-
-    def tail_lang(ext):
-        g = tail_gopher(ext).where(F.col("keep") == 1).select(
-            "url", "clean_text"
-        )
-        return with_lang_id(g, "clean_text")
-
     def tail_full(ext):
-        g = tail_gopher(ext).where(F.col("keep") == 1).select(
-            "url", "clean_text"
-        )
-        return with_lang_id(g, "clean_text").select(
-            "url",
-            "lang",
-            token_count(F.col("clean_text")).alias("n_tokens"),
-            fingerprint(F.col("clean_text")).alias("content_fp"),
-            "clean_text",
-        )
-
-    # barrier-form funnel tail sub-stages (the shipped r6 shape —
-    # tail_* above keeps the r5 pre-barrier form for A/B):
-    def ftail_c4(ext):
-        from page_segmentation_spark.functions.staging import (
-            pushdown_barrier,
-        )
-
-        c4 = c4_line_filter(ext, "url", "extracted_text")
-        c4 = pushdown_barrier(c4, ["clean_text", "page_kept"])
-        return c4.where(F.col("page_kept") == 1)
-
-    def ftail_gopher(ext):
-        from page_segmentation_spark.functions.staging import (
-            pushdown_barrier,
-        )
-
-        g = gopher_quality(
-            ftail_c4(ext), "url", "clean_text", extra_cols=("clean_text",)
-        )
-        g = pushdown_barrier(g, ["keep"])
-        return g.where(F.col("keep") == 1).select(
-            "url", "clean_text", "n_words"
-        )
-
-    def ftail_lang(ext):
-        return with_lang_id(ftail_gopher(ext), "clean_text")
-
-    def ftail_full(ext):
-        from page_segmentation_spark.plans.training_corpus import (
-            _funnel_from_extracted,
-        )
-
-        return _funnel_from_extracted(ext)
+        return corpus_features_from_text(ext, "extracted_text")
 
     def tail_dedup(ext):
-        from pyspark.sql import Window
-
-        out = tail_full(ext)
-        w = Window.partitionBy("content_fp")
-        return (
-            out.withColumn("keep_url", F.min("url").over(w))
-            .where(F.col("url") == F.col("keep_url"))
-            .drop("keep_url")
+        return build_training_corpus(
+            ext.withColumnRenamed("extracted_text", "text"), from_text=True
         )
 
     def docs():
@@ -160,18 +90,8 @@ def main() -> None:
         # extraction + corpus funnel tail over materialized extraction
         "extract": lambda: extract(pages),
         "corpus": lambda: build_training_corpus(pages),
-        "tail_c4": lambda: tail_c4(ext_table()),
-        "tail_gopher": lambda: tail_gopher(ext_table()),
-        "tail_lang": lambda: tail_lang(ext_table()),
         "tail_full": lambda: tail_full(ext_table()),
         "tail_dedup": lambda: tail_dedup(ext_table()),
-        "lang_only": lambda: with_lang_id(
-            ext_table(), "extracted_text"
-        ).select("url", "lang"),
-        "ftail_c4": lambda: ftail_c4(ext_table()),
-        "ftail_gopher": lambda: ftail_gopher(ext_table()),
-        "ftail_lang": lambda: ftail_lang(ext_table()),
-        "ftail_full": lambda: ftail_full(ext_table()),
         # non-flagship bench queries on their own inputs
         "span_scrub": lambda: D.duplicate_span_scrub(
             docs(), "doc_id", "text", k=10

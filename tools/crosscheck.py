@@ -5,9 +5,12 @@ hash.  Usage: python tools/crosscheck.py [sf_dir] [name ...]"""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 import duckdb  # noqa: E402
 

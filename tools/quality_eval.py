@@ -18,10 +18,13 @@ from __future__ import annotations
 
 import collections
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from page_segmentation_spark import datagen as dg  # noqa: E402
 from page_segmentation_spark.oracle import extract_document  # noqa: E402

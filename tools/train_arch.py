@@ -21,10 +21,13 @@ Usage: python tools/train_arch.py [n_pages]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from pyspark.sql import functions as F  # noqa: E402
 

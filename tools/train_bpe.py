@@ -15,10 +15,13 @@ weights (CLAUDE.md).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from page_segmentation_spark.datagen import make_page  # noqa: E402
 from page_segmentation_spark.functions.bpe import _WORD_RE  # noqa: E402
