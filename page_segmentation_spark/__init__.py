@@ -1,8 +1,7 @@
 """page_segmentation_spark — a PySpark-native main-content extraction engine.
 
 Re-expresses the per-pixel page-segmentation pipeline of
-ocr4all_pixel_classifier (reference: /root/reference, v0.6.5) over web
-documents:
+ocr4all_pixel_classifier (v0.6.5) over web documents:
 
     pixel              -> DOM text-block node
     page image         -> parsed HTML
@@ -12,10 +11,15 @@ documents:
     region (XY-cut)    -> contiguous main-content span
     mask output        -> extracted main-content text (byte-exact)
 
-Everything is DataFrame-first: parsing runs in Arrow-batched
-``mapInPandas``; features, scoring, connected components, voting and span
-formation are pure JVM-side column/window/groupBy expressions so the hot
-path never crosses into per-row Python.
+Extraction is one Arrow-batched ``mapInArrow`` kernel
+(:func:`page_segmentation_spark.functions.text.per_document`) that runs
+:func:`page_segmentation_spark.oracle.classify_document` on each page:
+parse, features, scoring, connected-component vote and span cut happen
+per document in the Python worker, with no Exchange, so Spark output
+equals the single-document oracle by construction.
+
+Importing the package in a Spark Python worker installs the worker's
+stat-guarded zip reload (:func:`packaging.install_zip_reload_guard`).
 """
 
 __version__ = "0.1.0"
@@ -26,3 +30,7 @@ from page_segmentation_spark.config import (  # noqa: F401
     CLS_MEDIA,
     ExtractSettings,
 )
+
+from page_segmentation_spark import packaging as _packaging
+
+_packaging.install_zip_reload_guard()

@@ -17,14 +17,22 @@ the source files), written under a temporary name and renamed into
 place, and never rewritten once it exists.  So two sessions, or two
 checkouts of different sources, never overwrite a zip that another
 session's executors may be fetching.
+
+The same zip carries :func:`install_zip_reload_guard`, which the
+package's ``__init__`` runs on import.  So the guard reaches every Spark
+Python worker that imports the package (``get_spark``, ``--py-files``
+and cluster deploys alike) without any conf or daemon module.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _PKG_NAME = os.path.basename(_PKG_DIR)
@@ -84,6 +92,74 @@ def ship_package(spark) -> str:
     path = make_pyfiles_zip()
     spark.sparkContext.addPyFile(path)
     return path
+
+
+#: ``__main__`` module names of PySpark's Python worker processes
+_SPARK_WORKER_MAINS = ("pyspark.daemon", "pyspark.worker")
+
+
+def _stat_guarded(reload):
+    """Wrap ``zipimporter.invalidate_caches`` (``reload``) so that it
+    re-reads an archive only when the archive's stat key changed.
+
+    Each importer keeps the ``(st_mtime_ns, st_size, st_ino)`` of its
+    ``archive`` from its last guarded reload.  An unchanged key returns
+    without reading; anything else, a failed ``stat`` included, runs
+    ``reload`` (which re-reads the central directory or drops the cache)
+    and then records the key, taken before the read so that a rewrite
+    during the read is seen at the next call.  A zip rewritten in place
+    with another size or mtime, or replaced under the same path (a new
+    inode), is therefore still re-read.  The key misses one case: a
+    rewrite in place to the same size within one timestamp tick.  Spark
+    refuses to ``addPyFile`` a different file under a name it already
+    serves, and :func:`make_pyfiles_zip` never rewrites its
+    content-addressed zip, so that case does not reach the workers."""
+
+    @functools.wraps(reload)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None
+        if key is not None and key == getattr(self, "_pss_stat_key", None):
+            return
+        reload(self)
+        self._pss_stat_key = key
+
+    invalidate_caches._pss_stat_guarded = True
+    return invalidate_caches
+
+
+def _install_stat_guard() -> None:
+    """Replace ``zipimporter.invalidate_caches`` with its stat-guarded
+    form in this process; a second call does nothing, and neither does
+    a Python before 3.10, whose ``zipimporter`` has no such method."""
+    cls = zipimport.zipimporter
+    reload = getattr(cls, "invalidate_caches", None)
+    if reload is not None and not getattr(reload, "_pss_stat_guarded", False):
+        cls.invalidate_caches = _stat_guarded(reload)
+
+
+def install_zip_reload_guard() -> bool:
+    """Stat-guard ``zipimporter.invalidate_caches`` if this process is a
+    Spark Python worker; return whether it is.
+
+    PySpark's ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` at the start of every task, and
+    each ``zipimporter`` then re-reads its archive's whole central
+    directory (``pyspark.zip`` alone has over a thousand entries): about
+    0.2 s of CPU per task before the kernel runs.  The guard skips the
+    re-read of an archive that has not changed (:func:`_stat_guarded`).
+    The worker installs it when a task first imports this package, so
+    that worker's first task still pays the cost, and its second task
+    re-reads each archive once more to record the keys.  On the driver,
+    in tests and in tools the stdlib method stays untouched."""
+    spec = getattr(sys.modules.get("__main__"), "__spec__", None)
+    if getattr(spec, "name", None) not in _SPARK_WORKER_MAINS:
+        return False
+    _install_stat_guard()
+    return True
 
 
 if __name__ == "__main__":

@@ -64,3 +64,140 @@ def test_ship_package_path_is_content_addressed(monkeypatch, tmp_path):
     after = os.stat(paths[1])
     assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, 10**9)
     assert not [n for n in os.listdir(tmp_path) if n.endswith(".tmp")]
+
+
+# The zip reload guard patches a stdlib class for the whole process, so
+# each check runs in its own interpreter and this one keeps the stdlib
+# method.
+_GUARD_PRELUDE = """
+import importlib, os, sys, zipfile, zipimport
+from page_segmentation_spark import packaging
+
+zp = sys.argv[1]
+
+def write(path, src):
+    with zipfile.ZipFile(path, "w") as zf:  # "w" truncates: same inode
+        zf.writestr("probe_mod.py", src)
+
+write(zp, "V = 1\\n")
+sys.path.insert(0, zp)
+import probe_mod
+assert probe_mod.V == 1
+packaging._install_stat_guard()
+packaging._install_stat_guard()  # a second install does nothing
+guarded = zipimport.zipimporter.invalidate_caches
+assert guarded.__wrapped__.__name__ == "invalidate_caches"
+assert not hasattr(guarded.__wrapped__, "_pss_stat_guarded")
+
+reads = []
+_read = zipimport._read_directory
+def counting(archive):
+    reads.append(archive)
+    return _read(archive)
+zipimport._read_directory = counting
+
+def reloads():
+    del reads[:]
+    importlib.invalidate_caches()
+    return reads.count(zp)
+
+def reimport():
+    del sys.modules["probe_mod"]
+    return importlib.import_module("probe_mod").V
+
+def pin_mtime(path, st):
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+"""
+
+
+def _run_python(code, *args):
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(packaging.__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code, *args],
+        env=dict(os.environ, PYTHONPATH=root),
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+
+
+def _run_guard_script(tmp_path, body):
+    _run_python(_GUARD_PRELUDE + body, str(tmp_path / "probe.zip"))
+
+
+def test_zip_guard_skips_unchanged_archive(tmp_path):
+    _run_guard_script(tmp_path, """
+assert reloads() == 1  # the first guarded call records the stat key
+assert reloads() == 0 and reloads() == 0
+assert reimport() == 1
+""")
+
+
+def test_zip_guard_rereads_in_place_rewrite(tmp_path):
+    # same path, same inode and same mtime: only the size tells
+    _run_guard_script(tmp_path, """
+assert reloads() == 1 and reloads() == 0
+st = os.stat(zp)
+write(zp, "V = 22\\n")
+pin_mtime(zp, st)
+new = os.stat(zp)
+assert (new.st_ino, new.st_mtime_ns) == (st.st_ino, st.st_mtime_ns)
+assert new.st_size != st.st_size
+assert reloads() == 1
+assert reimport() == 22
+assert reloads() == 0
+""")
+
+
+def test_zip_guard_rereads_replaced_archive(tmp_path):
+    # os.replace under the same path, same size and mtime: a new inode
+    _run_guard_script(tmp_path, """
+write(zp, "V = 2\\n")
+assert reloads() == 1 and reloads() == 0
+st = os.stat(zp)
+write(zp + ".tmp", "V = 3\\n")
+pin_mtime(zp + ".tmp", st)
+os.replace(zp + ".tmp", zp)
+new = os.stat(zp)
+assert (new.st_size, new.st_mtime_ns) == (st.st_size, st.st_mtime_ns)
+assert new.st_ino != st.st_ino
+assert reloads() == 1
+assert reimport() == 3
+os.unlink(zp)  # a failed stat always reaches the stdlib method
+assert reloads() == 1 and reloads() == 1
+""")
+
+
+def test_package_import_leaves_stdlib_reload_outside_spark_workers():
+    _run_python(
+        "import zipimport\n"
+        "stdlib = zipimport.zipimporter.invalidate_caches\n"
+        "import page_segmentation_spark\n"
+        "assert zipimport.zipimporter.invalidate_caches is stdlib\n"
+        "assert page_segmentation_spark._packaging.install_zip_reload_guard() is False\n"
+        "assert zipimport.zipimporter.invalidate_caches is stdlib\n"
+    )
+
+
+def test_zip_guard_installed_in_spark_worker(spark):
+    import zipimport
+
+    from page_segmentation_spark.functions.text import per_document
+
+    df = spark.range(0, 8, numPartitions=4)
+    rows = per_document(
+        df, ["id"], "id",
+        # naming `packaging` makes the worker import the package
+        lambda _: (
+            getattr(
+                packaging.zipimport.zipimporter.invalidate_caches,
+                "_pss_stat_guarded", False,
+            ),
+        ),
+        "guarded boolean",
+    ).collect()
+    assert len(rows) == 8 and all(r["guarded"] for r in rows)
+    # the driver (this process) keeps the stdlib method
+    assert not hasattr(zipimport.zipimporter.invalidate_caches, "_pss_stat_guarded")

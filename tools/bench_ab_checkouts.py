@@ -63,9 +63,12 @@ spark.stop()
 class Side:
     def __init__(self, name: str, tree: str, cpus: int, corpus: str, job: str):
         self.name = name
+        # the worker daemon puts its working directory first on the
+        # workers' sys.path: start each side in its own tree
         self.proc = subprocess.Popen(
             [sys.executable, "-u", "-c", _CHILD, tree, str(cpus), corpus, job],
             stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+            cwd=tree,
         )
         self._await("READY")
 

@@ -99,7 +99,10 @@ def main() -> None:
     )
     ap.add_argument("--cpus", type=int, default=2)
     args = ap.parse_args()
-    sys.path.insert(0, os.path.abspath(args.tree))
+    # the worker daemon puts its working directory first on the workers'
+    # sys.path, so run from the tree whose package is compared
+    os.chdir(args.tree)
+    sys.path.insert(0, os.getcwd())
 
     from page_segmentation_spark import datagen as dg
     from page_segmentation_spark.functions import text as T
