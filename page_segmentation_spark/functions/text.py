@@ -12,19 +12,30 @@ inside the worker that extracts the page.  Each has an exact DuckDB-SQL
 twin used by the correctness gate (``tools/crosscheck.py``).
 
 Spark parity of the gates: Spark's ``trim``/``ltrim``/``rtrim`` strip
-only U+0020 (``strip(" ")`` here); Java's ``\\s`` is ASCII (``_WS`` is
-``re.ASCII``, so NBSP and U+0085 are not whitespace); Spark's ``split``
-keeps leading and trailing empty strings (as ``str.split`` and
-``re.split`` do); marker and ``...`` counts are non-overlapping
-(``str.count``); ``str.lower`` matches Spark's ``lower`` (dotted capital
-I, final sigma, ligatures).  Python's ``round`` is not ``F.round`` in
-the 6th decimal, so ``keep`` is decided on unrounded values and the
-displayed signals are rounded by Spark.
+only U+0020 (``strip(" ")`` here).  Java's ``\\s`` is exactly the six
+ASCII bytes of ``_JAVA_WS`` (NBSP, U+0085 and U+2028 are word
+characters), and UTF-8 encodes every other character with bytes of
+0x80 and up, so Gopher's word, character and alphabetic-word counts are
+taken on the UTF-8 bytes (``surrogatepass``, as
+``html_parse.text_stats``) through byte tables.  Spark's ``split`` keeps
+leading and trailing empty strings (as ``str.split`` does), and Gopher
+counts them as words.  Marker and ``...`` counts are non-overlapping, as
+``str.count`` counts them: the one-pass marker count drops a marker
+token that repeats the one counted just before it, because the two
+``" w "`` share a space.  ``str.lower`` matches Spark's ``lower``
+(dotted capital I, final sigma, ligatures; Arrow's ``utf8_lower``
+does not, on ``İ``), and a document is lowered whole, not line by
+line: the final-sigma context never crosses ``"\\n"``, so each line's
+lowering is the matching line of the whole text's.  Python's ``round``
+is not ``F.round`` in the 6th decimal, so ``keep`` is decided on
+unrounded values and the displayed signals are rounded by Spark.
 """
 
 from __future__ import annotations
 
-import re
+import string
+from collections import Counter
+from itertools import compress, count
 from typing import Callable, Iterator, Sequence
 
 import pyarrow as pa
@@ -40,10 +51,6 @@ LANG_MARKERS = {
     "es": ["el", "los", "las", "que", "es"],
 }
 
-#: one whitespace run as Java regex ``\s+`` matches it (ASCII only)
-_WS = re.compile(r"\s+", re.ASCII)
-_ALPHA = re.compile(r"[A-Za-z]")
-
 
 def detect_lang(text: str | None) -> str:
     """Marker-word language ID of one document: per language, the number
@@ -51,11 +58,14 @@ def detect_lang(text: str | None) -> str:
     space-padded lowered text; the argmax with first-max tie-break over
     the fixed ``LANG_MARKERS`` order; ``'und'`` when no marker hits (or
     the text is null)."""
-    padded = f" {(text or '').lower()} "
-    scores = [
-        sum(padded.count(f" {w} ") for w in words)
-        for words in LANG_MARKERS.values()
-    ]
+    return _lang(_counted_words((text or "").lower()))
+
+
+def _lang(counted: list) -> str:
+    """:func:`detect_lang` from the :func:`_counted_words` of the
+    lowered text."""
+    n = Counter(counted)
+    scores = [sum(n[w] for w in ws) for ws in LANG_MARKERS.values()]
     best = max(scores)
     return list(LANG_MARKERS)[scores.index(best)] if best > 0 else "und"
 
@@ -773,14 +783,28 @@ def c4_keep_line(
     spaces, ends in terminal punctuation, carries at least ``min_words``
     space-separated words, and mentions none of ``banned_words``
     (case-insensitive).  DuckDB twin: queries._c4_keep_sql."""
+    return _c4_keep(line, min_words, tuple(w.lower() for w in banned_words))
+
+
+def _c4_keep(line: str, min_words: int, banned: tuple) -> bool:
+    """:func:`c4_keep_line` with the banned words already lower-cased
+    (:func:`_c4` passes only those its document contains)."""
     t = line.rstrip(" ")
     if t[-1:] not in C4_TERMINALS:
         return False
-    words = t.split(" ")
-    if len(words) - words.count("") < min_words:
+    # the words are the non-empty pieces of t.split(" "): one more than
+    # the spaces unless a leading or doubled space makes empty ones, so
+    # that bound needs the exact count only when it reaches min_words
+    n = t.count(" ") + 1
+    if n >= min_words and (t[0] == " " or "  " in t):
+        words = t.split(" ")
+        n = len(words) - words.count("")
+    if n < min_words:
         return False
-    low = t.lower()
-    return not any(w.lower() in low for w in banned_words)
+    if banned:
+        low = t.lower()
+        return not any(w in low for w in banned)
+    return True
 
 
 def c4_document(
@@ -802,17 +826,88 @@ def c4_document(
     if text is None:
         return (None,) * 4
     lines = text.split("\n")
-    kept = [ln for ln in lines if c4_keep_line(ln, min_words, banned_words)]
-    page_kept = len(kept) >= min_kept_lines
-    if page_kept:
-        low = text.lower()
-        page_kept = not any(m.lower() in low for m in page_banned)
+    kept, page_kept = _c4(
+        lines, text.lower(), min_words, banned_words, page_banned,
+        min_kept_lines,
+    )
     return "\n".join(kept), len(kept), len(lines) - len(kept), int(page_kept)
+
+
+def _c4(
+    lines: list,
+    low: str,
+    min_words: int,
+    banned_words: tuple,
+    page_banned: tuple,
+    min_kept_lines: int,
+) -> tuple:
+    """``(kept lines, page_kept)`` of :func:`c4_document`, given the
+    document's lines and its lowered text ``low``.  A banned word a line
+    mentions is in ``low`` too (each line's lowering is a piece of the
+    whole text's), so lines are lowered only for the banned words
+    ``low`` contains."""
+    banned = tuple(w for w in map(str.lower, banned_words) if w in low)
+    kept = [ln for ln in lines if _c4_keep(ln, min_words, banned)]
+    page_kept = len(kept) >= min_kept_lines and not any(
+        m.lower() in low for m in page_banned
+    )
+    return kept, page_kept
 
 
 #: Gopher document-filter stop words (Rae et al. 2021, Appendix A1.1 —
 #: "contains at least 2 of the following stop words").
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
+
+#: the words whose space-delimited occurrences the gates count
+_COUNTED = frozenset(GOPHER_STOPWORDS).union(*LANG_MARKERS.values())
+
+
+def _counted_words(low: str) -> list:
+    """The language markers and Gopher stop words among the pieces of
+    ``low.split(" ")``, in order: the ``" w "`` occurrences of the
+    space-padded text.  A piece equal to the one kept at the position
+    just before it is dropped: the two occurrences share a space, and
+    ``str.count``, which defines the marker counts, counts one of
+    them."""
+    pieces = low.split(" ")
+    out, last = [], -2
+    for i in compress(count(), map(_COUNTED.__contains__, pieces)):
+        if i == last + 1 and pieces[i] == pieces[last]:
+            last = -2
+        else:
+            out.append(pieces[i])
+            last = i
+    return out
+
+
+#: Java's ``\s``: exactly these six ASCII bytes
+_JAVA_WS = b" \t\n\x0b\x0c\r"
+#: Java whitespace to b" ", every other byte to b"a"
+_WORD_BYTES = bytes(32 if b in _JAVA_WS else 97 for b in range(256))
+#: the bytes that are neither Java whitespace nor an ASCII letter
+_NOT_ALPHA = bytes(
+    set(range(256)) - set(_JAVA_WS) - set(string.ascii_letters.encode())
+)
+
+
+def _word_stats(trimmed: str) -> tuple:
+    """``(n_words, n_chars, n_alpha)`` of the words of a non-empty
+    ``trimmed``, its pieces split at runs of Java whitespace (boundary
+    empties included): how many, their total length in characters, and
+    how many hold an ASCII letter.  Counted on the UTF-8 bytes: each
+    whitespace character is one of the six bytes, and no other
+    character's encoding holds any of them."""
+    b = trimmed.encode("utf-8", "surrogatepass")
+    n_ws = len(b) - len(b.translate(None, _JAVA_WS))
+    w = b.translate(_WORD_BYTES)
+    # one word more than whitespace runs; a run ends before a word
+    # character or at the end
+    n_words = w.count(b" a") + (w[-1] == 32) + 1
+    # the same over letters and whitespace only: an alphabetic word
+    # starts the text or follows a space
+    a = b.translate(_WORD_BYTES, _NOT_ALPHA)
+    n_alpha = a.count(b" a") + (a[:1] == b"a")
+    return n_words, len(trimmed) - n_ws, n_alpha
 
 
 def gopher_document(
@@ -848,24 +943,46 @@ def gopher_document(
     has null signals and keep 0."""
     if text is None:
         return (None,) * 7 + (0,)
+    return _gopher(
+        text, text.split("\n"), _counted_words(text.lower()), min_words,
+        max_words, min_mean_word_len, max_mean_word_len, max_symbol_ratio,
+        max_bullet_frac, max_ellipsis_frac, min_alpha_frac, min_stop_hits,
+    )
+
+
+def _gopher(
+    text: str,
+    lines: list,
+    counted: list,
+    min_words: int,
+    max_words: int,
+    min_mean_word_len: float,
+    max_mean_word_len: float,
+    max_symbol_ratio: float,
+    max_bullet_frac: float,
+    max_ellipsis_frac: float,
+    min_alpha_frac: float,
+    min_stop_hits: int,
+) -> tuple:
+    """:func:`gopher_document` of a non-null text, given its lines and
+    the :func:`_counted_words` of its lowering."""
     trimmed = text.strip(" ")
-    words = _WS.split(trimmed)
-    n_words = len(words) if trimmed else 0
-    if n_words:
-        mean_wl = sum(map(len, words)) / n_words
+    if trimmed:
+        n_words, n_chars, n_alpha = _word_stats(trimmed)
+        mean_wl = n_chars / n_words
         symbol_ratio = (text.count("#") + text.count("...")) / n_words
-        alpha_frac = sum(1 for w in words if _ALPHA.search(w)) / n_words
+        alpha_frac = n_alpha / n_words
     else:
+        n_words = 0
         mean_wl = symbol_ratio = alpha_frac = 0.0
-    lines = text.split("\n")
     bullet_frac = sum(
         ln.lstrip(" ").startswith(("•", "- ", "* ")) for ln in lines
     ) / len(lines)
     ellipsis_frac = sum(
         ln.rstrip(" ").endswith(("...", "…")) for ln in lines
     ) / len(lines)
-    padded = f" {text.lower()} "
-    stop_hits = sum(1 for w in GOPHER_STOPWORDS if f" {w} " in padded)
+    present = set(counted)
+    stop_hits = sum(1 for w in GOPHER_STOPWORDS if w in present)
     keep = (
         min_words <= n_words <= max_words
         and min_mean_word_len <= mean_wl <= max_mean_word_len

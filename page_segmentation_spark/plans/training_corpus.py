@@ -26,6 +26,7 @@ Spark and ANSI SQL); no first()/rand() anywhere.
 
 from __future__ import annotations
 
+import inspect
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -33,8 +34,11 @@ from pyspark.sql import functions as F
 
 from page_segmentation_spark.config import ExtractSettings
 from page_segmentation_spark.functions.text import (
+    _c4,
+    _counted_words,
+    _gopher,
+    _lang,
     c4_document,
-    detect_lang,
     fingerprint,
     gopher_document,
     per_document,
@@ -47,12 +51,29 @@ def _gate(text: str | None, c4_opts: dict, gopher_opts: dict):
     """The funnel's gates over one document: C4 lines and page gate,
     Gopher rules on the clean text, language ID.  ``(lang, n_tokens,
     clean_text)`` for a kept document (n_tokens is Gopher's word
-    count), None for a rejected (or null) one."""
-    clean, _, _, page_kept = c4_document(text, **c4_opts)
+    count), None for a rejected (or null) one.  The options name every
+    option of ``c4_document`` and ``gopher_document`` (:func:`_options`).
+
+    The text is lowered and split into lines once for C4; the clean
+    text's lines are C4's kept lines, and its lowering, split once into
+    words, serves Gopher's stop words and the language markers."""
+    if text is None:
+        return None
+    kept, page_kept = _c4(text.split("\n"), text.lower(), **c4_opts)
     if not page_kept:
         return None
-    g = gopher_document(clean, **gopher_opts)
-    return (detect_lang(clean), g[0], clean) if g[-1] else None
+    clean = "\n".join(kept)
+    counted = _counted_words(clean.lower())
+    g = _gopher(clean, kept or [""], counted, **gopher_opts)
+    return (_lang(counted), g[0], clean) if g[-1] else None
+
+
+def _options(fn: Callable, opts: dict | None) -> dict:
+    """Every option of the gate ``fn`` (its parameters after the text):
+    ``opts`` over ``fn``'s defaults.  An unknown name raises here."""
+    bound = inspect.signature(fn).bind(None, **(opts or {}))
+    bound.apply_defaults()
+    return dict(list(bound.arguments.items())[1:])
 
 
 def _gated(
@@ -66,7 +87,8 @@ def _gated(
     (url, ``col``) whose text, ``text_of(col value)``, passes the
     gates: one ``mapInArrow`` that drops the rejected ones, then the
     fingerprint as a projection."""
-    c4_opts, gopher_opts = dict(c4_opts or {}), dict(gopher_opts or {})
+    c4_opts = _options(c4_document, c4_opts)
+    gopher_opts = _options(gopher_document, gopher_opts)
     out = per_document(
         rows, ["url"], col,
         lambda v: _gate(text_of(v), c4_opts, gopher_opts),

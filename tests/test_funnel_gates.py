@@ -11,8 +11,11 @@ following space, ``min_kept_lines=0`` and ``min_words`` 0 and 1.
 from __future__ import annotations
 
 import hashlib
+import re
 
 import pytest
+
+from page_segmentation_spark.functions import text as T
 
 _PASS = (
     "the quick brown fox jumps over the lazy dog and the cat.\n"
@@ -350,3 +353,235 @@ def test_operator_defaults_match_document_functions():
     assert defaults(T.c4_keep_line) == {
         k: defaults(T.c4_document)[k] for k in ("min_words", "banned_words")
     }
+
+
+# ---- the fast gate paths against the formulations they replaced ---------
+#
+# The gates count Gopher's words on UTF-8 bytes, lower each document
+# once, count markers in one pass over the space-split pieces and skip
+# the per-line lowering when no banned word occurs.  The functions below
+# are the former per-word, per-marker and per-line formulations, kept
+# as the reference the fast paths must equal exactly.
+
+_REF_WS = re.compile(r"\s+", re.ASCII)
+_REF_ALPHA = re.compile(r"[A-Za-z]")
+
+
+def _ref_word_stats(trimmed: str) -> tuple:
+    words = _REF_WS.split(trimmed)
+    return (len(words), sum(map(len, words)),
+            sum(1 for w in words if _REF_ALPHA.search(w)))
+
+
+def _ref_lang(text):
+    padded = f" {(text or '').lower()} "
+    scores = [
+        sum(padded.count(f" {w} ") for w in words)
+        for words in T.LANG_MARKERS.values()
+    ]
+    best = max(scores)
+    return list(T.LANG_MARKERS)[scores.index(best)] if best > 0 else "und"
+
+
+def _ref_keep_line(line, min_words=5, banned_words=("javascript",)):
+    t = line.rstrip(" ")
+    if t[-1:] not in T.C4_TERMINALS:
+        return False
+    words = t.split(" ")
+    if len(words) - words.count("") < min_words:
+        return False
+    low = t.lower()
+    return not any(w.lower() in low for w in banned_words)
+
+
+def _ref_c4(text, min_words=5, banned_words=("javascript",),
+            page_banned=("lorem ipsum", "{"), min_kept_lines=3):
+    if text is None:
+        return (None,) * 4
+    lines = text.split("\n")
+    kept = [ln for ln in lines if _ref_keep_line(ln, min_words, banned_words)]
+    page_kept = len(kept) >= min_kept_lines
+    if page_kept:
+        low = text.lower()
+        page_kept = not any(m.lower() in low for m in page_banned)
+    return "\n".join(kept), len(kept), len(lines) - len(kept), int(page_kept)
+
+
+def _ref_gopher(text, min_words=50, max_words=100_000, min_mean_word_len=3.0,
+                max_mean_word_len=10.0, max_symbol_ratio=0.1,
+                max_bullet_frac=0.1, max_ellipsis_frac=0.3,
+                min_alpha_frac=0.8, min_stop_hits=2):
+    if text is None:
+        return (None,) * 7 + (0,)
+    trimmed = text.strip(" ")
+    words = _REF_WS.split(trimmed)
+    n_words = len(words) if trimmed else 0
+    if n_words:
+        mean_wl = sum(map(len, words)) / n_words
+        symbol_ratio = (text.count("#") + text.count("...")) / n_words
+        alpha_frac = sum(1 for w in words if _REF_ALPHA.search(w)) / n_words
+    else:
+        mean_wl = symbol_ratio = alpha_frac = 0.0
+    lines = text.split("\n")
+    bullet_frac = sum(
+        ln.lstrip(" ").startswith(("•", "- ", "* ")) for ln in lines
+    ) / len(lines)
+    ellipsis_frac = sum(
+        ln.rstrip(" ").endswith(("...", "…")) for ln in lines
+    ) / len(lines)
+    padded = f" {text.lower()} "
+    stop_hits = sum(1 for w in T.GOPHER_STOPWORDS if f" {w} " in padded)
+    keep = (
+        min_words <= n_words <= max_words
+        and min_mean_word_len <= mean_wl <= max_mean_word_len
+        and symbol_ratio <= max_symbol_ratio
+        and bullet_frac <= max_bullet_frac
+        and ellipsis_frac <= max_ellipsis_frac
+        and alpha_frac >= min_alpha_frac
+        and stop_hits >= min_stop_hits
+    )
+    return (n_words, mean_wl, symbol_ratio, bullet_frac, ellipsis_frac,
+            alpha_frac, stop_hits, int(keep))
+
+
+def _ref_gate(text, c4_opts, gopher_opts):
+    clean, _, _, page_kept = _ref_c4(text, **c4_opts)
+    if not page_kept:
+        return None
+    g = _ref_gopher(clean, **gopher_opts)
+    return (_ref_lang(clean), g[0], clean) if g[-1] else None
+
+
+_JS_NONTERMINAL = "JavaScript shows up on this line with no end\n" + _PASS
+_JS_TERMINAL = "JavaScript is on this line and it ends right here.\n" + _PASS
+_SIGMA = "one two three four ΟΔΟΣ.\nΑΒΓ and the other words here.\n" + _PASS
+
+#: texts for the named shortcut cases below
+NAMED = [
+    "\t", "\tword\t", "\x0bword\x0c", "\rword\r\n", " \t the and \x0c ",
+    "a\u00a0b", "a\x85b c", "a\u2028b c", "é ß éß", "é aß",
+    " the the the ", "the the the the", "the\tthe", "the and the",
+    _JS_NONTERMINAL, _JS_TERMINAL, _SIGMA,
+    "\ud800", "a\ud800 b c", "the \udfff and of.",
+    " one two three four.", "LE CHAT ET LA SOURIS EST the end.",
+]
+
+_C4_OPTS = [
+    {},
+    dict(min_words=0, min_kept_lines=0),
+    dict(min_words=1, min_kept_lines=0, banned_words=("Java", "x ", "ς."),
+         page_banned=("THE END",)),
+]
+_GOPHER_OPTS = [{}, dict(min_words=0, min_stop_hits=1)]
+
+
+@pytest.fixture(scope="module")
+def battery():
+    import os
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "tools"))
+    from gate_identity import line_soup
+
+    soups = [line_soup(i) for i in range(2000)]
+    return [None] + [t for _, t in EDGE] + NAMED + soups + [
+        _PASS + s for s in soups[:500]
+    ]
+
+
+def test_document_gates_match_reference(battery):
+    for text in battery:
+        assert T.detect_lang(text) == _ref_lang(text), repr(text)
+        for opts in _C4_OPTS:
+            assert T.c4_document(text, **opts) == _ref_c4(text, **opts), (
+                repr(text), opts)
+        for opts in _GOPHER_OPTS:
+            assert T.gopher_document(text, **opts) == _ref_gopher(
+                text, **opts), (repr(text), opts)
+
+
+def test_keep_line_matches_reference(battery):
+    lines = {ln for t in battery if t for ln in t.split("\n")}
+    for opts in ({}, dict(min_words=0), dict(min_words=1),
+                 dict(banned_words=("Java", "x ", "ς.", ""))):
+        for ln in lines:
+            assert T.c4_keep_line(ln, **opts) == _ref_keep_line(ln, **opts), (
+                repr(ln), opts)
+
+
+def test_funnel_gate_matches_reference(battery):
+    from page_segmentation_spark.plans.training_corpus import _gate, _options
+
+    for c4 in _C4_OPTS:
+        for gopher in _GOPHER_OPTS:
+            full = (_options(T.c4_document, c4),
+                    _options(T.gopher_document, gopher))
+            for text in battery:
+                assert _gate(text, *full) == _ref_gate(text, c4, gopher), (
+                    repr(text), c4, gopher)
+
+
+def test_word_counts_use_java_whitespace_bytes():
+    """Java's ``\\s`` is six ASCII bytes: a text of one tab is two empty
+    words, boundary tabs, ``\\x0b``, ``\\x0c`` and ``\\r`` make empty
+    words, NBSP, U+0085 and U+2028 are word characters, and only ASCII
+    letters make a word alphabetic."""
+    cases = {
+        "\t": (2, 0, 0),
+        "\tword\t": (3, 4, 1),
+        "\x0bword\x0c": (3, 4, 1),
+        "\rword\r\n": (3, 4, 1),
+        "a\u00a0b": (1, 3, 1),
+        "a\x85b c": (2, 4, 2),
+        "a\u2028b c": (2, 4, 2),
+        "é ß éß": (3, 4, 0),
+        "é aß": (2, 3, 1),
+    }
+    for text, want in cases.items():
+        assert T._word_stats(text) == want == _ref_word_stats(text), repr(text)
+    assert T.gopher_document("\t", min_words=0)[0] == 2
+
+
+def test_marker_counts_stay_non_overlapping():
+    """``" the the the "`` holds two non-overlapping ``" the "``; a tab
+    is not the space a marker needs."""
+    from collections import Counter
+
+    counts = Counter(T._counted_words(" the the the "))
+    assert counts["the"] == 2 == "  the the the  ".count(" the ")
+    assert Counter(T._counted_words("the the the the"))["the"] == 2
+    assert T._counted_words("the and the") == ["the", "and", "the"]
+    assert T._counted_words("the\tthe") == []
+    assert T.detect_lang("the\tthe") == "und"
+    for w in T._COUNTED:
+        assert w and " " not in w and w == w.lower(), w
+
+
+def test_banned_word_on_any_line_still_judged_per_line():
+    """A banned word on a line C4 drops anyway sends the document's
+    lines through the per-line check, which keeps the clean ones; on a
+    terminal line it drops that line."""
+    clean = "\n".join(_PASS.split("\n")[:3])
+    assert T.c4_document(_JS_NONTERMINAL) == (clean, 3, 2, 1)
+    assert T.c4_document(_JS_TERMINAL) == (clean, 3, 2, 1)
+    assert T.c4_document(_JS_TERMINAL, banned_words=()) == (
+        _JS_TERMINAL.rstrip("\n"), 4, 1, 1)
+
+
+def test_final_sigma_before_newline():
+    """The document is lowered whole: final-sigma context stops at
+    ``"\\n"``, so each line lowers as it would alone."""
+    for text in ("ΟΔΟΣ\nΑΒΓ", "ΟΔΟΣ.\nΑΒΓ", "ΣΟΦΟΣ \nΑ", "İ\nΣ\nΑΣ\n"):
+        assert text.lower().split("\n") == [
+            ln.lower() for ln in text.split("\n")
+        ]
+    got = T.c4_document(_SIGMA, banned_words=("ς.",), min_words=1)
+    assert got == _ref_c4(_SIGMA, banned_words=("ς.",), min_words=1)
+    assert got[1:] == (4, 2, 1)
+
+
+def test_lone_surrogate_does_not_raise():
+    for text in ("\ud800", "a\ud800 b c", "the \udfff and of."):
+        assert T.gopher_document(text, min_words=0) == _ref_gopher(
+            text, min_words=0)
