@@ -20,6 +20,10 @@ equals the single-document oracle by construction.
 
 Importing the package in a Spark Python worker installs the worker's
 stat-guarded zip reload (:func:`packaging.install_zip_reload_guard`).
+The package's Arrow kernels freeze a reused worker's heap when they
+start and its modules have grown (:func:`packaging.freeze_worker_heap`),
+so the full collection the worker daemon runs after every task skips
+the loaded modules.
 """
 
 __version__ = "0.1.0"

@@ -42,6 +42,8 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from page_segmentation_spark.packaging import freeze_worker_heap
+
 #: language marker words (counted as ' word ' substrings of the padded,
 #: lowered text — the n-gram heuristic's cheapest stable form).
 LANG_MARKERS = {
@@ -91,6 +93,7 @@ def per_document(
     schema = StructType([df.schema[c] for c in keep_cols] + out.fields)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        freeze_worker_heap()
         for batch in batches:
             rows = [fn(v) for v in batch.column(col).to_pylist()]
             kept = batch.select(keep_cols)

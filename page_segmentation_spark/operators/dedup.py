@@ -29,6 +29,7 @@ from page_segmentation_spark.functions.hashing import (
     h32,
     h32b,
 )
+from page_segmentation_spark.packaging import freeze_worker_heap
 
 
 def normalized(text: Column) -> Column:
@@ -530,6 +531,7 @@ def _gram_hash_kernel(k: int):
 
         import pyarrow as pa
 
+        freeze_worker_heap()
         cache = _WHASH_CACHE
         for batch in batches:
             id_type = batch.schema.field("id").type

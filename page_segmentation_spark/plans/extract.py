@@ -35,6 +35,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from page_segmentation_spark.config import ExtractSettings
 from page_segmentation_spark.functions.text import per_document
 from page_segmentation_spark.oracle import classify_document, render, resolve
+from page_segmentation_spark.packaging import freeze_worker_heap
 
 _NODE_TYPES = [
     ("node_idx", pa.int64()),
@@ -124,6 +125,7 @@ def classified_nodes(
     names = _NODE_SCHEMA.names
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        freeze_worker_heap()
         for batch in batches:
             cols: dict = {c: [] for c in names}
             node_cols = [(k, cols[k]) for k, _ in _NODE_TYPES]

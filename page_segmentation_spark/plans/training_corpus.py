@@ -16,8 +16,11 @@ one in-process chain per page, and the gates ride the same boundary
 crossing); a rejected document never leaves the worker.  The
 fingerprint is a projection fused into the same stage; the only
 shuffle in the whole corpus build is the dedup hash partition on the
-16-hex-char fingerprint (narrow rows: fingerprints + urls), and it sees
-only surviving documents.
+16-hex-char fingerprint, and it sees only surviving documents.  Its
+rows are not narrow: the map side runs ``partial_min`` over
+``struct(url, lang, n_tokens, clean_text)`` per fingerprint, so the
+exchange carries one whole candidate row, clean text included, per
+(fingerprint, map partition).
 
 Determinism: gate decisions are made on unrounded values; the dedup
 keeps the lexicographic-min url per fingerprint (same total order in

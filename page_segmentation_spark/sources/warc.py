@@ -46,6 +46,8 @@ from typing import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
+from page_segmentation_spark.packaging import freeze_worker_heap
+
 #: WARC record types we materialize as rows (warcinfo/request/metadata
 #: records are crawl bookkeeping, not page content).
 _CONTENT_TYPES = ("response", "resource", "conversion")
@@ -245,6 +247,8 @@ def _bounded_batches(recs: Iterator[dict]) -> Iterator[pa.RecordBatch]:
 def _record_batch_kernel(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
+    freeze_worker_heap()
+
     def recs() -> Iterator[dict]:
         for batch in batches:
             d = batch.to_pydict()
@@ -330,6 +334,8 @@ def shard_ranges(
 def _ranged_kernel(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
+    freeze_worker_heap()
+
     def recs() -> Iterator[dict]:
         for batch in batches:
             d = batch.to_pydict()

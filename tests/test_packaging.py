@@ -1,8 +1,11 @@
 """ship_package guards (page_segmentation_spark/packaging.py)."""
 
+import gc
 import os
 import shutil
 import zipfile
+
+import pytest
 
 from page_segmentation_spark import packaging
 
@@ -110,14 +113,14 @@ def pin_mtime(path, st):
 """
 
 
-def _run_python(code, *args):
+def _run_python(code, *args, **env):
     import subprocess
     import sys
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(packaging.__file__)))
     out = subprocess.run(
         [sys.executable, "-c", code, *args],
-        env=dict(os.environ, PYTHONPATH=root),
+        env=dict(os.environ, PYTHONPATH=root, **env),
         capture_output=True, text=True, timeout=120,
     )
     assert out.returncode == 0, out.stderr
@@ -201,3 +204,135 @@ def test_zip_guard_installed_in_spark_worker(spark):
     assert len(rows) == 8 and all(r["guarded"] for r in rows)
     # the driver (this process) keeps the stdlib method
     assert not hasattr(zipimport.zipimporter.invalidate_caches, "_pss_stat_guarded")
+
+
+# Heap freeze: interpreter-level checks fake the worker scope in their
+# own interpreter; the Spark checks read the collector from inside the
+# workers of the test session, where the driver keeps normal GC.
+_FREEZE_PRELUDE = """
+import gc, importlib.machinery, os, sys, weakref
+from page_segmentation_spark import packaging
+
+gc.disable()  # only explicit collections below
+
+def run_as(name):
+    sys.modules["__main__"].__spec__ = importlib.machinery.ModuleSpec(name, None)
+
+def cycle():
+    c = type("Cycle", (), {})()
+    c.me = c
+    return weakref.ref(c)  # c is cyclic garbage from here on
+"""
+
+
+@pytest.mark.parametrize("reuse, mains", [
+    ("", (None, "pyspark.worker", "pyspark.daemon")),  # "" = unset
+    ("1", (None, "pyspark.worker")),
+])
+def test_heap_freeze_does_nothing_outside_reused_daemon_workers(reuse, mains):
+    _run_python(_FREEZE_PRELUDE + f"""
+ref = cycle()
+for main in {mains!r}:
+    if main:
+        run_as(main)
+    assert packaging.freeze_worker_heap() is False, main
+    assert gc.get_freeze_count() == 0 and ref() is not None
+""", SPARK_REUSE_WORKER=reuse)
+
+
+def test_heap_freeze_collects_first_and_refreezes_on_new_modules():
+    _run_python(_FREEZE_PRELUDE + """
+run_as("pyspark.daemon")
+ref = cycle()
+assert packaging.freeze_worker_heap() is True
+assert ref() is None  # collected, not frozen
+frozen = gc.get_freeze_count()
+assert frozen > 0
+assert packaging.freeze_worker_heap() is False  # no new module
+assert gc.get_freeze_count() == frozen
+assert "colorsys" not in sys.modules
+import colorsys
+assert packaging.freeze_worker_heap() is True
+assert gc.get_freeze_count() > frozen
+late = cycle()  # garbage made after the freeze is still collected
+gc.collect()
+assert late() is None
+""", SPARK_REUSE_WORKER="1")
+
+
+def _worker_rows(spark, fn, ddl, jobs=1, tasks=4):
+    """Rows of ``jobs`` runs of a ``per_document`` kernel over ``tasks``
+    one-row partitions."""
+    from page_segmentation_spark.functions.text import per_document
+
+    df = per_document(
+        spark.range(0, tasks, numPartitions=tasks), ["id"], "id", fn, ddl
+    )
+    return [r for _ in range(jobs) for r in df.collect()]
+
+
+def test_worker_heap_frozen_in_spark_worker(spark):
+    rows = _worker_rows(
+        spark,
+        lambda _: (gc.get_freeze_count(), len(gc.get_objects())),
+        "frozen long, tracked long",
+        jobs=2,
+    )
+    assert rows and all(r["frozen"] > 0 for r in rows)
+    assert all(r["tracked"] < 1000 for r in rows), rows
+    assert gc.get_freeze_count() == 0  # the driver keeps normal GC
+
+
+def test_worker_refreezes_only_after_a_task_loads_modules(spark):
+    def fn(_):
+        import importlib
+        import sys
+
+        from pyspark import TaskContext
+
+        fresh = "colorsys" not in sys.modules
+        importlib.import_module("colorsys")
+        return (os.getpid(), TaskContext.get().taskAttemptId(), fresh,
+                gc.get_freeze_count())
+
+    rows = _worker_rows(
+        spark, fn, "pid int, task long, fresh boolean, frozen long",
+        jobs=4, tasks=8,
+    )
+    per_worker = {}  # pid -> its task rows, in the order it ran them
+    for r in sorted(rows, key=lambda r: r["task"]):
+        per_worker.setdefault(r["pid"], []).append(r)
+    grew = same = 0
+    for seq in per_worker.values():
+        for a, b in zip(seq, seq[1:]):
+            if a["fresh"]:  # the next task freezes the new module
+                assert b["frozen"] > a["frozen"], seq
+                grew += 1
+            else:  # no new module: no freeze (frozen objects may be freed)
+                assert b["frozen"] <= a["frozen"], seq
+                same += 1
+    assert grew and same
+
+
+def test_worker_collects_cycles_made_after_the_freeze(spark):
+    def fn(_):
+        import weakref
+
+        from pyspark import TaskContext
+
+        task = TaskContext.get().taskAttemptId()
+        refs = packaging.__dict__.setdefault("_test_cycles", [])
+        earlier = [ref for t, ref in refs if t != task]
+        c = type("Cycle", (), {})()
+        c.me = c
+        refs.append((task, weakref.ref(c)))
+        return (os.getpid(), task, gc.get_freeze_count(),
+                len(earlier), sum(ref() is not None for ref in earlier))
+
+    rows = _worker_rows(
+        spark, fn, "pid int, task long, frozen long, earlier int, alive int",
+        jobs=3,
+    )
+    assert all(r["frozen"] > 0 for r in rows)
+    assert any(r["earlier"] for r in rows)  # a worker ran an earlier task
+    assert not any(r["alive"] for r in rows), rows
